@@ -4,9 +4,12 @@ import org.apache.spark.scheduler._
 import scala.collection.mutable
 
 /** Scratch measurement harness (guide §1): per-face cold/warm wall time,
-  * planning-vs-execution split, and a per-stage breakdown (duration,
-  * task count, shuffle bytes) from a SparkListener — the local-mode
-  * stand-in for the Stages tab. Not part of the driver contract. */
+  * planning-vs-execution split, Janino compiles (count from Spark's
+  * `CodegenMetrics`, milliseconds from `CodeGenerator.compileTime`), and a
+  * per-stage breakdown (duration, task count, shuffle bytes) from a
+  * SparkListener — the local-mode stand-in for the Stages tab. A warm run
+  * that compiles as much as its cold run is recompiling classes evicted
+  * from Spark's codegen cache. Not part of the driver contract. */
 object DebugProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
@@ -45,12 +48,21 @@ object DebugProfile {
             f"in=${m.inputMetrics.bytesRead / 1e6}%8.1fMB  ${s.name}")
         }
     }
+    // (Janino compiles, compile nanoseconds) so far in this JVM
+    def compiles(): (Long, Long) =
+      (org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+        org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime)
+    def janino(from: (Long, Long)): String = {
+      val (n, ns) = compiles()
+      f"janino=${n - from._1}%d compiles ${(ns - from._2) / 1e6}%.0fms"
+    }
     args.tail.foreach { name =>
       val fn = SparkEntry.queries(name)
       // cold run, with the planning cost isolated AND its own stage table
       // (per-JVM stored-layout builds happen here — invisible to the warm
       // table)
       stages.synchronized(stages.clear())
+      val c0 = compiles()
       val t0 = System.nanoTime()
       val dfCold = fn(spark, sfDir)
       val qe = dfCold.queryExecution
@@ -60,15 +72,16 @@ object DebugProfile {
       val tCold = System.nanoTime()
       spark.catalog.clearCache()
       println(f"== $name cold=${(tCold - t0) / 1e9}%.2f " +
-        f"(plan=${(tPlanned - t0) / 1e9}%.2f)")
+        f"(plan=${(tPlanned - t0) / 1e9}%.2f) ${janino(c0)}")
       dumpStages("cold")
       // warm run with stage capture
       stages.synchronized(stages.clear())
+      val c1 = compiles()
       val t1 = System.nanoTime()
       fn(spark, sfDir).queryExecution.toRdd.count()
       val tWarm = System.nanoTime()
       spark.catalog.clearCache()
-      println(f"== $name warm=${(tWarm - t1) / 1e9}%.2f")
+      println(f"== $name warm=${(tWarm - t1) / 1e9}%.2f ${janino(c1)}")
       dumpStages("warm")
     }
     spark.stop()

@@ -168,28 +168,30 @@ object StateEconomics {
       Seq("Year"), Seq(col("Fed_Min_Wage")))
 
     // ---- PK gates — the reference's 11 checks (dag1.py:71-79 + call sites)
-    val tables = Map(
-      "table_location" -> Quality.checkPrimaryKey(location, Seq("GeoFIPS"), "table_location"),
-      "table_Unemployment" -> Quality.checkPrimaryKey(unemployment, Seq("GeoFIPS", "Year"), "table_Unemployment"),
-      "table_HouseholdIncome2021" -> Quality.checkPrimaryKey(income, Seq("GeoFIPS"), "table_HouseholdIncome2021"),
-      "table_gdp" -> Quality.checkPrimaryKey(gdp, Seq("GeoFIPS", "Year", "Industry_Code"), "table_gdp"),
-      "table_industry" -> Quality.checkPrimaryKey(industry, Seq("Industry_Code"), "table_industry"),
-      "table_school_expense_type" -> Quality.checkPrimaryKey(expenseType, Seq("School_Expense_Type_Id"), "table_school_expense_type"),
-      "table_school_expenses" -> Quality.checkPrimaryKey(schoolExpensesDeduped, Seq("Year", "GeoFIPS", "School_Expense_Type_Id"), "table_school_expenses"),
-      "table_state_min_wage" -> Quality.checkPrimaryKey(stateMinWageDeduped, Seq("Year", "GeoFIPS"), "table_state_min_wage"),
-      "table_inflation" -> Quality.checkPrimaryKey(inflation, Seq("Year"), "table_inflation"),
-      "table_CPI" -> Quality.checkPrimaryKey(cpi, Seq("Year"), "table_CPI"),
-      "table_fed_min_wage" -> Quality.checkPrimaryKey(fedMinWage, Seq("Year"), "table_fed_min_wage"))
-
-    // ---- row-level expectations beyond the reference's PK-only checks:
-    // domain gates a production load would refuse to ship without. Run
-    // AFTER the PK gates so reference-parity violations surface first.
-    Quality.expectAll(fedMinWage, Seq(
-      "year_in_range" -> col("Year").between(1900, 2100),
-      "wage_non_negative" -> (col("Fed_Min_Wage") >= 0)))
-    Quality.expectAll(location, Seq(
-      "geofips_non_negative" -> (col("GeoFIPS") >= 0)))
-    tables
+    val tables = Seq(
+      ("table_location", location, Seq("GeoFIPS")),
+      ("table_Unemployment", unemployment, Seq("GeoFIPS", "Year")),
+      ("table_HouseholdIncome2021", income, Seq("GeoFIPS")),
+      ("table_gdp", gdp, Seq("GeoFIPS", "Year", "Industry_Code")),
+      ("table_industry", industry, Seq("Industry_Code")),
+      ("table_school_expense_type", expenseType, Seq("School_Expense_Type_Id")),
+      ("table_school_expenses", schoolExpensesDeduped, Seq("Year", "GeoFIPS", "School_Expense_Type_Id")),
+      ("table_state_min_wage", stateMinWageDeduped, Seq("Year", "GeoFIPS")),
+      ("table_inflation", inflation, Seq("Year")),
+      ("table_CPI", cpi, Seq("Year")),
+      ("table_fed_min_wage", fedMinWage, Seq("Year")))
+    // One job gates all 11 (their lineages run concurrently and reuse the
+    // broadcasts they share). The row-level expectations beyond the reference's PK-only
+    // checks — domain gates a production load would refuse to ship without
+    // — are counted in the same job and judged after the PK gates, so
+    // reference-parity violations surface first.
+    Quality.checkPrimaryKeys(tables, expectations = Seq(
+      "table_fed_min_wage" -> Seq(
+        "year_in_range" -> col("Year").between(1900, 2100),
+        "wage_non_negative" -> (col("Fed_Min_Wage") >= 0)),
+      "table_location" -> Seq(
+        "geofips_non_negative" -> (col("GeoFIPS") >= 0))))
+    tables.map { case (name, df, _) => name -> df }.toMap
   }
 
   /** SURVEY §1.5 incremental variant: table_fed_min_wage derived from a

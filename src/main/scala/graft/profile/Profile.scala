@@ -9,8 +9,9 @@ import org.apache.spark.sql.types._
   * (finalprojectpandasprofiling.py:50-54).
   *
   * Design for scale: ALL per-column statistics are computed in a single
-  * `agg(...)` pass (one job, one scan; partial aggregation map-side), never
-  * a per-column loop of actions. Distinct counts use HLL++
+  * aggregation pass (one job, one scan; partial aggregation map-side), never
+  * a per-column loop of actions — over the table unpivoted into fixed-schema
+  * cells, so every table shares its compiled code. Distinct counts use HLL++
   * (`approx_count_distinct`) by default, with an exact variant for small
   * dims / oracle checks. Quantiles use `percentile_approx` (GK sketch) by
   * default with an exact variant. Correlations are a second single pass over
@@ -85,11 +86,42 @@ object Profile {
     false
   }
 
-  /** PR1–PR5 (counts, missing, distinct, moments incl. skewness/kurtosis,
-    * quantiles, duplicates) in one aggregation pass, histograms in a second
-    * (bucket bounds need pass-1 min/max), PR6 correlations in a third.
-    * `exact` switches the distinct/quantile sketches to exact computation
-    * (use for tests / oracle parity; default approximate for 100 TB runs). */
+  /** The table unpivoted into fixed-schema cells: one row per (row, column
+    * of `cols`) with the column index `ci` and one field per slot. Only this
+    * projection depends on the table: the code generated for the operators
+    * above it is compiled once and reused by every table. */
+  private def cells(df: DataFrame, cols: Seq[StructField])
+                   (slots: (String, StructField => Column)*): DataFrame =
+    df.select(inline(array(cols.zipWithIndex.map { case (f, i) =>
+      struct(lit(i).as("ci") +: slots.map { case (n, slot) => slot(f).as(n) }: _*)
+    }: _*)))
+
+  // The value as rendered in the frequent-value tables.
+  private def strSlot(f: StructField): Column = q(f.name).cast(StringType)
+
+  // A numeric column's value as a double (null for other types).
+  private def numSlot(f: StructField): Column =
+    if (isNumeric(f.dataType)) q(f.name).cast(DoubleType) else lit(null).cast(DoubleType)
+
+  // The distinct-count key: one slot per primitive type, the value in its
+  // type's slot. A struct hashes as the fold of its fields and a null field
+  // leaves the hash as is, so HLL sees the bare column's hash (widening an
+  // int to long would change the estimates). Floats and the types without a
+  // slot (keyed by their rendering) keep exact counts; HLL may differ.
+  private def keySlot(f: StructField): Column = {
+    val c = q(f.name)
+    val (slot, v) = f.dataType match {
+      case ByteType | ShortType | IntegerType => "i" -> c.cast(IntegerType)
+      case DateType                           => "i" -> unix_date(c)
+      case LongType                           => "l" -> c
+      case TimestampType                      => "l" -> unix_micros(c)
+      case FloatType | DoubleType             => "d" -> c.cast(DoubleType)
+      case _                                  => "s" -> c.cast(StringType)
+    }
+    when(c.isNotNull, struct(Seq("i" -> IntegerType, "l" -> LongType, "d" -> DoubleType,
+      "s" -> StringType).map { case (n, t) => (if (n == slot) v else lit(null).cast(t)).as(n) }: _*))
+  }
+
   /** Per-column top-N frequent values (the ydata-profiling "Most frequent
     * values" block, finalprojectpandasprofiling.py:50) as a DISTRIBUTED
     * frame: (col_name, value, cnt, rank), rank 1 = most frequent, ties
@@ -97,8 +129,8 @@ object Profile {
     * Values are stringified; nulls are excluded (missing is its own
     * statistic in [[profile]]).
     *
-    * Scale shape: one posexplode pass turns the table into (colIdx, value)
-    * cells, ONE exact groupBy count over (colIdx, value) — map-side
+    * Scale shape: the [[profile]] unpivot turns the table into (ci, value)
+    * cells, ONE exact groupBy count over (ci, value) — map-side
     * partials, the same shuffle a single-column value_counts would pay,
     * amortized over every column at once — then the bounded-heap
     * `topk_desc_str` aggregate reduces each column to N rows with map-side
@@ -106,21 +138,35 @@ object Profile {
     * partition, never the distinct-value set of a high-cardinality column. */
   def frequentValues(df: DataFrame, topN: Int = 5): DataFrame = {
     require(topN > 0, s"topN must be > 0, got $topN")
-    val fields = df.schema.fields
+    val fields = df.schema.fields.toSeq
     require(fields.nonEmpty, "frequentValues needs at least one column")
+    rankedValues(valuePass(cells(df, fields)("v" -> strSlot)
+      .filter(col("v").isNotNull), "topk_desc_str", topN), fields, "id")
+  }
+
+  private val HistBins = 10
+
+  /** The value pass over (ci, v) cells: ONE exact (ci, v) count, then per
+    * column the bounded top-N heap `heap` (`tk`) and the counts per bucket
+    * 1..[[HistBins]] (`h`) of `bucket`, a function of `v` (pruned if unused). */
+  private def valuePass(vcells: DataFrame, heap: String, topN: Int,
+                        bucket: Column = lit(null).cast(LongType)): DataFrame =
+    vcells
+      .groupBy(col("ci"), col("v"))
+      .agg(count(lit(1)).as("cnt"), max(bucket).as("b"))
+      .groupBy(col("ci"))
+      .agg(call_function(heap, col("cnt").cast(DoubleType), col("v"), lit(topN)).as("tk"),
+        array((1 to HistBins).map(b =>
+          sum(when(col("b") === b, col("cnt")).otherwise(0L))): _*).as("h"))
+
+  // (col_name, value, cnt, rank) rows of a value pass's heaps
+  private def rankedValues(pass: DataFrame, fields: Seq[StructField],
+                           valueField: String): DataFrame = {
     val nameMap = map(fields.zipWithIndex.flatMap { case (f, i) =>
       Seq(lit(i), lit(f.name)) }: _*)
-    df.select(posexplode(array(fields.map(f => q(f.name).cast(StringType)): _*))
-        .as(Seq("__ci", "__v")))
-      .filter(col("__v").isNotNull)
-      .groupBy(col("__ci"), col("__v"))
-      .agg(count(lit(1)).as("__cnt"))
-      .groupBy(col("__ci"))
-      .agg(call_function("topk_desc_str",
-        col("__cnt").cast(DoubleType), col("__v"), lit(topN)).as("__tk"))
-      .select(col("__ci"), posexplode(col("__tk")).as(Seq("__pos", "__e")))
-      .select(element_at(nameMap, col("__ci")).as("col_name"),
-        col("__e.id").as("value"),
+    pass.select(col("ci"), posexplode(col("tk")).as(Seq("__pos", "__e")))
+      .select(element_at(nameMap, col("ci")).as("col_name"),
+        col(s"__e.$valueField").as("value"),
         col("__e.score").cast(LongType).as("cnt"),
         (col("__pos") + 1).cast(IntegerType).as("rank"))
   }
@@ -129,8 +175,8 @@ object Profile {
     * (col_name, value double, cnt, rank), rank 1 = most frequent, ties
     * broken by value ascending in NUMERIC order — the string form breaks
     * ties in binary render order ("10" < "2"), which misorders a numeric
-    * report. Same scale shape (one posexplode cell pass, one exact
-    * (colIdx, value) count, then the bounded-heap `topk_desc_num`
+    * report. Same scale shape (the unpivot's cells, one exact
+    * (ci, value) count, then the bounded-heap `topk_desc_num`
     * aggregate — map-side partial heaps, ≤ N rows per column per
     * partition on the second shuffle). Nulls and NaNs are excluded
     * (missing is its own statistic in [[profile]]; a NaN frequent-value
@@ -138,23 +184,10 @@ object Profile {
     * least one numeric column. */
   def frequentValuesNumeric(df: DataFrame, topN: Int = 5): DataFrame = {
     require(topN > 0, s"topN must be > 0, got $topN")
-    val fields = df.schema.fields.filter(f => isNumeric(f.dataType))
+    val fields = df.schema.fields.toSeq.filter(f => isNumeric(f.dataType))
     require(fields.nonEmpty, "frequentValuesNumeric needs a numeric column")
-    val nameMap = map(fields.zipWithIndex.flatMap { case (f, i) =>
-      Seq(lit(i), lit(f.name)) }: _*)
-    df.select(posexplode(array(fields.map(f => q(f.name).cast(DoubleType)): _*))
-        .as(Seq("__ci", "__v")))
-      .filter(col("__v").isNotNull && !isnan(col("__v")))
-      .groupBy(col("__ci"), col("__v"))
-      .agg(count(lit(1)).as("__cnt"))
-      .groupBy(col("__ci"))
-      .agg(call_function("topk_desc_num",
-        col("__cnt").cast(DoubleType), col("__v"), lit(topN)).as("__tk"))
-      .select(col("__ci"), posexplode(col("__tk")).as(Seq("__pos", "__e")))
-      .select(element_at(nameMap, col("__ci")).as("col_name"),
-        col("__e.value").as("value"),
-        col("__e.score").cast(LongType).as("cnt"),
-        (col("__pos") + 1).cast(IntegerType).as("rank"))
+    rankedValues(valuePass(cells(df, fields)("v" -> numSlot)
+      .filter(col("v").isNotNull && !isnan(col("v"))), "topk_desc_num", topN), fields, "value")
   }
 
   /** The ydata report's "Duplicates" section — the top-N
@@ -197,7 +230,16 @@ object Profile {
       .limit(topN)
   }
 
-  /** `associations = true` adds the ydata report's OTHER correlation
+  /** PR1–PR5 (counts, missing, distinct, moments incl. skewness/kurtosis,
+    * quartiles, duplicates) in one aggregation pass, histograms and
+    * frequent values in a second ([[valuePass]]; bucket bounds need pass-1
+    * min/max), PR6 correlations in a third. The first two group [[cells]]
+    * by column index; only the row and distinct-row counts are a per-table
+    * aggregate, collected with pass 1.
+    * `exact` switches the distinct/quantile sketches to exact computation
+    * (use for tests / oracle parity; default approximate for 100 TB runs).
+    *
+    * `associations = true` adds the ydata report's OTHER correlation
     * tabs on top of PR6's one-pass Pearson: Spearman over numeric pairs
     * (≤ `maxAssocCols` numeric columns — each pair is its own
     * rank-and-aggregate job, so the pair count is bounded rather than
@@ -223,133 +265,80 @@ object Profile {
               maxAssocCols: Int = 8, sampleN: Int = 10,
               duplicatesN: Int = 10, phikTab: Boolean = true,
               interactionBins: Int = 6): TableProfile = {
-    val fields  = df.schema.fields
+    val fields  = df.schema.fields.toSeq
     val numeric = fields.filter(f => isNumeric(f.dataType)).map(_.name)
 
-    // NaN poisons mean/stddev/max (Spark sorts NaN greatest) where
-    // ydata-profiling skips it — normalize floating columns through
-    // nanToNull so statistics mean what the reference's reports mean.
-    def numc(f: StructField): Column =
-      if (isFloating(f.dataType)) graft.expr.Exprs.nanToNull(q(f.name)) else q(f.name)
-    def distinctAgg(c: String): Column =
-      if (exact) count_distinct(q(c)) else approx_count_distinct(q(c))
-    def pct(f: StructField, p: Double): Column =
-      if (exact) call_function("percentile", numc(f), lit(p)).cast(DoubleType)
-      else percentile_approx(numc(f), lit(p), lit(10000)).cast(DoubleType)
-    // the full-row distinct also honors `exact`: an exact distinct over
-    // every column is the single most expensive aggregate in the pass —
-    // precisely what approximate mode exists to avoid at scale
-    def rowDistinct: Column = {
-      val all = struct(fields.map(f => q(f.name)): _*)
-      if (exact) count_distinct(all) else approx_count_distinct(all)
-    }
+    // Pass 1 over the long form: per-column counts, distinct and moments,
+    // grouped by column index. NaN poisons mean/stddev/max (Spark sorts NaN
+    // greatest) where ydata-profiling skips it, so the numeric value goes
+    // through nanToNull; `count` and `distinct` still see NaN as a value.
+    // Non-numeric columns have no `x`, so their numeric statistics are null.
+    // The three quartiles are one sketch (equal aggregates are computed once).
+    val x = graft.expr.Exprs.nanToNull(col("x"))
+    val quartiles = array(lit(0.25), lit(0.5), lit(0.75))
+    val qs = if (exact) call_function("percentile", x, quartiles)
+             else percentile_approx(x, quartiles, lit(10000))
+    val cellStats = cells(df, fields)("k" -> keySlot, "x" -> numSlot)
+      .groupBy(col("ci"))
+      .agg(count(col("k")).as("count"),
+        (count(lit(1)) - count(col("k"))).as("missing"),
+        (if (exact) count_distinct(col("k")) else approx_count_distinct(col("k"))).as("distinct"),
+        avg(x).as("mean"), stddev(x).as("std"), min(x).as("min"), max(x).as("max"),
+        qs(0).as("p25"), qs(1).as("p50"), qs(2).as("p75"),
+        skewness(x).as("skew"), kurtosis(x).as("kurt"))
+    // the table's row count and distinct rows, as row ci = -1 of the same
+    // collect; the full-row distinct honors `exact` too: exact, it is the
+    // pass's most expensive aggregate — what approximate mode avoids
+    val all = struct(fields.map(f => q(f.name)): _*)
+    val rowStats = df.agg(count(lit(1)).as("count"),
+        (if (exact) count_distinct(all) else approx_count_distinct(all)).as("distinct"))
+      .select(lit(-1).as("ci"), col("count"), col("distinct"))
+    val stats = (if (fields.isEmpty) rowStats
+                 else cellStats.unionByName(rowStats, allowMissingColumns = true))
+      .collect().map(r => r.getInt(0) -> r).toMap
+    def getL(ci: Int, n: String): Long =
+      stats.get(ci).map(r => r.getAs[Long](n)).getOrElse(0L)
+    def getD(ci: Int, n: String): Option[Double] =
+      stats.get(ci).flatMap(r => Option(r.getAs[java.lang.Double](n))).map(_.doubleValue)
+    val rows = getL(-1, "count")
 
-    val aggs: Seq[Column] =
-      Seq(count(lit(1)).as("__rows"),
-          rowDistinct.as("__distinct_rows")) ++
-      fields.flatMap { f =>
-        val c = f.name
-        val base = Seq(
-          count(q(c)).as(s"$c::count"),
-          sum(when(q(c).isNull, 1L).otherwise(0L)).as(s"$c::missing"),
-          distinctAgg(c).as(s"$c::distinct"))
-        val nums =
-          if (isNumeric(f.dataType))
-            Seq(
-              avg(numc(f)).cast(DoubleType).as(s"$c::mean"),
-              stddev(numc(f)).cast(DoubleType).as(s"$c::std"),
-              min(numc(f)).cast(DoubleType).as(s"$c::min"),
-              max(numc(f)).cast(DoubleType).as(s"$c::max"),
-              pct(f, 0.25).as(s"$c::p25"),
-              pct(f, 0.5).as(s"$c::p50"),
-              pct(f, 0.75).as(s"$c::p75"),
-              skewness(numc(f)).cast(DoubleType).as(s"$c::skew"),
-              kurtosis(numc(f)).cast(DoubleType).as(s"$c::kurt"))
-          else Seq.empty
-        base ++ nums
-      }
-
-    val row: Row = df.agg(aggs.head, aggs.tail: _*).head()
-    def get(n: String): Any = row.get(row.fieldIndex(n))
-    def getL(n: String): Long = get(n) match {
-      case null     => 0L
-      case l: Long  => l
-      case i: Int   => i.toLong
-      case other    => other.toString.toLong
-    }
-    def getD(n: String): Option[Double] = get(n) match {
-      case null      => None
-      case d: Double => Some(d)
-      case other     => Some(other.toString.toDouble)
-    }
-
-    val rows = getL("__rows")
-
-    // Histograms need the min/max from pass 1 to place bucket bounds, so
-    // they are a SECOND single aggregation pass over all numeric columns at
-    // once (bins × columns conditional sums — still one job, one scan).
-    val histBins = 10
-    val histTargets = fields.collect {
-      case f if isNumeric(f.dataType)
-        && getD(s"${f.name}::min").isDefined
-        && getD(s"${f.name}::max").exists(_ > getD(s"${f.name}::min").get) =>
-        (f.name, getD(s"${f.name}::min").get, getD(s"${f.name}::max").get)
-    }.toSeq
-    val histograms: Map[String, Seq[Long]] =
-      if (histTargets.isEmpty) Map.empty
+    // Frequent values and histograms: ONE value pass (grouping by value
+    // needs a shuffle no agg() can absorb), after pass 1 because bucket
+    // bounds need its min/max. The bounds travel as array literals indexed
+    // by column, so the code is the same for every table; one row per column
+    // comes back. `topFrequent <= 0` leaves the frequent values out.
+    val histCols = fields.indices.filter(i =>
+      getD(i, "max").exists(hi => getD(i, "min").exists(_ < hi)))
+    val values: Map[Int, Row] =
+      if (fields.isEmpty || (topFrequent <= 0 && histCols.isEmpty)) Map.empty
       else {
-        // width_bucket sends x == hi to the overflow bucket bins+1; least()
-        // folds the max value into the last in-range bucket instead.
-        val fieldByName = fields.map(f => f.name -> f).toMap
-        val wb = df.select(histTargets.map { case (c, lo, hi) =>
-          // NaN-normalized like the stats pass; the x == hi overflow bin
-          // folds into the last in-range bucket with a NULL-PRESERVING
-          // cap — least() would resurrect null/NaN rows as bucket `bins`
-          // (Spark's least skips nulls) and inflate the tail
-          val raw = width_bucket(numc(fieldByName(c)).cast(DoubleType),
-            lit(lo), lit(hi), lit(histBins))
-          when(raw > histBins, lit(histBins.toLong)).otherwise(raw).as(s"$c::wb")
-        }: _*)
-        val hAggs = histTargets.flatMap { case (c, _, _) =>
-          (1 to histBins).map(b =>
-            sum(when(q(s"$c::wb") === b, 1L).otherwise(0L)).as(s"$c::h$b"))
-        }
-        val hRow = wb.agg(hAggs.head, hAggs.tail: _*).head()
-        histTargets.map { case (c, _, _) =>
-          c -> (1 to histBins).map(b => hRow.getLong(hRow.fieldIndex(s"$c::h$b"))).toSeq
-        }.toMap
+        def bound(n: String) = element_at(
+          typedlit(fields.indices.map(i => if (histCols.contains(i)) getD(i, n) else None)),
+          col("ci") + 1)
+        // width_bucket sends x == hi to the overflow bucket bins+1; it
+        // folds into the last in-range bucket (NaN cells are null here)
+        val raw = width_bucket(x, bound("min"), bound("max"), lit(HistBins))
+        valuePass(cells(df, fields)("v" -> strSlot, "x" -> numSlot)
+            .filter(col("v").isNotNull),
+          "topk_desc_str", topFrequent.max(1),
+          when(raw > HistBins, lit(HistBins.toLong)).otherwise(raw))
+          .collect().map(r => r.getInt(0) -> r).toMap
       }
+    def frequent(i: Int): Seq[(String, Long)] =
+      if (topFrequent <= 0) Seq.empty
+      else values.get(i).toSeq.flatMap(_.getSeq[Row](1))
+        .map(e => (e.getAs[String]("id"), e.getAs[Double]("score").toLong))
+    def histogram(i: Int): Seq[Long] =
+      values.get(i).filter(_ => histCols.contains(i)).fold(Seq.empty[Long])(_.getSeq[Long](2).toSeq)
 
-    // Frequent values: its own two-shuffle pass (groupBy value needs a
-    // shuffle no agg() can absorb); the collected result is bounded at
-    // columns × topFrequent rows. `topFrequent <= 0` disables.
-    val freq: Map[String, Seq[(String, Long)]] =
-      if (topFrequent <= 0) Map.empty
-      else frequentValues(df, topFrequent).collect()
-        .groupBy(_.getString(0))
-        .map { case (c, rs) =>
-          c -> rs.sortBy(_.getInt(3)).map(r => (r.getString(1), r.getLong(2))).toSeq
-        }
-
-    val profiles = fields.map { f =>
-      val c = f.name
-      val num = isNumeric(f.dataType)
-      ColumnProfile(
-        name = c, dataType = f.dataType.simpleString,
-        count = getL(s"$c::count"), missing = getL(s"$c::missing"),
-        distinct = getL(s"$c::distinct"),
-        mean = if (num) getD(s"$c::mean") else None,
-        stddev = if (num) getD(s"$c::std") else None,
-        min = if (num) getD(s"$c::min") else None,
-        max = if (num) getD(s"$c::max") else None,
-        p25 = if (num) getD(s"$c::p25") else None,
-        p50 = if (num) getD(s"$c::p50") else None,
-        p75 = if (num) getD(s"$c::p75") else None,
-        skewness = if (num) getD(s"$c::skew") else None,
-        kurtosis = if (num) getD(s"$c::kurt") else None,
-        histogram = histograms.getOrElse(c, Seq.empty),
-        frequent = freq.getOrElse(c, Seq.empty))
+    val profiles = fields.zipWithIndex.map { case (f, i) =>
+      def d(n: String) = getD(i, n)
+      ColumnProfile(f.name, f.dataType.simpleString,
+        getL(i, "count"), getL(i, "missing"), getL(i, "distinct"),
+        d("mean"), d("std"), d("min"), d("max"), d("p25"), d("p50"), d("p75"),
+        d("skew"), d("kurt"), histogram(i), frequent(i))
     }
+    val byName = profiles.map(p => p.name -> p).toMap
 
     // PR6 — pairwise correlations over numeric columns, one pass.
     // Zero-variance columns are EXCLUDED up front (pass 1 already
@@ -361,7 +350,7 @@ object Profile {
     // the shared one-pass agg, so the rare failure falls back to
     // per-pair corr with the offending pairs dropped (the pandas
     // NaN-drop convention), instead of crashing the whole profile.
-    val corrCols = numeric.filter(c => getD(s"$c::std").exists(_ > 0))
+    val corrCols = numeric.filter(c => byName(c).stddev.exists(_ > 0))
     val corrs: Map[(String, String), Double] =
       if (corrCols.length < 2) Map.empty
       else {
@@ -410,7 +399,7 @@ object Profile {
         // ([[spearmanSharedRanks]]); a pair touching a null-bearing
         // column keeps the per-pair pairwise-complete form, whose ranks
         // genuinely depend on the partner column's nulls.
-        val nullFree = numeric.toSeq.filter(c => getL(s"$c::missing") == 0L)
+        val nullFree = numeric.filter(c => byName(c).missing == 0L)
         val shared =
           if (nullFree.length >= 2) spearmanSharedRanks(df, nullFree)
           else Map.empty[(String, String), Double]
@@ -430,7 +419,7 @@ object Profile {
         shared ++ fallback
       }
     val lowCardString = fields.filter(f => f.dataType == StringType)
-      .map(_.name).filter(c => getL(s"$c::distinct") <= 25)
+      .map(_.name).filter(c => byName(c).distinct <= 25)
     val cramers =
       if (!associations || lowCardString.length < 2 ||
           lowCardString.length > maxAssocCols)
@@ -494,7 +483,7 @@ object Profile {
       if (!associations) Map.empty
       else {
         val cands = fields.map(_.name)
-          .filter(c => getL(s"$c::missing") > 0 && getL(s"$c::missing") < rows)
+          .filter(c => byName(c).missing > 0 && byName(c).missing < rows)
           .toSeq
         if (cands.length < 2 || cands.length > maxAssocCols) Map.empty
         else nullityPairs(df, cands).collect().toSeq
@@ -503,12 +492,12 @@ object Profile {
           .toMap
       }
     // interactions — 2-D histograms over the numeric columns WITH
-    // spread (histTargets measured them in pass 1); collected result
+    // spread (histCols measured them in pass 1); collected result
     // bounded by pairs × bins² cells
     val interactionsM: Map[(String, String), Seq[(Int, Int, Long)]] =
       if (!associations || interactionBins <= 0) Map.empty
       else {
-        val cands = histTargets.map(_._1)
+        val cands = histCols.map(fields(_).name)
         if (cands.length < 2 || cands.length > maxAssocCols) Map.empty
         else interactions(df, cands, interactionBins).collect().toSeq
           .groupBy(r => (r.getString(0), r.getString(1)))
@@ -548,7 +537,7 @@ object Profile {
     // profiles report the estimated count, no listing.
     val dupList: Seq[(Seq[String], Long)] =
       if (duplicatesN <= 0 || !exact ||
-          rows - getL("__distinct_rows") <= 0) Seq.empty
+          rows - getL(-1, "distinct") <= 0) Seq.empty
       else duplicateRowValues(df, duplicatesN)
         .select(fields.map(f => q(f.name).cast(StringType)).toSeq
           :+ col("n_dup"): _*)
@@ -556,7 +545,7 @@ object Profile {
         .map(r => (fields.indices.map(i =>
           if (r.isNullAt(i)) "null" else r.getString(i)),
           r.getLong(fields.length)))
-    TableProfile(table, rows, fields.length, rows - getL("__distinct_rows"),
+    TableProfile(table, rows, fields.length, rows - getL(-1, "distinct"),
       profiles, corrs, spearmans, cramers,
       if (sampleN <= 0) Seq.empty else fields.map(_.name).toSeq, sampled,
       dupList, phiks, nullityM, interactionsM)

@@ -9,10 +9,12 @@ import org.apache.spark.sql.functions._
   * `check_primary_key` (dag1.py:71-79), invoked on all 11 output tables
   * (dag1.py:91-92,121-123,145-146,172-175) and raising on violation.
   *
-  * Scale note: one aggregation job per check — null-count and dup-count are
-  * computed in a SINGLE pass (`groupBy(keys)` with a pre-aggregated null
-  * flag), so the gate costs one shuffle on the key columns, partial-agg'd
-  * map-side. No collect of data rows; only two scalar counters come back.
+  * Scale note: null-count and dup-count are computed in a SINGLE pass per
+  * table (`groupBy(keys)` with a pre-aggregated null flag), so a gate costs
+  * one shuffle on the key columns, partial-agg'd map-side. A batch of
+  * tables ([[Quality.checkPrimaryKeys]]) is gated by ONE job: the tables'
+  * key groups are unioned and reduced by one aggregation. No collect of
+  * data rows; only scalar counters come back.
   */
 final case class PrimaryKeyViolation(table: String, nullKeyRows: Long, duplicateRows: Long)
   extends RuntimeException(
@@ -43,35 +45,80 @@ object Quality {
   /** A3+A4+total row count in ONE aggregation job — the shape a gate-then-
     * report pipeline (a5) needs, so it never scans the table twice. */
   def keyStatsWithRows(df: DataFrame, keys: Seq[String]): (Long, Long, Long) = {
-    val anyNull = keys.map(col(_).isNull).reduce(_ || _)
-    // Nulls are counted separately and excluded from the dup grouping so a
-    // null key is reported once, not as both null and duplicate.
-    val stats = df
-      .withColumn("__nullkey", anyNull)
-      .groupBy(col("__nullkey") +: keys.map(col): _*)
-      .count()
-      .agg(
-        coalesce(sum(when(col("__nullkey"), col("count"))), lit(0L)).as("nulls"),
-        coalesce(sum(when(!col("__nullkey") && col("count") > 1, col("count") - 1)), lit(0L))
-          .as("dups"),
-        coalesce(sum(col("count")), lit(0L)).as("rows"))
-      .head()
+    val stats = keyGroups(df, keys).agg(keyStatAggs.head, keyStatAggs.tail: _*).head()
     (stats.getLong(0), stats.getLong(1), stats.getLong(2))
   }
 
+  // One row per distinct key of `df`: the any-key-null flag and the key's
+  // row count (the one shuffle on the key columns every gate pays), plus
+  // `extra` aggregates over the key's rows.
+  private def keyGroups(df: DataFrame, keys: Seq[String], extra: Column*): DataFrame =
+    df.groupBy(keys.map(col(_).isNull).reduce(_ || _).as("__nullkey") +: keys.map(col): _*)
+      .agg(count(lit(1)).as("count"), extra: _*)
+
+  // (nulls, dups, rows) over key groups. Nulls are counted separately and
+  // excluded from the dup count, so a null key is reported once, not as
+  // both null and duplicate.
+  private val keyStatAggs = Seq(
+    coalesce(sum(when(col("__nullkey"), col("count"))), lit(0L)).as("nulls"),
+    coalesce(sum(when(!col("__nullkey") && col("count") > 1, col("count") - 1)), lit(0L))
+      .as("dups"),
+    coalesce(sum(col("count")), lit(0L)).as("rows"))
+
   /** The gate predicate on precomputed stats — the ONE place the violation
-    * semantics live, shared by [[checkPrimaryKey]] and callers that already
+    * semantics live, shared by [[checkPrimaryKeys]] and callers that already
     * hold a [[keyStatsWithRows]] result (so gating costs no extra scan). */
   def gate(table: String, nulls: Long, dups: Long): Unit =
     if (nulls > 0 || dups > 0) throw PrimaryKeyViolation(table, nulls, dups)
 
   /** A5 — the gate: throws [[PrimaryKeyViolation]] if `keys` is not a valid
     * primary key of `df` (any null, or any duplicate). Returns `df` so it
-    * chains inside a pipeline. */
+    * chains inside a pipeline. The one-table call of [[checkPrimaryKeys]]. */
   def checkPrimaryKey(df: DataFrame, keys: Seq[String], table: String = "df"): DataFrame = {
-    val (nulls, dups) = keyStats(df, keys)
-    gate(table, nulls, dups)
+    checkPrimaryKeys(Seq((table, df, keys)))
     df
+  }
+
+  /** A5 over a batch of `(table, df, keys)` in ONE job: each table's key
+    * groups are unioned and reduced by one aggregation, so the tables'
+    * lineages are planned, scheduled and run together (exchanges and
+    * broadcasts they share are reused) instead of one gate after another.
+    * Violations are raised in declaration order: the first violating table
+    * throws, as a sequence of [[checkPrimaryKey]] calls would.
+    *
+    * `expectations` — `(table, named predicates)`, judged as [[expectAll]]
+    * judges them with nothing tolerated — are counted in the same key
+    * groups of the named (gated) table, and raised in their declaration
+    * order only after every key passed, so key violations surface first. */
+  def checkPrimaryKeys(tables: Seq[(String, DataFrame, Seq[String])],
+                       expectations: Seq[(String, Seq[(String, Column)])] = Seq.empty)
+      : Unit = {
+    require(tables.nonEmpty, "checkPrimaryKeys needs at least one table")
+    val names = tables.map(_._1)
+    require(expectations.map(_._1).distinct.size == expectations.size,
+      "one expectation set per table")
+    require(expectations.forall(e => names.contains(e._1)),
+      s"expectations must name gated tables: ${expectations.map(_._1).diff(names).mkString(", ")}")
+    // expectation j of a table is column e<j> of its key groups (0 when the
+    // table has fewer), so every table's groups share one schema
+    val width = expectations.map(_._2.size).maxOption.getOrElse(0)
+    val es = (0 until width).map(j => s"e$j")
+    val groups = tables.zipWithIndex.map { case ((name, df, keys), i) =>
+      val preds = expectations.find(_._1 == name).toSeq.flatMap(_._2).map(_._2)
+      keyGroups(df, keys, es.indices.map(j =>
+          preds.lift(j).fold(lit(0L))(violations).as(es(j))): _*)
+        .select(lit(i).as("i") +: (Seq("__nullkey", "count") ++ es).map(col): _*)
+    }
+    val stats = groups.reduce(_.unionAll(_))
+      .groupBy(col("i"))
+      .agg(keyStatAggs.head, keyStatAggs.tail ++ es.map(e => sum(col(e)).as(e)): _*)
+      .collect().map(r => r.getInt(0) -> r).toMap
+    // a table with no rows has no key groups: every count is 0
+    def stat(i: Int, n: String): Long = stats.get(i).fold(0L)(_.getAs[Long](n))
+    names.indices.foreach(i => gate(names(i), stat(i, "nulls"), stat(i, "dups")))
+    expectations.foreach { case (t, checks) =>
+      raiseFailed(checks.zip(es).map { case ((name, _), e) => name -> stat(names.indexOf(t), e) }, 0L)
+    }
   }
 
   /** Schema assertion: exact column-name/type match (order-insensitive). */
@@ -92,9 +139,7 @@ object Quality {
     require(checks.nonEmpty, "expectationReport needs at least one check")
     require(checks.map(_._1).distinct.size == checks.size,
       s"duplicate expectation names: ${checks.map(_._1).diff(checks.map(_._1).distinct).mkString(",")}")
-    val aggs = checks.map { case (name, pred) =>
-      coalesce(sum(when(pred.isNull || !pred, 1L).otherwise(0L)), lit(0L)).as(name)
-    }
+    val aggs = checks.map { case (name, pred) => violations(pred).as(name) }
     val row = df.agg(aggs.head, aggs.tail: _*).head() // one scalar row back
     val spark = df.sparkSession
     import spark.implicits._
@@ -106,13 +151,21 @@ object Quality {
     * above `tolerated`); returns `df` so it chains like checkPrimaryKey. */
   def expectAll(df: DataFrame, checks: Seq[(String, org.apache.spark.sql.Column)],
                 tolerated: Long = 0L): DataFrame = {
-    val failed = expectationReport(df, checks)
-      .filter(col("n_violations") > tolerated)
-      .collect().map(r => s"${r.getString(0)}=${r.getLong(1)}")
+    val report = expectationReport(df, checks).collect()
+    raiseFailed(report.map(r => (r.getString(0), r.getLong(1))).toSeq, tolerated)
+    df
+  }
+
+  // rows where the predicate is false OR null
+  private def violations(pred: Column): Column =
+    coalesce(sum(when(pred.isNull || !pred, 1L).otherwise(0L)), lit(0L))
+
+  // throws listing every expectation whose violations exceed `tolerated`
+  private def raiseFailed(counts: Seq[(String, Long)], tolerated: Long): Unit = {
+    val failed = counts.collect { case (name, n) if n > tolerated => s"$name=$n" }
     if (failed.nonEmpty)
       throw new IllegalStateException(
         s"expectations failed (violations > $tolerated): ${failed.mkString(", ")}")
-    df
   }
 
   /** Percentile gate: keep rows whose `scoreCol` is at or above the

@@ -45,7 +45,9 @@ object Parallel {
   /** [[all]] with a disposal hook: when any thunk fails, `onAbandoned`
     * runs on each sibling result that COMPLETED (so e.g. its persisted
     * frame can be unpersisted) before the first failure's cause is
-    * rethrown. Never invoked on the success path. */
+    * rethrown. Never invoked on the success path. An interrupt of the
+    * waiting caller cancels the pending siblings and rethrows the
+    * `InterruptedException` with the caller's interrupt flag set. */
   def allCleaning[A](session: SparkSession, onAbandoned: A => Unit)
                     (thunks: (() => A)*): Seq[A] = {
     val futs = thunks.map { th =>
@@ -61,10 +63,19 @@ object Parallel {
       catch {
         case e: java.util.concurrent.ExecutionException =>
           Left(e.getCause)
+        case e: InterruptedException =>
+          // the caller was interrupted: keep its flag, stop waiting and
+          // cancel the siblings still pending (interrupting their Spark
+          // waits), so the interrupt surfaces now, not after every job
+          Thread.currentThread().interrupt()
+          futs.foreach(_.cancel(true))
+          Left(e)
         case e: Throwable => Left(e)
       }
     }
-    results.collectFirst { case Left(t) => t } match {
+    // an interrupt outranks a sibling's failure: it is why the wait ended
+    results.collectFirst { case Left(t: InterruptedException) => t }
+      .orElse(results.collectFirst { case Left(t) => t }) match {
       case Some(first) =>
         results.foreach {
           case Right(a) =>

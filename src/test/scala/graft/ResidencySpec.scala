@@ -30,4 +30,15 @@ class ResidencySpec extends SparkSpec {
     assert((cachedIds -- before).isEmpty,
       s"cache baseline not restored; leaked ids ${cachedIds -- before}")
   }
+
+  test("profile() leaves no persisted RDD behind (long-form passes + association tabs)") {
+    import spark.implicits._
+    val d = (0 until 60).map(i => (i % 7, (i * 13 % 11).toDouble, s"c${i % 3}", s"t${i % 4}"))
+      .toDF("a", "b", "s", "t")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val p = graft.profile.Profile.profile(d, "t", exact = true)
+    graft.profile.Profile.profile(d, "t")
+    assert(p.rows === 60 && p.phik.nonEmpty)
+    assertReleased(spark.sparkContext.getPersistentRDDs.keySet.toSet -- before)
+  }
 }

@@ -700,4 +700,89 @@ class ProfileSpec extends SparkSpec {
     val created = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
     assertReleased(created)
   }
+
+  test("long-form profile ≡ the per-column wide definitions on mixed types " +
+      "(exact mode); approximate distinct/quartiles hash as the bare column") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types._
+    val id = col("id")
+    val mixed = spark.range(0, 240).select(
+      when(id % 23 === 0, lit(null)).otherwise((id % 17).cast(IntegerType)).as("i"),
+      (id * 1000003L % 9973).as("l"),
+      when(id % 31 === 0, lit(Double.NaN)).when(id % 37 === 0, lit(-0.0))
+        .when(id % 41 === 0, lit(0.0)).otherwise((id % 13) * 0.25 - 1).as("d"),
+      ((id % 11) * 1.5).cast(DecimalType(38, 18)).as("dec"),
+      date_add(lit("2020-01-01").cast(DateType), (id % 9).cast(IntegerType)).as("dt"),
+      when(id % 5 === 0, lit(null)).otherwise(concat(lit("v"), (id % 7).cast(StringType))).as("s"),
+      lit(null).cast(DoubleType).as("nothing"),
+      lit(7).as("const"))
+    val p = Profile.profile(mixed, "mixed", exact = true, associations = false, sampleN = 0)
+    assert(p.rows === 240)
+    assert(p.duplicateRows === 240 - mixed.distinct().count())
+    def relClose(a: Option[Double], b: Option[Double]): Boolean = (a, b) match {
+      case (Some(x), Some(y)) => x == y || math.abs(x - y) <= 1e-9 * math.max(math.abs(x), math.abs(y))
+      case (None, None) => true
+      case _ => false
+    }
+    def opt(r: org.apache.spark.sql.Row, i: Int): Option[Double] =
+      if (r.isNullAt(i)) None else Some(r.getDouble(i))
+    mixed.schema.fields.foreach { f =>
+      val c = col(f.name)
+      val cp = p.profiles.find(_.name == f.name).get
+      val base = mixed.agg(count(c), sum(when(c.isNull, 1L).otherwise(0L)), count_distinct(c)).head()
+      assert((cp.count, cp.missing, cp.distinct) ===
+        ((base.getLong(0), base.getLong(1), base.getLong(2))), f.name)
+      // frequent values: stringified, count desc then value asc, nulls out
+      val freq = mixed.select(c.cast(StringType).as("v")).filter(col("v").isNotNull)
+        .groupBy("v").count().orderBy(col("count").desc, col("v").asc).limit(5)
+        .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+      assert(cp.frequent === freq, f.name)
+      if (f.dataType.isInstanceOf[NumericType]) {
+        // the wide pass's definitions: floating columns NaN-normalized,
+        // every other numeric type aggregated in its own type
+        val xc = if (f.dataType == DoubleType) graft.expr.Exprs.nanToNull(c) else c
+        val x = xc.cast(DoubleType)
+        val r = mixed.select(Seq(avg(c), stddev(c), skewness(c), kurtosis(c), min(xc), max(xc)) ++
+          Seq(0.25, 0.5, 0.75).map(q => call_function("percentile", xc, lit(q))) map
+          (_.cast(DoubleType)): _*).head()
+        if (f.dataType != DoubleType) {   // NaN-free: the bare column's moments
+          assert(relClose(cp.mean, opt(r, 0)), s"${f.name} mean")
+          assert(relClose(cp.stddev, opt(r, 1)), s"${f.name} std")
+          assert(relClose(cp.skewness, opt(r, 2)), s"${f.name} skew")
+          assert(relClose(cp.kurtosis, opt(r, 3)), s"${f.name} kurt")
+        }
+        assert((cp.min, cp.max) === ((opt(r, 4), opt(r, 5))), f.name)
+        assert(Seq(cp.p25, cp.p50, cp.p75) === Seq(opt(r, 6), opt(r, 7), opt(r, 8)), f.name)
+        val hist = (cp.min, cp.max) match {
+          case (Some(lo), Some(hi)) if hi > lo =>
+            val wb = width_bucket(x, lit(lo), lit(hi), lit(10))
+            val counts = mixed.select(when(wb > 10, lit(10L)).otherwise(wb).as("b"))
+              .filter(col("b").isNotNull).groupBy("b").count()
+              .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+            (1 to 10).map(b => counts.getOrElse(b.toLong, 0L))
+          case _ => Seq.empty
+        }
+        assert(cp.histogram === hist, f.name)
+      } else assert(cp.mean.isEmpty && cp.histogram.isEmpty, f.name)
+    }
+    // NaN-bearing double: moments over the non-NaN values
+    val dp = p.profiles.find(_.name == "d").get
+    val dr = mixed.filter(!isnan(col("d"))).agg(avg("d"), stddev("d"), skewness("d"), kurtosis("d")).head()
+    assert(relClose(dp.mean, opt(dr, 0)) && relClose(dp.stddev, opt(dr, 1)) &&
+      relClose(dp.skewness, opt(dr, 2)) && relClose(dp.kurtosis, opt(dr, 3)))
+    // approximate mode: HLL sees the same hashes as over the bare column
+    // (an int widened to long would not), and the shared quartile sketch
+    // answers as three separate ones
+    val ap = Profile.profile(mixed, "mixed", associations = false, sampleN = 0)
+    Seq("i", "l", "d", "dt", "s", "nothing", "const").foreach { n =>
+      assert(ap.profiles.find(_.name == n).get.distinct ===
+        mixed.agg(approx_count_distinct(col(n))).head().getLong(0), n)
+    }
+    Seq("i", "l").foreach { n =>
+      val r = mixed.select(Seq(0.25, 0.5, 0.75).map(q =>
+        percentile_approx(col(n), lit(q), lit(10000)).cast(DoubleType)): _*).head()
+      val cp = ap.profiles.find(_.name == n).get
+      assert(Seq(cp.p25, cp.p50, cp.p75) === Seq(opt(r, 0), opt(r, 1), opt(r, 2)), n)
+    }
+  }
 }

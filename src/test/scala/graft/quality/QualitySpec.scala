@@ -28,6 +28,62 @@ class QualitySpec extends SparkSpec {
     assert(e.nullKeyRows === 2 && e.duplicateRows === 0)
   }
 
+  test("A5 checkPrimaryKeys: one batch, first violating table in declaration order throws") {
+    val clean = Seq((1, "a"), (2, "b")).toDF("k", "v")
+    val nullKeys = Seq((Some(1), Some(1)), (None, Some(2)), (Some(3), None), (Some(3), Some(3)))
+      .toDF("k1", "k2")
+    val dupKeys = Seq((1, "a"), (1, "b"), (1, "c"), (2, "d")).toDF("k", "v")
+    val batch = Seq(("clean", clean, Seq("k")), ("nulls", nullKeys, Seq("k1", "k2")),
+      ("dups", dupKeys, Seq("k")))
+    val e = intercept[PrimaryKeyViolation](Quality.checkPrimaryKeys(batch))
+    // its counts are the single-table keyStats of the same frame
+    assert(e.table === "nulls")
+    assert((e.nullKeyRows, e.duplicateRows) === Quality.keyStats(nullKeys, Seq("k1", "k2")))
+    // reorder: the dup-key table now comes first and is the one thrown
+    val e2 = intercept[PrimaryKeyViolation](Quality.checkPrimaryKeys(batch.reverse))
+    assert(e2.table === "dups")
+    assert((e2.nullKeyRows, e2.duplicateRows) === Quality.keyStats(dupKeys, Seq("k")))
+    assert((e2.nullKeyRows, e2.duplicateRows) === ((0L, 2L)))
+    // an empty table and a clean one pass
+    Quality.checkPrimaryKeys(Seq(("clean", clean, Seq("k")),
+      ("empty", clean.filter(col("k") < 0), Seq("k"))))
+  }
+
+  test("A5 checkPrimaryKeys: expectations ride the gate, judged after every key") {
+    val t = Seq((Some(1), 5.0), (Some(2), -1.0), (Some(3), 2.0)).toDF("k", "v")
+    val u = Seq((1, "x"), (2, "y")).toDF("k", "s")
+    val checks = Seq("t" -> Seq("k_small" -> (col("k") < 100), "v_positive" -> (col("v") > 0)))
+    val e = intercept[IllegalStateException] {
+      Quality.checkPrimaryKeys(Seq(("u", u, Seq("k")), ("t", t, Seq("k"))), checks)
+    }
+    assert(e.getMessage.contains("v_positive=1") && !e.getMessage.contains("k_small"))
+    // the same violations expectAll reports
+    val single = intercept[IllegalStateException](Quality.expectAll(t, checks.head._2))
+    assert(e.getMessage === single.getMessage)
+    // a key violation anywhere in the batch surfaces before the expectation
+    val dupU = u.union(u)
+    val pk = intercept[PrimaryKeyViolation] {
+      Quality.checkPrimaryKeys(Seq(("t", t, Seq("k")), ("u", dupU, Seq("k"))), checks)
+    }
+    assert(pk.table === "u" && pk.duplicateRows === 2)
+    intercept[IllegalArgumentException] {
+      Quality.checkPrimaryKeys(Seq(("u", u, Seq("k"))), checks)  // t is not gated
+    }
+  }
+
+  test("robustStats: hand-computed lower median and MAD with duplicates; " +
+      "nulls skipped, an all-null group absent") {
+    val rows = Seq(
+      ("a", Some(1.0)), ("a", Some(2.0)), ("a", Some(2.0)), ("a", Some(3.0)), ("a", Some(10.0)),
+      ("b", Some(4.0)), ("b", Some(4.0)), ("b", Some(6.0)), ("b", Some(8.0)), ("b", None),
+      ("c", None), ("c", None))
+    val got = Quality.robustStats(rows.toDF("g", "v"), "g", "v")
+      .as[(String, Long, Double, Double)].collect().sortBy(_._1).toSeq
+    // a: sorted 1,2,2,3,10 → lower median 2; |v-2| = 1,0,0,1,8 → 0,0,1,1,8 → MAD 1
+    // b: sorted 4,4,6,8 (null skipped) → lower median 4; |v-4| = 0,0,2,4 → MAD 0
+    assert(got === Seq(("a", 5L, 2.0, 1.0), ("b", 4L, 4.0, 0.0)))
+  }
+
   test("expectationReport: false AND null both violate; expectAll gates") {
     val df = Seq((Some(1), 5.0), (Some(2), -1.0), (None, 2.0)).toDF("k", "v")
     val rep = Quality.expectationReport(df, Seq(
