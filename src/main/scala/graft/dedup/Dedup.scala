@@ -5,8 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.text.TextOps
-import graft.util.Caching.{materializeAndRelease, releasingOnFailure}
-import graft.util.Guards
+import graft.util.{Guards, Residency}
 
 /** Deduplication family for training-data pipelines: exact, MinHash+LSH,
   * SimHash, n-gram Jaccard, embedding-cosine near-dup.
@@ -273,7 +272,7 @@ object Dedup {
                       rowsPerBand: Int = 4, shingleK: Int = 5,
                       minBandMatches: Int = 1,
                       maxBucketOccupancy: Long = 100000L,
-                      ophDensified: Boolean = false): DataFrame = {
+                      ophDensified: Boolean = false): DataFrame = Residency.eager { s =>
     require(threshold > 0, "minHashNearDups requires a positive threshold")
     val numHashes = bands * rowsPerBand
 
@@ -290,13 +289,12 @@ object Dedup {
     // it costs about one shuffle write and saves up to five re-explosions.
     // Cache residency is BOUNDED: both corpus-sized persists are released
     // at the end of this method, after a single materializing action over
-    // the pair result (see the tail comment) — repeated invocations in a
+    // the pair result (the eager scope's tail) — repeated invocations in a
     // long-lived session (QueryService, benches with reps) never stack
     // corpus-sized cached frames.
-    val shingles = shingleRows(df, textCol, idCol, shingleK)
+    val shingles = s.persist(shingleRows(df, textCol, idCol, shingleK)
       .select(col("id"), xxhash64(col("sh")).as("h"))
-      .dropDuplicates("id", "h")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .dropDuplicates("id", "h"))
 
     // `min` over seeded re-hashes is idempotent under duplicate shingles,
     // so signatures over the distinct frame equal minHashSignatures over
@@ -316,7 +314,7 @@ object Dedup {
     // so threshold-1.0 recall stays guaranteed (dd_oph_verified pins it
     // against the identical-set oracle in SQL).
     val aggs = (0 until numHashes).map(i => min(xxhash64(col("h"), lit(i))))
-    val sigN = (if (!ophDensified)
+    val sigN = s.persist(if (!ophDensified)
         shingles.groupBy("id")
           .agg(array(aggs: _*).as("sig"), count(lit(1)).as("n"))
       else {
@@ -331,19 +329,15 @@ object Dedup {
               b => coalesce(try_element_at(col("m"), b), lit(Long.MaxValue))).as("sig"),
             col("n")), numHashes)
       })
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     val banded = sigN
       .select(col("id"), bandBuckets(col("sig"), bands, rowsPerBand).as("bb"))
       .select(col("id"), col("bb.band"), col("bb.bucket"))
 
     // Fail-fast occupancy gate, run while sigN is cached (the aggregate
-    // reads the cached narrow rows, so it costs one cheap job); a guard
-    // throw must release the corpus-sized persists it aborts in front of.
-    releasingOnFailure(shingles, sigN) {
-      Guards.checkBucketOccupancy(banded, Seq("band", "bucket"), maxBucketOccupancy,
-        "minHashNearDups", "run exactDedup first to collapse identical documents")
-    }
+    // reads the cached narrow rows, so it costs one cheap job).
+    Guards.checkBucketOccupancy(banded, Seq("band", "bucket"), maxBucketOccupancy,
+      "minHashNearDups", "run exactDedup first to collapse identical documents")
 
     val a = banded.alias("a")
     val b = banded.alias("b")
@@ -379,11 +373,10 @@ object Dedup {
     // Pairs with ZERO common shingles drop out of the kernel's inner
     // join — sound because they have jaccard 0 < threshold.
     val sizes = sigN.select(col("id"), col("n"))
-    val pairs = pairJaccardHashed(candidates, shingles, shingles,
+    pairJaccardHashed(candidates, shingles, shingles,
         "id_a", "id_b", Some(sizes), Some(sizes))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
-    materializeAndRelease(pairs, shingles, sigN)
   }
 
   /** Incremental near-dup detection — the daily-crawl shape for MINHASH,
@@ -423,11 +416,11 @@ object Dedup {
                           textCol: String, idCol: String,
                           threshold: Double = 0.7, bands: Int = 16,
                           rowsPerBand: Int = 4, shingleK: Int = 5,
-                          maxBucketOccupancy: Long = 100000L): DataFrame = {
+                          maxBucketOccupancy: Long = 100000L): DataFrame = Residency.eager { s =>
     require(threshold > 0, "incrementalNearDups requires a positive threshold")
     val numHashes = bands * rowsPerBand
-    val deltaSigs = minHashSignatures(newBatch, textCol, idCol, numHashes, shingleK)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val deltaSigs = s.persist(
+      minHashSignatures(newBatch, textCol, idCol, numHashes, shingleK))
 
     def banded(sigs: DataFrame, id: String): DataFrame =
       sigs.select(col("id").as(id), col("sig").as(s"__sig_$id"),
@@ -439,32 +432,27 @@ object Dedup {
     // computed index (rather than a stored table scan) doesn't pay its
     // pipeline twice — measured 13.7 → ~8 s on an in-query-built index at
     // sf0.1. Released with the rest (bounded residency).
-    val refSel = refSignatures.select(col("id"), col("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val refSel = s.persist(refSignatures.select(col("id"), col("sig")))
     val d = banded(deltaSigs, "new_id")
     val r = banded(refSel, "ref_id")
-    releasingOnFailure(deltaSigs, refSel) {
-      // width probe runs on the PERSISTED projection (its partial
-      // evaluation lands in the cache the guard and join then reuse —
-      // probing the raw index frame would evaluate the caller's pipeline
-      // one extra time), inside the releasing block so a mismatch throw
-      // frees both persists
-      requireIndexWidth(refSel, numHashes, "incrementalNearDups")
-      Guards.checkBucketOccupancy(d, Seq("band", "bucket"), maxBucketOccupancy,
-        "incrementalNearDups", "exact-dedup the batch first to collapse identical documents")
-      // the REFERENCE side can be degenerate too (an index over a corpus
-      // of identical docs collapses every band to one bucket and the
-      // delta × ref join blows up per matching delta doc) — same gate
-      Guards.checkBucketOccupancy(r, Seq("band", "bucket"), maxBucketOccupancy,
-        "incrementalNearDups(reference index)",
-        "exact-dedup the reference corpus before building its signature index")
-    }
+    // width probe runs on the PERSISTED projection (its partial
+    // evaluation lands in the cache the guard and join then reuse —
+    // probing the raw index frame would evaluate the caller's pipeline
+    // one extra time)
+    requireIndexWidth(refSel, numHashes, "incrementalNearDups")
+    Guards.checkBucketOccupancy(d, Seq("band", "bucket"), maxBucketOccupancy,
+      "incrementalNearDups", "exact-dedup the batch first to collapse identical documents")
+    // the REFERENCE side can be degenerate too (an index over a corpus
+    // of identical docs collapses every band to one bucket and the
+    // delta × ref join blows up per matching delta doc) — same gate
+    Guards.checkBucketOccupancy(r, Seq("band", "bucket"), maxBucketOccupancy,
+      "incrementalNearDups(reference index)",
+      "exact-dedup the reference corpus before building its signature index")
     // delta × reference bucket join only — delta-internal pairs are
     // minHashNearDups' job on the batch itself
     val agree = size(filter(zip_with(col("__sig_new_id"), col("__sig_ref_id"),
       (x, y) => x === y), e => e))
-    val pairs = d.join(r,
-        d("band") === r("band") && d("bucket") === r("bucket"))
+    d.join(r, d("band") === r("band") && d("bucket") === r("bucket"))
       .select(col("new_id"), col("ref_id"), col("__sig_new_id"), col("__sig_ref_id"))
       .dropDuplicates("new_id", "ref_id")
       .withColumn("est_jaccard",
@@ -473,7 +461,6 @@ object Dedup {
       // a "near-dup pair" — same exclusion as the streaming form
       .filter(col("est_jaccard") >= threshold && col("new_id") =!= col("ref_id"))
       .select(col("new_id"), col("ref_id"), col("est_jaccard"))
-    materializeAndRelease(pairs, deltaSigs, refSel)
   }
 
   /** Per-ROW MinHash signature as a pure expression — no aggregation, no
@@ -566,11 +553,8 @@ object Dedup {
     * longs per row) under the same caller-unpersist contract as the pair
     * generators. */
   def duplicateClusters(nodes: DataFrame, idCol: String, pairs: DataFrame,
-                        maxIterations: Int = 25): DataFrame = {
+                        maxIterations: Int = 25): DataFrame = Residency.eager { s =>
     val spark = nodes.sparkSession
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    def truncated(df: DataFrame): DataFrame =
-      spark.createDataFrame(df.rdd, df.schema)
     // sum over an EMPTY frame is null — coalesce to 0 so an empty corpus
     // converges immediately (first-round sum == previous sum) instead of
     // throwing NPE from BigDecimal.compareTo
@@ -589,25 +573,20 @@ object Dedup {
     // by the session's shuffle partitions so a production session keeps
     // its configured width. Partitioning never changes the min/sum
     // aggregates' results.
-    val edges0 = pairs.select(col("id_a").cast(LongType).as("a"),
+    val edges0 = s.persist(pairs.select(col("id_a").cast(LongType).as("a"),
         col("id_b").cast(LongType).as("b"))
       .union(pairs.select(col("id_b").cast(LongType).as("a"),
-        col("id_a").cast(LongType).as("b")))
-      .persist(lvl)
-    val nEdges = releasingOnFailure(edges0) { edges0.count() }
+        col("id_a").cast(LongType).as("b"))))
+    val nEdges = edges0.count()
     val loopParts = math.max(1L, math.min(
       spark.sessionState.conf.numShufflePartitions.toLong,
       (nEdges + 1999999L) / 2000000L)).toInt
-    val edges = releasingOnFailure(edges0) {
-      val r = edges0.repartition(loopParts).persist(lvl)
-      r.count()
-      r
-    }
-    edges0.unpersist(blocking = true)
-    var labels = truncated(nodes.select(col(idCol).cast(LongType).as("id"),
+    val edges = s.persist(edges0.repartition(loopParts))
+    edges.count()
+    s.release(edges0)
+    var labels = s.persist(s.truncate(nodes.select(col(idCol).cast(LongType).as("id"),
         col(idCol).cast(LongType).as("cluster"))
-        .repartition(loopParts))
-      .persist(lvl)
+        .repartition(loopParts)))
     // AQE is scoped OFF for the propagation loop: each round is a small
     // fixed-shape DAG executed many times, and AQE's stage-by-stage
     // adaptive scheduling adds a blocking job round-trip per exchange —
@@ -638,9 +617,6 @@ object Dedup {
       spark.sessionState.conf.numShufflePartitions.toString)
     spark.conf.set(aqeKey, "false")
     spark.conf.set(sufKey, loopParts.toString)
-    // NOT releasingOnFailure: `labels` is reassigned per iteration, so the
-    // failure path must release the CURRENT frame, not the one captured at
-    // entry.
     try {
       var prevSum = clusterSum(labels)
       var it = 0
@@ -669,24 +645,17 @@ object Dedup {
         val msgs = edges.select(col("a").as("dst"), col("b").as("src"))
           .union(labels.select(col("id").as("dst"), col("id").as("src")))
           .union(labels.select(col("id").as("dst"), col("cluster").as("src")))
-        val next = truncated(
+        val next = s.persist(s.truncate(
             msgs.join(labels, col("src") === col("id"))
               .groupBy(col("dst")).agg(min(col("cluster")).as("cluster"))
-              .select(col("dst").as("id"), col("cluster")))
-          .persist(lvl)
-        val s = releasingOnFailure(next) { clusterSum(next) }
-        labels.unpersist(blocking = true)
+              .select(col("dst").as("id"), col("cluster"))))
+        val sum = clusterSum(next)
+        s.release(labels)
         labels = next
-        converged = s.compareTo(prevSum) == 0
-        prevSum = s
+        converged = sum.compareTo(prevSum) == 0
+        prevSum = sum
       }
-      edges.unpersist(blocking = true)
       labels
-    } catch {
-      case t: Throwable =>
-        edges.unpersist(blocking = true)
-        labels.unpersist(blocking = true)
-        throw t
     } finally {
       spark.conf.set(aqeKey, aqeWas)
       spark.conf.set(sufKey, sufWas)
@@ -736,22 +705,15 @@ object Dedup {
   def verifyPairsJaccard(pairs: DataFrame, docs: DataFrame,
                          textCol: String, idCol: String,
                          aCol: String = "id_a", bCol: String = "id_b",
-                         shingleK: Int = 5): DataFrame = {
+                         shingleK: Int = 5): DataFrame = Residency.eager { s =>
     // single-corpus form: ONE shingle set over the union of referenced
     // ids serves both pair sides (the sided form would scan and explode
     // the same corpus twice — shingling is the dominant cost here)
-    val p = pairs.select(col(aCol), col(bCol)).dropDuplicates(aCol, bCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    releasingOnFailure(p) {
-      val ids = p.select(col(aCol).as("id"))
-        .union(p.select(col(bCol).as("id")))
-      val set = hashedShingleSet(docs, textCol, idCol, shingleK, ids)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      releasingOnFailure(set) {
-        materializeAndRelease(
-          pairJaccardHashed(p, set, set, aCol, bCol), p, set)
-      }
-    }
+    val p = s.persist(pairs.select(col(aCol), col(bCol)).dropDuplicates(aCol, bCol))
+    val ids = p.select(col(aCol).as("id"))
+      .union(p.select(col(bCol).as("id")))
+    val set = s.persist(hashedShingleSet(docs, textCol, idCol, shingleK, ids))
+    pairJaccardHashed(p, set, set, aCol, bCol)
   }
 
   /** [[verifyPairsJaccard]] with DISTINCT corpora per pair side — the
@@ -763,27 +725,16 @@ object Dedup {
                               bDocs: DataFrame, textCol: String,
                               idCol: String, aCol: String = "id_a",
                               bCol: String = "id_b",
-                              shingleK: Int = 5): DataFrame = {
-    // releasingOnFailure nesting: an eager analysis error while
-    // CONSTRUCTING a later frame (e.g. bDocs missing idCol) must not
-    // leak the persists already registered — materializeAndRelease's
-    // finally only covers the tail action
-    val p = pairs.select(col(aCol), col(bCol)).dropDuplicates(aCol, bCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    releasingOnFailure(p) {
-      val aSet = hashedShingleSet(aDocs, textCol, idCol, shingleK,
-          p.select(col(aCol).as("id")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      releasingOnFailure(aSet) {
-        val bSet = hashedShingleSet(bDocs, textCol, idCol, shingleK,
-            p.select(col(bCol).as("id")))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        releasingOnFailure(bSet) {
-          materializeAndRelease(
-            pairJaccardHashed(p, aSet, bSet, aCol, bCol), p, aSet, bSet)
-        }
-      }
-    }
+                              shingleK: Int = 5): DataFrame = Residency.eager { s =>
+    // an eager analysis error while CONSTRUCTING a later frame (e.g. bDocs
+    // missing idCol) leaves through the scope, which releases the persists
+    // already registered
+    val p = s.persist(pairs.select(col(aCol), col(bCol)).dropDuplicates(aCol, bCol))
+    val aSet = s.persist(hashedShingleSet(aDocs, textCol, idCol, shingleK,
+      p.select(col(aCol).as("id"))))
+    val bSet = s.persist(hashedShingleSet(bDocs, textCol, idCol, shingleK,
+      p.select(col(bCol).as("id"))))
+    pairJaccardHashed(p, aSet, bSet, aCol, bCol)
   }
 
   /** Distinct (id, xxhash64(shingle)) rows of the docs `ids` references —
@@ -864,15 +815,14 @@ object Dedup {
     * back persisted and repeat callers should `unpersist()` it. */
   def consecutiveTokenJaccardPairs(df: DataFrame, textCol: String,
                                    idCol: String,
-                                   threshold: Double): DataFrame = {
+                                   threshold: Double): DataFrame = Residency.eager { s =>
     require(threshold > 0, "consecutiveTokenJaccardPairs needs a positive threshold")
-    val toks = df.select(col(idCol).cast(LongType).as("doc_id"),
-        explode(array_distinct(TextOps.tokens(col(textCol)))).as("w"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val toks = s.persist(df.select(col(idCol).cast(LongType).as("doc_id"),
+        explode(array_distinct(TextOps.tokens(col(textCol)))).as("w")))
     val sizes = toks.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val sa = toks.select(col("doc_id").as("id_a"), col("w"))
     val sb = toks.select((col("doc_id") - 1).as("id_a"), col("w"))
-    val pairs = sa.join(sb, Seq("id_a", "w"))
+    sa.join(sb, Seq("id_a", "w"))
       .groupBy("id_a").agg(count(lit(1)).as("i"))
       .join(sizes.select(col("doc_id").as("id_a"), col("n").as("na")), "id_a")
       .join(sizes.select((col("doc_id") - 1).as("id_a"), col("n").as("nb")), "id_a")
@@ -881,7 +831,6 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), (col("id_a") + 1).as("id_b"),
         col("jaccard"))
-    materializeAndRelease(pairs, toks)
   }
 
   /** Word-n-gram-set Jaccard for every consecutive id pair INCLUDING
@@ -899,15 +848,14 @@ object Dedup {
     * released before return, the pair-sized result comes back
     * persisted. */
   def consecutiveNgramJaccard(df: DataFrame, textCol: String, idCol: String,
-                              n: Int): DataFrame = {
+                              n: Int): DataFrame = Residency.eager { s =>
     require(n > 0, s"n must be positive, got $n")
-    val grams = df
+    val grams = s.persist(df
       .select(col(idCol).cast(LongType).as("doc_id"),
         TextOps.tokens(col(textCol)).as("__ts"))
       .select(col("doc_id"),
         explode(array_distinct(
-          TextOps.wordNgramsFromTokens(col("__ts"), n))).as("g"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          TextOps.wordNgramsFromTokens(col("__ts"), n))).as("g")))
     val sizes = grams.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val spine = df.select(col(idCol).cast(LongType).as("id_a"))
       .join(df.select((col(idCol).cast(LongType) - 1).as("id_a")), Seq("id_a"))
@@ -917,13 +865,12 @@ object Dedup {
     // sizes inner-join is total: every doc has ≥ 1 gram (empty text yields
     // the [""] gram — the wordNgrams short-doc convention), which also
     // bounds the denominator ≥ 1
-    val out = spine.join(inter, Seq("id_a"), "left")
+    spine.join(inter, Seq("id_a"), "left")
       .join(sizes.select(col("doc_id").as("id_a"), col("n").as("na")), "id_a")
       .join(sizes.select((col("doc_id") - 1).as("id_a"), col("n").as("nb")), "id_a")
       .select(col("id_a"), (col("id_a") + 1).as("id_b"),
         round(coalesce(col("i"), lit(0L)).cast(DoubleType) /
           (col("na") + col("nb") - coalesce(col("i"), lit(0L))), 6).as("jaccard"))
-    materializeAndRelease(out, grams)
   }
 
   /** Benchmark decontamination: per-document count of distinct word
@@ -986,26 +933,22 @@ object Dedup {
     * (compared unrounded, the engine convention); zero-overlap pairs are
     * absent by construction. EAGER + caller-unpersist family contract. */
   def containmentPairs(docs: DataFrame, textCol: String, idCol: String,
-                       n: Int = 5, threshold: Double = 0.5): DataFrame = {
+                       n: Int = 5, threshold: Double = 0.5): DataFrame = Residency.eager { s =>
     require(n > 0, s"need n > 0, got $n")
     require(threshold > 0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
-    val grams = distinctWordGrams(docs.filter(col(textCol).isNotNull),
-        textCol, n, col(idCol).as("id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.util.Caching.releasingOnFailure(grams) {
-      val sizes = grams.groupBy("id").agg(count(lit(1)).as("n_a"))
-      val out = grams.select(col("id").as("id_a"), col("g"))
-        .join(grams.select(col("id").as("id_b"), col("g")), Seq("g"))
-        .filter(col("id_a") =!= col("id_b"))
-        .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
-        .join(sizes.withColumnRenamed("id", "id_a"), Seq("id_a"))
-        .filter(col("inter").cast(DoubleType) / col("n_a") >= threshold)
-        .select(col("id_a"), col("id_b"), col("n_a"), col("inter"),
-          round(col("inter").cast(DoubleType) / col("n_a"), 6)
-            .as("containment"))
-      graft.util.Caching.materializeAndRelease(out, grams)
-    }
+    val grams = s.persist(distinctWordGrams(docs.filter(col(textCol).isNotNull),
+        textCol, n, col(idCol).as("id")))
+    val sizes = grams.groupBy("id").agg(count(lit(1)).as("n_a"))
+    grams.select(col("id").as("id_a"), col("g"))
+      .join(grams.select(col("id").as("id_b"), col("g")), Seq("g"))
+      .filter(col("id_a") =!= col("id_b"))
+      .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
+      .join(sizes.withColumnRenamed("id", "id_a"), Seq("id_a"))
+      .filter(col("inter").cast(DoubleType) / col("n_a") >= threshold)
+      .select(col("id_a"), col("id_b"), col("n_a"), col("inter"),
+        round(col("inter").cast(DoubleType) / col("n_a"), 6)
+          .as("containment"))
   }
 
   def contaminationOverlap(docs: DataFrame, textCol: String, idCol: String,
@@ -1287,25 +1230,22 @@ object Dedup {
     * back persisted. */
   def signatureNearDups(signatures: DataFrame, maxDist: Int,
                         maxBucketOccupancy: Long, opName: String,
-                        remedy: String): DataFrame = {
+                        remedy: String): DataFrame = Residency.eager { s =>
     // Persisted: the block self-join below consumes `sigs` on both sides,
     // which without the persist evaluates the signature pipeline (and the
     // corpus scan under it) twice — same finding as the minHashNearDups
     // accumulator test. One narrow (id, sig) row per doc.
-    val sigs = signatures.select(col("id"), col("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sigs = s.persist(signatures.select(col("id"), col("sig")))
     val blocked = sigs.select(col("id"), col("sig"),
       explode(array((0 until 4).map(b =>
         struct(lit(b).as("blk"),
           shiftright(col("sig"), b * 16).bitwiseAND(0xFFFFL).as("key"))): _*))
         .as("bb"))
       .select(col("id"), col("sig"), col("bb.blk"), col("bb.key"))
-    releasingOnFailure(sigs) {
-      Guards.checkBucketOccupancy(blocked, Seq("blk", "key"), maxBucketOccupancy,
-        opName, remedy)
-    }
+    Guards.checkBucketOccupancy(blocked, Seq("blk", "key"), maxBucketOccupancy,
+      opName, remedy)
     val a = blocked.alias("a"); val b = blocked.alias("b")
-    val pairs = a.join(b, col("a.blk") === col("b.blk") && col("a.key") === col("b.key") &&
+    a.join(b, col("a.blk") === col("b.blk") && col("a.key") === col("b.key") &&
         col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
         hammingDistance(col("a.sig"), col("b.sig")).as("hamming"))
@@ -1314,7 +1254,6 @@ object Dedup {
       // only near pairs instead of every block collision.
       .filter(col("hamming") <= maxDist)
       .dropDuplicates("id_a", "id_b")
-    materializeAndRelease(pairs, sigs)
   }
 
   /** Winnowing fingerprints (Schleimer, Wilkerson & Aiken 2003,
@@ -1392,21 +1331,17 @@ object Dedup {
   def winnowProbe(indexFps: DataFrame, newBatch: DataFrame, textCol: String,
                   idCol: String, shingleK: Int = 5, window: Int = 4,
                   minShared: Int = 2,
-                  maxBucketOccupancy: Long = 100000L): DataFrame = {
+                  maxBucketOccupancy: Long = 100000L): DataFrame = Residency.eager { s =>
     require(minShared > 0, s"minShared must be > 0, got $minShared")
-    val nf = winnowSelected(newBatch, textCol, idCol, shingleK, window)
-      .select(col("id").as("new_id"), col("sel.h").as("fp")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    releasingOnFailure(nf) {
-      Guards.checkBucketOccupancy(nf, Seq("fp"), maxBucketOccupancy,
-        "winnowProbe", "run exactDedup on the batch first")
-    }
+    val nf = s.persist(winnowSelected(newBatch, textCol, idCol, shingleK, window)
+      .select(col("id").as("new_id"), col("sel.h").as("fp")).distinct())
+    Guards.checkBucketOccupancy(nf, Seq("fp"), maxBucketOccupancy,
+      "winnowProbe", "run exactDedup on the batch first")
     val idx = indexFps.select(col("id").as("ref_id"), col("fp"))
       .dropDuplicates("ref_id", "fp")
-    val pairs = nf.join(idx, Seq("fp"))
+    nf.join(idx, Seq("fp"))
       .groupBy("new_id", "ref_id").agg(count(lit(1)).as("shared"))
       .filter(col("shared") >= minShared)
-    materializeAndRelease(pairs, nf)
   }
 
   /** Near-dup pairs by SHARED winnowing fingerprints: documents whose
@@ -1424,21 +1359,17 @@ object Dedup {
     * fingerprint blankets everything. */
   def winnowNearDups(df: DataFrame, textCol: String, idCol: String,
                      shingleK: Int = 5, window: Int = 4, minShared: Int = 2,
-                     maxBucketOccupancy: Long = 100000L): DataFrame = {
+                     maxBucketOccupancy: Long = 100000L): DataFrame = Residency.eager { s =>
     require(minShared > 0, s"minShared must be > 0, got $minShared")
-    val fps = winnowSelected(df, textCol, idCol, shingleK, window)
-      .select(col("id"), col("sel.h").as("fp")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    releasingOnFailure(fps) {
-      Guards.checkBucketOccupancy(fps, Seq("fp"), maxBucketOccupancy,
-        "winnowNearDups",
-        "run exactDedup first to collapse identical documents")
-    }
+    val fps = s.persist(winnowSelected(df, textCol, idCol, shingleK, window)
+      .select(col("id"), col("sel.h").as("fp")).distinct())
+    Guards.checkBucketOccupancy(fps, Seq("fp"), maxBucketOccupancy,
+      "winnowNearDups",
+      "run exactDedup first to collapse identical documents")
     val a = fps.alias("a"); val b = fps.alias("b")
-    val pairs = a.join(b, col("a.fp") === col("b.fp") && col("a.id") < col("b.id"))
+    a.join(b, col("a.fp") === col("b.fp") && col("a.id") < col("b.id"))
       .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .agg(count(lit(1)).as("shared"))
       .filter(col("shared") >= minShared)
-    materializeAndRelease(pairs, fps)
   }
 }

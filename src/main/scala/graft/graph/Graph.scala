@@ -3,6 +3,7 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
+import graft.util.Residency
 
 /** Graph centrality over edge-list DataFrames — the link-authority
   * signals a training-data pipeline ranks sources and curates crawl
@@ -318,7 +319,7 @@ object Graph {
     * loud argument error otherwise. */
   def hitsInt(edges: DataFrame, srcCol: String, dstCol: String,
               iterations: Int = 3, scale: Long = 1000000000L,
-              reliableCheckpoint: Boolean = false): DataFrame = {
+              reliableCheckpoint: Boolean = false): DataFrame = Residency.eager { s =>
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(scale > 0, s"scale must be > 0, got $scale")
     require(!reliableCheckpoint ||
@@ -326,25 +327,22 @@ object Graph {
       "reliableCheckpoint = true needs a checkpoint directory: call " +
         "spark.sparkContext.setCheckpointDir(<reliable storage path>) first")
 
-    import org.apache.spark.storage.StorageLevel
-    val e = edges
+    val e = s.persist(edges
       .select(col(srcCol).cast(LongType).as("src"),
         col(dstCol).cast(LongType).as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull &&
         col("src") =!= col("dst"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     // The a-step joins on src, the h-step on dst — keep ONE extra cached
     // copy per join key (guide §2.4: establish the partitioning once)
     // so neither half-step re-shuffles the edge frame; only the
     // node-sized score frames move per half-step. Edge-frame copies are
     // narrow (two longs) — two cached copies cost less than one
     // re-shuffle per half-step across 2·iterations half-steps.
-    val eBySrc = e.repartition(col("src")).persist(StorageLevel.MEMORY_AND_DISK)
-    val eByDst = e.repartition(col("dst")).persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val eBySrc = s.persist(e.repartition(col("src")))
+    val eByDst = s.persist(e.repartition(col("dst")))
+    val nodes = s.persist(e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct())
 
     // greatest(max, 1) keeps the divisor's integer ops on non-negative
     // operands — Spark DIV truncates while DuckDB // floors, and they
@@ -367,41 +365,36 @@ object Graph {
       // the two reads and release immediately (measured: the double
       // compute was ~40% of the face's executor time; results unchanged,
       // the downscale reads the same rows either way).
-      val s = scores.persist(StorageLevel.MEMORY_AND_DISK)
-      val mx = s.agg(greatest(max(col(c)), lit(1L)).as("__mx"))
-      val out = s.crossJoin(broadcast(mx))
+      val cached = s.persist(scores)
+      val mx = cached.agg(greatest(max(col(c)), lit(1L)).as("__mx"))
+      val out = Residency.pin(cached.crossJoin(broadcast(mx))
         .select(col("node"),
-          expr(s"$c DIV (1L + (__mx - 1L) DIV ${scale}L)").as(c))
-      try {
-        if (reliableCheckpoint) out.checkpoint(eager = true)
-        else out.localCheckpoint(true)
-      } finally s.unpersist(blocking = true)
+          expr(s"$c DIV (1L + (__mx - 1L) DIV ${scale}L)").as(c)), reliableCheckpoint)
+      s.release(cached)
+      out
     }
 
-    graft.util.Caching.releasingOnFailure(e, eBySrc, eByDst, nodes) {
-      var hubs = nodes.withColumn("hub", lit(scale))
-      // reassigned from the a-step before any read (iterations >= 1) —
-      // the initializer only gives the var a well-typed starting value
-      var auths = nodes.withColumn("authority", lit(0L))
-      for (_ <- 1 to iterations) {
-        val aRaw = eBySrc.join(hubs.withColumnRenamed("node", "src"), Seq("src"))
-          .groupBy(col("dst").as("node")).agg(sum(col("hub")).as("authority"))
-        auths = renorm(
-          nodes.join(aRaw, Seq("node"), "left")
-            .select(col("node"),
-              coalesce(col("authority"), lit(0L)).as("authority")),
-          "authority")
-        val hRaw = eByDst.join(auths.withColumnRenamed("node", "dst"), Seq("dst"))
-          .groupBy(col("src").as("node")).agg(sum(col("authority")).as("hub"))
-        hubs = renorm(
-          nodes.join(hRaw, Seq("node"), "left")
-            .select(col("node"), coalesce(col("hub"), lit(0L)).as("hub")),
-          "hub")
-      }
-      val out = auths.join(hubs, Seq("node"))
-        .select(col("node"), col("authority"), col("hub"))
-      graft.util.Caching.materializeAndRelease(out, e, eBySrc, eByDst, nodes)
+    var hubs = nodes.withColumn("hub", lit(scale))
+    // reassigned from the a-step before any read (iterations >= 1) —
+    // the initializer only gives the var a well-typed starting value
+    var auths = nodes.withColumn("authority", lit(0L))
+    for (_ <- 1 to iterations) {
+      val aRaw = eBySrc.join(hubs.withColumnRenamed("node", "src"), Seq("src"))
+        .groupBy(col("dst").as("node")).agg(sum(col("hub")).as("authority"))
+      auths = renorm(
+        nodes.join(aRaw, Seq("node"), "left")
+          .select(col("node"),
+            coalesce(col("authority"), lit(0L)).as("authority")),
+        "authority")
+      val hRaw = eByDst.join(auths.withColumnRenamed("node", "dst"), Seq("dst"))
+        .groupBy(col("src").as("node")).agg(sum(col("authority")).as("hub"))
+      hubs = renorm(
+        nodes.join(hRaw, Seq("node"), "left")
+          .select(col("node"), coalesce(col("hub"), lit(0L)).as("hub")),
+        "hub")
     }
+    auths.join(hubs, Seq("node"))
+      .select(col("node"), col("authority"), col("hub"))
   }
 
   /** The unrolled ANSI-SQL replay of [[pageRankInt]] — the oracle text
@@ -526,8 +519,8 @@ object Graph {
     *
     * Directionality of the input is ignored (edges are canonicalized
     * u < v and deduplicated); self-loops drop. */
-  def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
+  def triangleCounts(edges: DataFrame, srcCol: String,
+                     dstCol: String): DataFrame = Residency.eager { s =>
     val raw = edges.select(col(srcCol).cast(LongType).as("s"),
         col(dstCol).cast(LongType).as("d"))
       .filter(col("s").isNotNull && col("d").isNotNull && col("s") =!= col("d"))
@@ -540,9 +533,8 @@ object Graph {
     // released after one materializing action over the node-sized result
     // (the family's bounded-residency contract — the operator is EAGER
     // like hitsInt/kCoreNodes).
-    val e = raw.select(least(col("s"), col("d")).as("u"),
-        greatest(col("s"), col("d")).as("v")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val e = s.persist(raw.select(least(col("s"), col("d")).as("u"),
+        greatest(col("s"), col("d")).as("v")).distinct())
     val deg = e.select(col("u").as("node")).unionAll(e.select(col("v").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
     val ed = e
@@ -552,10 +544,9 @@ object Graph {
     // the wedge join can order its two heads without re-joining degrees
     val uFirst = col("__du") < col("__dv") ||
       (col("__du") === col("__dv") && col("u") < col("v"))
-    val arcs = ed.select(
+    val arcs = s.persist(ed.select(
         when(uFirst, col("u")).otherwise(col("v")).as("a"),
-        when(uFirst, col("v")).otherwise(col("u")).as("b"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        when(uFirst, col("v")).otherwise(col("u")).as("b")))
     // Adjacency-array intersection, NOT a materialized wedge join: the
     // triangle x<y<z (in orientation order) is found ONLY at its base
     // arc (x, y), as each common oriented OUT-neighbor z of x and y.
@@ -578,9 +569,8 @@ object Graph {
     // the arcs persist let AQE coalesce the lazy arc projection to ~3
     // tasks under the adjacency aggregate, serializing it — recorded
     // negative result, the pageRank precedent.
-    val adj = arcs.groupBy(col("a").as("node"))
-      .agg(collect_list(col("b")).as("nbrs"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val adj = s.persist(arcs.groupBy(col("a").as("node"))
+      .agg(collect_list(col("b")).as("nbrs")))
     val tri = arcs
       .join(adj.select(col("node").as("a"), col("nbrs").as("__na")), Seq("a"))
       .join(adj.select(col("node").as("b"), col("nbrs").as("__nb")), Seq("b"))
@@ -592,12 +582,9 @@ object Graph {
     val perNode = tri
       .select(explode(array(col("x"), col("y"), col("z"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("__t"))
-    graft.util.Caching.releasingOnFailure(e, arcs, adj) {
-      val out = deg.join(perNode, Seq("node"), "left")
-        .select(col("node"), coalesce(col("__t"), lit(0L)).as("triangles"),
-          col("deg"), expr("deg * (deg - 1L) DIV 2").as("wedges"))
-      graft.util.Caching.materializeAndRelease(out, e, arcs, adj)
-    }
+    deg.join(perNode, Seq("node"), "left")
+      .select(col("node"), coalesce(col("__t"), lit(0L)).as("triangles"),
+        col("deg"), expr("deg * (deg - 1L) DIV 2").as("wedges"))
   }
 
   /** The ANSI-SQL replay of [[triangleCounts]] — same orientation, same
@@ -648,50 +635,44 @@ object Graph {
     * edge-sized. */
   def bfsHops(edges: DataFrame, srcCol: String, dstCol: String,
               seeds: DataFrame, seedCol: String, maxHops: Int,
-              reliableCheckpoint: Boolean = false): DataFrame = {
+              reliableCheckpoint: Boolean = false): DataFrame = Residency.eager { s =>
     require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
     require(!reliableCheckpoint ||
         edges.sparkSession.sparkContext.getCheckpointDir.isDefined,
       "reliableCheckpoint = true needs a checkpoint directory: call " +
         "spark.sparkContext.setCheckpointDir(<reliable storage path>) first")
-    import org.apache.spark.storage.StorageLevel
     // persisted PRE-PARTITIONED on src (guide §2.4): every level joins
     // `e` on src, and without this the edge frame re-shuffled per level
     // (measured ~23 MB exchange write per level at sf0.1) — partitioned
     // once, each level only moves the frontier.
-    val e = edges
+    val e = s.persist(edges
       .select(col(srcCol).cast(LongType).as("src"),
         col(dstCol).cast(LongType).as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull &&
         col("src") =!= col("dst"))
       .distinct()
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .repartition(col("src")))
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
-    def pin(df: DataFrame): DataFrame =
-      if (reliableCheckpoint) df.checkpoint(eager = true)
-      else df.localCheckpoint(true)
-    graft.util.Caching.releasingOnFailure(e) {
-      var frontier = pin(nodes
-        .join(seeds.select(col(seedCol).cast(LongType).as("node")).distinct(),
-          Seq("node"))
+    def pin(df: DataFrame): DataFrame = Residency.pin(df, reliableCheckpoint)
+    var frontier = pin(nodes
+      .join(seeds.select(col(seedCol).cast(LongType).as("node")).distinct(),
+        Seq("node"))
+      .select(col("node"),
+        lit(0).cast(org.apache.spark.sql.types.IntegerType).as("hop")))
+    var reached = frontier
+    for (i <- 1 to maxHops) {
+      val nbrs = e
+        .join(frontier.select(col("node").as("src")), Seq("src"))
+        .select(col("dst").as("node")).distinct()
+      val fresh = pin(nbrs
+        .join(reached.select("node"), Seq("node"), "left_anti")
         .select(col("node"),
-          lit(0).cast(org.apache.spark.sql.types.IntegerType).as("hop")))
-      var reached = frontier
-      for (i <- 1 to maxHops) {
-        val nbrs = e
-          .join(frontier.select(col("node").as("src")), Seq("src"))
-          .select(col("dst").as("node")).distinct()
-        val fresh = pin(nbrs
-          .join(reached.select("node"), Seq("node"), "left_anti")
-          .select(col("node"),
-            lit(i).cast(org.apache.spark.sql.types.IntegerType).as("hop")))
-        frontier = fresh
-        reached = reached.unionAll(fresh)
-      }
-      graft.util.Caching.materializeAndRelease(reached, e)
+          lit(i).cast(org.apache.spark.sql.types.IntegerType).as("hop")))
+      frontier = fresh
+      reached = reached.unionAll(fresh)
     }
+    reached
   }
 
   /** K-CORE decomposition, bounded at `rounds` peel iterations: nodes of
@@ -755,22 +736,18 @@ object Graph {
         edges.sparkSession.sparkContext.getCheckpointDir.isDefined,
       "reliableCheckpoint = true needs a checkpoint directory: call " +
         "spark.sparkContext.setCheckpointDir(<reliable storage path>) first")
-    import org.apache.spark.storage.StorageLevel
-    val raw = edges.select(col(srcCol).cast(LongType).as("s"),
-        col(dstCol).cast(LongType).as("d"))
-      .filter(col("s").isNotNull && col("d").isNotNull && col("s") =!= col("d"))
-    val e0 = raw.select(least(col("s"), col("d")).as("u"),
-        greatest(col("s"), col("d")).as("v")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    def pin(df: DataFrame): DataFrame =
-      if (reliableCheckpoint) df.checkpoint(eager = true)
-      else df.localCheckpoint(true)
+    def pin(df: DataFrame): DataFrame = Residency.pin(df, reliableCheckpoint)
     def degrees(e: DataFrame): DataFrame =
       e.select(col("u").as("node")).unionAll(e.select(col("v").as("node")))
         .groupBy("node").agg(count(lit(1)).as("deg"))
-    graft.util.Caching.releasingOnFailure(e0) {
+    var peelRounds = 0
+    val core = Residency.eager { s =>
+      val raw = edges.select(col(srcCol).cast(LongType).as("s"),
+          col(dstCol).cast(LongType).as("d"))
+        .filter(col("s").isNotNull && col("d").isNotNull && col("s") =!= col("d"))
+      val e0 = s.persist(raw.select(least(col("s"), col("d")).as("u"),
+          greatest(col("s"), col("d")).as("v")).distinct())
       var e = e0
-      var peelRounds = 0
       // Each round's surviving-edge frame is PINNED alongside the
       // survivor set: leaving `e` lazy re-derived the accumulated
       // semi-join chain from e0 in every later round's degree aggregate
@@ -811,8 +788,9 @@ object Graph {
           }
         }
       }
-      (graft.util.Caching.materializeAndRelease(degrees(e), e0), peelRounds)
+      degrees(e)
     }
+    (core, peelRounds)
   }
 
   /** Deterministic synchronous LABEL-PROPAGATION community detection
@@ -843,13 +821,12 @@ object Graph {
     * node-sized. */
   def communities(edges: DataFrame, srcCol: String, dstCol: String,
                   rounds: Int,
-                  reliableCheckpoint: Boolean = false): DataFrame = {
+                  reliableCheckpoint: Boolean = false): DataFrame = Residency.eager { s =>
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     require(!reliableCheckpoint ||
         edges.sparkSession.sparkContext.getCheckpointDir.isDefined,
       "reliableCheckpoint = true needs a checkpoint directory: call " +
         "spark.sparkContext.setCheckpointDir(<reliable storage path>) first")
-    import org.apache.spark.storage.StorageLevel
     val raw = edges.select(col(srcCol).cast(LongType).as("s"),
         col(dstCol).cast(LongType).as("d"))
       .filter(col("s").isNotNull && col("d").isNotNull && col("s") =!= col("d"))
@@ -861,34 +838,28 @@ object Graph {
     // without this the edge frame re-shuffled EVERY round (measured
     // 22.5 MB exchange write per round at sf0.1); hash-partitioned and
     // cached, the per-round join only exchanges the node-sized labels.
-    val bi = e.select(col("u").as("src"), col("v").as("dst"))
+    val bi = s.persist(e.select(col("u").as("src"), col("v").as("dst"))
       .unionAll(e.select(col("v").as("src"), col("u").as("dst")))
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    def pin(df: DataFrame): DataFrame =
-      if (reliableCheckpoint) df.checkpoint(eager = true)
-      else df.localCheckpoint(true)
-    graft.util.Caching.releasingOnFailure(bi) {
-      var labels = bi.select(col("src").as("node")).distinct()
-        .select(col("node"), col("node").as("label"))
-      for (_ <- 1 to rounds) {
-        val counts = bi
-          .join(labels.select(col("node").as("src"), col("label")), Seq("src"))
-          .groupBy(col("dst").as("node"), col("label"))
-          .agg(count(lit(1)).as("__c"))
-        // arg-max by AGGREGATE, not window: min(struct(−count, label))
-        // picks exactly the window's (count DESC, label ASC) head —
-        // most-frequent label, smallest on ties — while replacing the
-        // window's exchange-by-node + full sort with a partially
-        // aggregated min (map-side partials, no sort). Same labels,
-        // one less sort pass per round.
-        labels = pin(counts
-          .groupBy(col("node"))
-          .agg(min(struct((-col("__c")).as("__nc"), col("label")))
-            .getField("label").as("label")))
-      }
-      graft.util.Caching.materializeAndRelease(labels, bi)
+      .repartition(col("src")))
+    var labels = bi.select(col("src").as("node")).distinct()
+      .select(col("node"), col("node").as("label"))
+    for (_ <- 1 to rounds) {
+      val counts = bi
+        .join(labels.select(col("node").as("src"), col("label")), Seq("src"))
+        .groupBy(col("dst").as("node"), col("label"))
+        .agg(count(lit(1)).as("__c"))
+      // arg-max by AGGREGATE, not window: min(struct(−count, label))
+      // picks exactly the window's (count DESC, label ASC) head —
+      // most-frequent label, smallest on ties — while replacing the
+      // window's exchange-by-node + full sort with a partially
+      // aggregated min (map-side partials, no sort). Same labels,
+      // one less sort pass per round.
+      labels = Residency.pin(counts
+        .groupBy(col("node"))
+        .agg(min(struct((-col("__c")).as("__nc"), col("label")))
+          .getField("label").as("label")), reliableCheckpoint)
     }
+    labels
   }
 
   /** The unrolled ANSI-SQL replay of [[communities]]: one

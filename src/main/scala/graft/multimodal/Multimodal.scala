@@ -3,6 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.util.Residency
 
 /** Multimodal column plumbing: image/audio/video payloads as opaque
   * `binary` columns with typed metadata structs.
@@ -559,17 +560,16 @@ object Multimodal {
     * persisted (caller unpersists — the family contract). */
   def audioExactDups(df: DataFrame, idCol: String,
                      payloadCol: String = "payload",
-                     maxBucketOccupancy: Long = 100000L): DataFrame = {
-    val pairs = audioNearDups(df, idCol, payloadCol, maxDist = 0,
-      maxBucketOccupancy = maxBucketOccupancy)
+                     maxBucketOccupancy: Long = 100000L): DataFrame = Residency.eager { s =>
+    val pairs = s.adopt(audioNearDups(df, idCol, payloadCol, maxDist = 0,
+      maxBucketOccupancy = maxBucketOccupancy))
     val fp = df.select(col(idCol).cast(org.apache.spark.sql.types.LongType)
       .as("__vid"), md5(col(payloadCol)).as("__fp"))
-    val out = pairs
+    pairs
       .join(fp.select(col("__vid").as("id_a"), col("__fp").as("__fa")), "id_a")
       .join(fp.select(col("__vid").as("id_b"), col("__fp").as("__fb")), "id_b")
       .filter(col("__fa") === col("__fb"))
       .select(col("id_a"), col("id_b"))
-    graft.util.Caching.materializeAndRelease(out, pairs)
   }
 
   /** REAL image resize via JDK Graphics2D: decode, bilinear-scale to the
@@ -700,17 +700,16 @@ object Multimodal {
     * the family contract). */
   def imageExactDups(df: DataFrame, idCol: String,
                      payloadCol: String = "payload",
-                     maxBucketOccupancy: Long = 100000L): DataFrame = {
-    val pairs = imageNearDups(df, idCol, payloadCol, maxDist = 0,
-      maxBucketOccupancy = maxBucketOccupancy)
+                     maxBucketOccupancy: Long = 100000L): DataFrame = Residency.eager { s =>
+    val pairs = s.adopt(imageNearDups(df, idCol, payloadCol, maxDist = 0,
+      maxBucketOccupancy = maxBucketOccupancy))
     val fp = df.select(col(idCol).cast(org.apache.spark.sql.types.LongType)
       .as("__vid"), md5(col(payloadCol)).as("__fp"))
-    val out = pairs
+    pairs
       .join(fp.select(col("__vid").as("id_a"), col("__fp").as("__fa")), "id_a")
       .join(fp.select(col("__vid").as("id_b"), col("__fp").as("__fb")), "id_b")
       .filter(col("__fa") === col("__fb"))
       .select(col("id_a"), col("id_b"))
-    graft.util.Caching.materializeAndRelease(out, pairs)
   }
 
   /** Deterministic multi-frame animated-GIF payloads — the container the

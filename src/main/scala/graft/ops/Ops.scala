@@ -1,9 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
 /** Structural / reshape operators (SURVEY.md §2.3, §2.6, A6).
   *
@@ -70,33 +70,12 @@ object Ops {
     *
     * The distinct set is expected to be dimension-sized (12 rows in the
     * reference); `row_number` over a single global window is fine there.
-    * For large natural-key domains use [[surrogateKeyScalable]] — same
-    * ids, no single-partition window. Ids are LongType in BOTH variants so
-    * swapping one for the other never changes the output schema. */
+    * Ids are LongType. */
   def surrogateKey(df: DataFrame, natKey: Seq[String], idCol: String): DataFrame = {
     val w = Window.orderBy(natKey.map(col): _*)
     df.select(natKey.map(col): _*)
       .distinct()
       .withColumn(idCol, (row_number().over(w) - 1).cast(LongType))
-  }
-
-  /** A6 at scale: the same contract as [[surrogateKey]] — dense 0-based
-    * ids in natural-key order — with NO single-partition window, so it
-    * holds for natural-key domains of any size. Phase 1 range-partitions
-    * and sorts the distinct key set (partitions are in ascending range
-    * order, so partition-then-offset order IS global key order); phase 2
-    * is `zipWithIndex`: one small per-partition count job, then a
-    * map-only offset add. Property-tested equal to the window form. */
-  def surrogateKeyScalable(df: DataFrame, natKey: Seq[String], idCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val keyCols = natKey.map(col)
-    val sorted = df.select(keyCols: _*).distinct()
-      .repartitionByRange(keyCols: _*)
-      .sortWithinPartitions(keyCols: _*)
-    val outSchema = StructType(
-      sorted.schema.fields :+ StructField(idCol, LongType, nullable = false))
-    val rdd = sorted.rdd.zipWithIndex().map { case (r, i) => Row.fromSeq(r.toSeq :+ i) }
-    spark.createDataFrame(rdd, outSchema)
   }
 
   /** R2 — drop the last `n` rows under an explicit ordering (footer rows,
@@ -117,8 +96,8 @@ object Ops {
     * Defined` single-task funnel if ever applied to a large table; these
     * ops' declared inputs are header/footer-trimmed exports, but the
     * operator should not be the thing that breaks when one arrives
-    * corpus-sized). The [[surrogateKeyScalable]] mechanism: range-
-    * partition + sort on the ordering (partition-then-offset order IS
+    * corpus-sized). Range-partition + sort on the ordering (partitions
+    * are in ascending range order, so partition-then-offset order IS
     * global order), then `zipWithIndex` — one small per-partition count
     * job plus a map-only filter. Same kept set as the window form under
     * the family's total-order caller contract (ties at the boundary were

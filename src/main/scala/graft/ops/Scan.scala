@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import graft.util.Residency
 
 /** Distributed prefix-sum scan — the scale-safe replacement for a global
   * `Window.orderBy(v)` with no `partitionBy`, which Spark plans as a
@@ -41,13 +41,13 @@ object Scan {
     * is materialized once so both the local-sum branch and the totals
     * branch observe the same partition boundaries — `spark_partition_id`
     * on a recomputed shuffle is not stable — and is released before
-    * return). Callers should `unpersist()` the result when done, or wrap
-    * downstream shaping in [[graft.util.Caching.reshapeAndRelease]].
+    * return). Callers should `unpersist()` the result when done, or
+    * `adopt` it into the [[graft.util.Residency.Scope]] that shapes it.
     * When `df` is corpus-sized the persisted result is the honest cost
     * of an exact global scan: a narrow MEMORY_AND_DISK frame that spills
     * rather than recomputing the upstream pipeline per consumer. */
   def prefixSums(df: DataFrame, orderBy: Seq[Column], sumCols: Seq[String],
-                 partitions: Int = 0): DataFrame = {
+                 partitions: Int = 0): DataFrame = Residency.eager { s =>
     require(orderBy.nonEmpty, "need at least one ordering expression")
     require(sumCols.nonEmpty, "need at least one column to sum")
     val spark = df.sparkSession
@@ -64,9 +64,7 @@ object Scan {
     val ranged0 =
       if (partitions > 0) df.repartitionByRange(partitions, orderBy: _*)
       else df.repartitionByRange(orderBy: _*)
-    val ranged = ranged0
-      .withColumn("__pid", spark_partition_id())
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val ranged = s.persist(ranged0.withColumn("__pid", spark_partition_id()))
     val wLocal = Window.partitionBy(col("__pid")).orderBy(orderBy: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val local = sumCols.foldLeft(ranged) { (d, c) =>
@@ -84,11 +82,10 @@ object Scan {
       .groupBy("__p")
       .agg(offAggs.head, offAggs.tail: _*)
       .withColumnRenamed("__p", "__pid")
-    val out = local.join(broadcast(offsetCum), Seq("__pid"))
+    local.join(broadcast(offsetCum), Seq("__pid"))
       .select(df.columns.map(col) ++ sumCols.map { c =>
         (col(s"__run_$c") + coalesce(col(s"__off_$c"), lit(0L)))
           .as(s"${c}_cum")
       }: _*)
-    graft.util.Caching.materializeAndRelease(out, ranged)
   }
 }

@@ -3,6 +3,7 @@ package graft.profile
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.util.Residency
 
 /** Dataset profiling (SURVEY.md §2.13 PR1–PR6) — the engine-side analog of
   * the reference's per-table ydata-profiling reports
@@ -411,9 +412,7 @@ object Profile {
           // spearman returns a PERSISTED one-row frame (its caller-
           // unpersist contract) — release it or every fallback pair
           // leaks a cache entry for the session's lifetime
-          val out = spearman(df, a, b)
-          val r = out.head()
-          out.unpersist(blocking = true)
+          val r = Residency.scoped(_.adopt(spearman(df, a, b)).head())
           if (r.isNullAt(1)) None else Some((a, b) -> r.getDouble(1))
         }.toMap
         shared ++ fallback
@@ -426,9 +425,7 @@ object Profile {
         Map.empty[(String, String), Double]
       else pairStats(lowCardString.toSeq, (a, b) => {
         // cramersV returns a PERSISTED one-row frame — release it
-        val out = cramersV(df, a, b)
-        val r = out.head()
-        out.unpersist(blocking = true)
+        val r = Residency.scoped(_.adopt(cramersV(df, a, b)).head())
         val i = r.fieldIndex("cramers_v")
         if (r.isNullAt(i)) None else Some(r.getDouble(i))
       })
@@ -463,8 +460,8 @@ object Profile {
           numeric.length > maxAssocCols)
         Map.empty[(String, String), Double]
       else {
-        val binned = quantileBinnedColumns(df, numeric.toSeq, 10)
-        try {
+        Residency.scoped { s =>
+          val binned = quantileBinnedColumns(s, df, numeric.toSeq, 10)
           val idx = numeric.zipWithIndex.toMap
           pairStats(numeric.toSeq, (a, b) => {
             val r = phik(binned.select(
@@ -473,7 +470,7 @@ object Profile {
             val i = r.fieldIndex("phik")
             if (r.isNullAt(i)) None else Some(r.getDouble(i))
           })
-        } finally binned.unpersist(blocking = true)
+        }
       }
     val phiks = phikCat ++ phikNum
     // nullity correlation — pairwise missingness association over the
@@ -574,63 +571,57 @@ object Profile {
     * small ones); ONE aggregation computes the sums. Exact while
     * 4n⁴ < 10³⁸ — n ≲ 2·10⁹ pair rows; past that, profile a sample or
     * accept the corr-on-ranks engine analytic. */
-  def spearman(df: DataFrame, aCol: String, bCol: String): DataFrame = {
+  def spearman(df: DataFrame, aCol: String,
+               bCol: String): DataFrame = Residency.eager { s =>
     val base = df.select(q(aCol).as("__x"), q(bCol).as("__y"))
       .filter(col("__x").isNotNull && col("__y").isNotNull)
     // rank map = (value, doubled average rank): value histogram + the
     // distributed prefix scan. The scan's output is already persisted
     // (prefixSums contract) — the projection stays LAZY on top of it and
-    // the scan handle is released after the final aggregate materializes
+    // the scope releases the scan after the final aggregate materializes
     // (an extra persist+count per map measured ~2× the operator's cost).
-    def rank2(c: String): (DataFrame, DataFrame) = {
+    def rank2(c: String): DataFrame = {
       val cnt = base.groupBy(col(c).as("__v")).agg(count(lit(1)).as("__cnt"))
-      val cum = graft.ops.Scan.prefixSums(cnt, Seq(col("__v").asc),
-        Seq("__cnt"))
-      (cum.select(col("__v"),
-        (lit(2L) * col("__cnt_cum") - col("__cnt") + 1L).as("__r2")), cum)
+      s.adopt(graft.ops.Scan.prefixSums(cnt, Seq(col("__v").asc), Seq("__cnt")))
+        .select(col("__v"),
+          (lit(2L) * col("__cnt_cum") - col("__cnt") + 1L).as("__r2"))
     }
     // The two rank builds are independent eager pipelines (prefixSums
     // persists + materializes internally) — overlap them (guide §2.6,
     // graft.util.Parallel); each build's result is deterministic per
-    // column, only wall-clock overlaps. allCleaning releases a completed
-    // sibling's persisted scan handle when the other build fails — the
-    // rethrow bypasses releasingOnFailure below, which never sees the
-    // destructured handles.
-    val Seq((ra, raHandle), (rb, rbHandle)) =
-      graft.util.Parallel.allCleaning[(DataFrame, DataFrame)](
-        df.sparkSession, _._2.unpersist(blocking = true))(
-        () => rank2("__x"), () => rank2("__y"))
-    graft.util.Caching.releasingOnFailure(raHandle, rbHandle) {
-      val d19 = DecimalType(19, 0)
-      val d38 = DecimalType(38, 0)
-      val joined = base
-        .join(ra.select(col("__v").as("__x"), col("__r2").as("__ra")),
-          Seq("__x"))
-        .join(rb.select(col("__v").as("__y"), col("__r2").as("__rb")),
-          Seq("__y"))
-      val sums = joined.agg(
-        count(lit(1)).as("__n"),
-        sum(col("__ra").cast(d19)).as("__sx"),
-        sum(col("__rb").cast(d19)).as("__sy"),
-        sum(col("__ra").cast(d19) * col("__ra").cast(d19)).as("__sxx"),
-        sum(col("__rb").cast(d19) * col("__rb").cast(d19)).as("__syy"),
-        sum(col("__ra").cast(d19) * col("__rb").cast(d19)).as("__sxy"))
-      val varx =
-        (col("__n").cast(d38) * col("__sxx") - col("__sx") * col("__sx"))
-          .cast(DoubleType)
-      val vary =
-        (col("__n").cast(d38) * col("__syy") - col("__sy") * col("__sy"))
-          .cast(DoubleType)
-      val cov =
-        (col("__n").cast(d38) * col("__sxy") - col("__sx") * col("__sy"))
-          .cast(DoubleType)
-      val out = sums.select(
-        coalesce(col("__n"), lit(0L)).as("n"),
-        when(varx > 0 && vary > 0,
-          round(cov / sqrt(varx * vary), 6))
-          .otherwise(lit(null).cast(DoubleType)).as("rho"))
-      graft.util.Caching.materializeAndRelease(out, raHandle, rbHandle)
-    }
+    // column, only wall-clock overlaps. Each build registers its scan
+    // with the scope, so a completed sibling's scan is released when the
+    // other build fails.
+    val Seq(ra, rb) = graft.util.Parallel.all(df.sparkSession)(
+      () => rank2("__x"), () => rank2("__y"))
+    val d19 = DecimalType(19, 0)
+    val d38 = DecimalType(38, 0)
+    val joined = base
+      .join(ra.select(col("__v").as("__x"), col("__r2").as("__ra")),
+        Seq("__x"))
+      .join(rb.select(col("__v").as("__y"), col("__r2").as("__rb")),
+        Seq("__y"))
+    val sums = joined.agg(
+      count(lit(1)).as("__n"),
+      sum(col("__ra").cast(d19)).as("__sx"),
+      sum(col("__rb").cast(d19)).as("__sy"),
+      sum(col("__ra").cast(d19) * col("__ra").cast(d19)).as("__sxx"),
+      sum(col("__rb").cast(d19) * col("__rb").cast(d19)).as("__syy"),
+      sum(col("__ra").cast(d19) * col("__rb").cast(d19)).as("__sxy"))
+    val varx =
+      (col("__n").cast(d38) * col("__sxx") - col("__sx") * col("__sx"))
+        .cast(DoubleType)
+    val vary =
+      (col("__n").cast(d38) * col("__syy") - col("__sy") * col("__sy"))
+        .cast(DoubleType)
+    val cov =
+      (col("__n").cast(d38) * col("__sxy") - col("__sx") * col("__sy"))
+        .cast(DoubleType)
+    sums.select(
+      coalesce(col("__n"), lit(0L)).as("n"),
+      when(varx > 0 && vary > 0,
+        round(cov / sqrt(varx * vary), 6))
+        .otherwise(lit(null).cast(DoubleType)).as("rho"))
   }
 
   /** SHARED-RANK Spearman over every pair of `cols` — the O(columns)
@@ -658,9 +649,7 @@ object Profile {
     * ρ entries keyed (colᵢ, colⱼ), i < j in `cols` order. */
   def spearmanSharedRanks(df: DataFrame, cols: Seq[String])
       : Map[(String, String), Double] = {
-    val out = spearmanSharedRanksFrame(df, cols)
-    val row = out.head()
-    out.unpersist(blocking = true)
+    val row = Residency.scoped(_.adopt(spearmanSharedRanksFrame(df, cols)).head())
     (for {
       i <- cols.indices; j <- (i + 1) until cols.length
       idx = row.fieldIndex(s"rho_${cols(i)}__${cols(j)}")
@@ -677,7 +666,7 @@ object Profile {
     * returned frame is persisted (the [[spearman]] caller-unpersist
     * contract). */
   def spearmanSharedRanksFrame(df: DataFrame, cols: Seq[String])
-      : DataFrame = {
+      : DataFrame = Residency.eager { s =>
     require(cols.length >= 2,
       s"spearmanSharedRanks needs >= 2 columns, got ${cols.length}")
     require(cols.distinct.length == cols.length,
@@ -686,53 +675,46 @@ object Profile {
       q(c).as(s"__c$i") }: _*)
     // One independent eager rank build per column — run them
     // concurrently (the [[spearman]] §2.6 overlap; results per column
-    // are deterministic, only wall-clock overlaps). allCleaning releases
-    // completed siblings' persisted scan handles on a build failure.
-    val maps = graft.util.Parallel.allCleaning[(DataFrame, DataFrame)](
-      df.sparkSession, _._2.unpersist(blocking = true))(
+    // are deterministic, only wall-clock overlaps). Each build registers
+    // its scan with the scope, released on success or a build failure.
+    val maps = graft.util.Parallel.all(df.sparkSession)(
       cols.indices.map { i => () => {
         val cnt = base.groupBy(col(s"__c$i").as("__v"))
           .agg(count(lit(1)).as("__cnt"))
-        val cum = graft.ops.Scan.prefixSums(cnt, Seq(col("__v").asc),
-          Seq("__cnt"))
-        (cum.select(col("__v").as(s"__c$i"),
-          (lit(2L) * col("__cnt_cum") - col("__cnt") + 1L).as(s"__r$i")), cum)
+        s.adopt(graft.ops.Scan.prefixSums(cnt, Seq(col("__v").asc), Seq("__cnt")))
+          .select(col("__v").as(s"__c$i"),
+            (lit(2L) * col("__cnt_cum") - col("__cnt") + 1L).as(s"__r$i"))
       }}: _*)
-    val handles = maps.map(_._2)
-    graft.util.Caching.releasingOnFailure(handles: _*) {
-      val d19 = DecimalType(19, 0)
-      val d38 = DecimalType(38, 0)
-      val joined = maps.zipWithIndex.foldLeft(base) {
-        case (acc, ((m, _), i)) => acc.join(m, Seq(s"__c$i"))
-      }
-      val pairs = for {
-        i <- cols.indices; j <- (i + 1) until cols.length
-      } yield (i, j)
-      val aggs: Seq[Column] =
-        Seq(count(lit(1)).as("__n")) ++
-        cols.indices.flatMap { i => Seq(
-          sum(col(s"__r$i").cast(d19)).as(s"__s$i"),
-          sum(col(s"__r$i").cast(d19) * col(s"__r$i").cast(d19))
-            .as(s"__ss$i")) } ++
-        pairs.map { case (i, j) =>
-          sum(col(s"__r$i").cast(d19) * col(s"__r$j").cast(d19))
-            .as(s"__sp${i}_$j") }
-      val sums = joined.agg(aggs.head, aggs.tail: _*)
-      def vari(i: Int): Column =
-        (col("__n").cast(d38) * col(s"__ss$i") -
-          col(s"__s$i") * col(s"__s$i")).cast(DoubleType)
-      val rhoCols = pairs.map { case (i, j) =>
-        val cov = (col("__n").cast(d38) * col(s"__sp${i}_$j") -
-          col(s"__s$i") * col(s"__s$j")).cast(DoubleType)
-        when(vari(i) > 0 && vari(j) > 0,
-          round(cov / sqrt(vari(i) * vari(j)), 6))
-          .otherwise(lit(null).cast(DoubleType))
-          .as(s"rho_${cols(i)}__${cols(j)}")
-      }
-      graft.util.Caching.materializeAndRelease(
-        sums.select(coalesce(col("__n"), lit(0L)).as("n") +: rhoCols: _*),
-        handles: _*)
+    val d19 = DecimalType(19, 0)
+    val d38 = DecimalType(38, 0)
+    val joined = maps.zipWithIndex.foldLeft(base) {
+      case (acc, (m, i)) => acc.join(m, Seq(s"__c$i"))
     }
+    val pairs = for {
+      i <- cols.indices; j <- (i + 1) until cols.length
+    } yield (i, j)
+    val aggs: Seq[Column] =
+      Seq(count(lit(1)).as("__n")) ++
+      cols.indices.flatMap { i => Seq(
+        sum(col(s"__r$i").cast(d19)).as(s"__s$i"),
+        sum(col(s"__r$i").cast(d19) * col(s"__r$i").cast(d19))
+          .as(s"__ss$i")) } ++
+      pairs.map { case (i, j) =>
+        sum(col(s"__r$i").cast(d19) * col(s"__r$j").cast(d19))
+          .as(s"__sp${i}_$j") }
+    val sums = joined.agg(aggs.head, aggs.tail: _*)
+    def vari(i: Int): Column =
+      (col("__n").cast(d38) * col(s"__ss$i") -
+        col(s"__s$i") * col(s"__s$i")).cast(DoubleType)
+    val rhoCols = pairs.map { case (i, j) =>
+      val cov = (col("__n").cast(d38) * col(s"__sp${i}_$j") -
+        col(s"__s$i") * col(s"__s$j")).cast(DoubleType)
+      when(vari(i) > 0 && vari(j) > 0,
+        round(cov / sqrt(vari(i) * vari(j)), 6))
+        .otherwise(lit(null).cast(DoubleType))
+        .as(s"rho_${cols(i)}__${cols(j)}")
+    }
+    sums.select(coalesce(col("__n"), lit(0L)).as("n") +: rhoCols: _*)
   }
 
   /** CRAMÉR'S V categorical association for one column pair — the
@@ -767,62 +749,57 @@ object Profile {
     * fast when r·c exceeds `maxGridCells`, instead of silently
     * building a 10¹²-row grid from two near-key columns. */
   def cramersV(df: DataFrame, aCol: String, bCol: String,
-               maxGridCells: Long = 4000000L): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
+               maxGridCells: Long = 4000000L): DataFrame = Residency.eager { s =>
     require(maxGridCells >= 1, s"maxGridCells must be >= 1, got $maxGridCells")
     val base = df.select(q(aCol).cast(StringType).as("__a"),
         q(bCol).cast(StringType).as("__b"))
       .filter(col("__a").isNotNull && col("__b").isNotNull)
-    val obs = base.groupBy("__a", "__b").agg(count(lit(1)).as("__o"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    graft.util.Caching.releasingOnFailure(obs) {
-      val ra = obs.groupBy("__a").agg(sum(col("__o")).as("__rt"))
-      val cb = obs.groupBy("__b").agg(sum(col("__o")).as("__ct"))
-      // fail-fast guard: ONE combined level-count action over the
-      // persisted cells (this is also the job that materializes obs,
-      // so the main pass below is pure cache reads — the guard's
-      // marginal cost is one tiny aggregate, measured ~+0.4 s on a
-      // sub-second face at sf0.1)
-      val lv = obs.agg(count_distinct(col("__a")).as("r"),
-        count_distinct(col("__b")).as("c")).head()
-      val rLevels = lv.getLong(0)
-      val cLevels = lv.getLong(1)
-      require(rLevels * cLevels <= maxGridCells,
-        s"cramersV('$aCol', '$bCol') would build a $rLevels × $cLevels " +
-          s"contingency grid (${rLevels * cLevels} cells > $maxGridCells) " +
-          "— Cramér's V is a CATEGORICAL association; bucket or recode " +
-          "high-cardinality columns first, or raise maxGridCells " +
-          "deliberately")
-      val tot = obs.agg(sum(col("__o")).as("__n"))
-      val d19 = DecimalType(19, 0)
-      val grid = ra.crossJoin(cb).crossJoin(broadcast(tot))
-        .join(obs, Seq("__a", "__b"), "left")
-        .select(col("__a"), col("__b"), col("__rt"), col("__ct"),
-          col("__n"), coalesce(col("__o"), lit(0L)).as("__o0"))
-      val num = col("__o0").cast(d19) * col("__n").cast(d19) -
-        col("__rt").cast(d19) * col("__ct").cast(d19)
-      val term = round((num * num).cast(DoubleType) /
-          (col("__rt").cast(d19) * col("__ct").cast(d19) *
-            col("__n").cast(d19)).cast(DoubleType), 6)
-        .cast(DecimalType(28, 6))
-      val agg = grid.select(term.as("__term"), col("__a"), col("__b"),
-          col("__n"))
-        .agg(sum(col("__term")).as("__chi2"),
-          count_distinct(col("__a")).as("__r"),
-          count_distinct(col("__b")).as("__c"),
-          max(col("__n")).as("__nn"))
-      val minDim = least(col("__r"), col("__c"))
-      val out = agg.select(
-        coalesce(col("__nn"), lit(0L)).as("n"),
-        col("__r").cast(IntegerType).as("r_levels"),
-        col("__c").cast(IntegerType).as("c_levels"),
-        coalesce(col("__chi2").cast(DoubleType), lit(0.0)).as("chi2"),
-        when(minDim > 1 && col("__nn") > 0,
-          round(sqrt(col("__chi2").cast(DoubleType) /
-            (col("__nn") * (minDim - 1)).cast(DoubleType)), 6))
-          .otherwise(lit(null).cast(DoubleType)).as("cramers_v"))
-      graft.util.Caching.materializeAndRelease(out, obs)
-    }
+    val obs = s.persist(base.groupBy("__a", "__b").agg(count(lit(1)).as("__o")))
+    val ra = obs.groupBy("__a").agg(sum(col("__o")).as("__rt"))
+    val cb = obs.groupBy("__b").agg(sum(col("__o")).as("__ct"))
+    // fail-fast guard: ONE combined level-count action over the
+    // persisted cells (this is also the job that materializes obs,
+    // so the main pass below is pure cache reads — the guard's
+    // marginal cost is one tiny aggregate, measured ~+0.4 s on a
+    // sub-second face at sf0.1)
+    val lv = obs.agg(count_distinct(col("__a")).as("r"),
+      count_distinct(col("__b")).as("c")).head()
+    val rLevels = lv.getLong(0)
+    val cLevels = lv.getLong(1)
+    require(rLevels * cLevels <= maxGridCells,
+      s"cramersV('$aCol', '$bCol') would build a $rLevels × $cLevels " +
+        s"contingency grid (${rLevels * cLevels} cells > $maxGridCells) " +
+        "— Cramér's V is a CATEGORICAL association; bucket or recode " +
+        "high-cardinality columns first, or raise maxGridCells " +
+        "deliberately")
+    val tot = obs.agg(sum(col("__o")).as("__n"))
+    val d19 = DecimalType(19, 0)
+    val grid = ra.crossJoin(cb).crossJoin(broadcast(tot))
+      .join(obs, Seq("__a", "__b"), "left")
+      .select(col("__a"), col("__b"), col("__rt"), col("__ct"),
+        col("__n"), coalesce(col("__o"), lit(0L)).as("__o0"))
+    val num = col("__o0").cast(d19) * col("__n").cast(d19) -
+      col("__rt").cast(d19) * col("__ct").cast(d19)
+    val term = round((num * num).cast(DoubleType) /
+        (col("__rt").cast(d19) * col("__ct").cast(d19) *
+          col("__n").cast(d19)).cast(DoubleType), 6)
+      .cast(DecimalType(28, 6))
+    val agg = grid.select(term.as("__term"), col("__a"), col("__b"),
+        col("__n"))
+      .agg(sum(col("__term")).as("__chi2"),
+        count_distinct(col("__a")).as("__r"),
+        count_distinct(col("__b")).as("__c"),
+        max(col("__n")).as("__nn"))
+    val minDim = least(col("__r"), col("__c"))
+    agg.select(
+      coalesce(col("__nn"), lit(0L)).as("n"),
+      col("__r").cast(IntegerType).as("r_levels"),
+      col("__c").cast(IntegerType).as("c_levels"),
+      coalesce(col("__chi2").cast(DoubleType), lit(0.0)).as("chi2"),
+      when(minDim > 1 && col("__nn") > 0,
+        round(sqrt(col("__chi2").cast(DoubleType) /
+          (col("__nn") * (minDim - 1)).cast(DoubleType)), 6))
+        .otherwise(lit(null).cast(DoubleType)).as("cramers_v"))
   }
 
   /** COHEN'S KAPPA inter-rater agreement (Cohen 1960, "A coefficient of
@@ -862,80 +839,72 @@ object Profile {
     * discipline; the count is also the job that materializes the cache). */
   def cohenKappa(df: DataFrame, aCol: String, bCol: String,
                  weighting: String = "none",
-                 maxLevels: Int = 1000): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
+                 maxLevels: Int = 1000): DataFrame = Residency.eager { s =>
     require(Seq("none", "linear", "quadratic").contains(weighting),
       s"weighting must be one of none|linear|quadratic, got '$weighting'")
     require(maxLevels >= 1, s"maxLevels must be >= 1, got $maxLevels")
     val base = df.select(q(aCol).cast(StringType).as("__a"),
         q(bCol).cast(StringType).as("__b"))
       .filter(col("__a").isNotNull && col("__b").isNotNull)
-    val obs = base.groupBy("__a", "__b").agg(count(lit(1)).as("__o"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    graft.util.Caching.releasingOnFailure(obs) {
-      val labels = obs.select(col("__a").as("__lab"))
-        .union(obs.select(col("__b").as("__lab"))).distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      graft.util.Caching.releasingOnFailure(labels) {
-        // fail-fast guard action — also materializes obs + labels, so
-        // everything below is pure cache reads (the cramersV pattern)
-        val nLabels = labels.count()
-        require(nLabels <= maxLevels,
-          s"cohenKappa('$aCol', '$bCol') sees $nLabels distinct labels " +
-            s"(> $maxLevels) — κ is a CATEGORICAL agreement statistic; " +
-            "recode high-cardinality verdicts first, or raise maxLevels " +
-            "deliberately")
-        val d19 = DecimalType(19, 0)
-        val d38 = DecimalType(38, 0)
-        // ascending-label ordinal without a global window: rank(l) =
-        // #{m ≤ l} over the level-sized label set (bounded by the guard)
-        val ranked = labels.select(col("__lab").as("__xl"))
-          .join(labels.select(col("__lab").as("__yl")),
-            col("__yl") <= col("__xl"))
-          .groupBy(col("__xl")).agg(count(lit(1)).as("__idx"))
-        def w(i: Column, j: Column): Column = weighting match {
-          case "none"      => when(i === j, lit(0L)).otherwise(lit(1L))
-          case "linear"    => abs(i - j).cast(LongType)
-          case "quadratic" => ((i - j) * (i - j)).cast(LongType)
-        }
-        val ra = obs.groupBy("__a").agg(sum(col("__o")).as("__rt"))
-        val cb = obs.groupBy("__b").agg(sum(col("__o")).as("__ct"))
-        // margins on the union label set: absent labels carry 0
-        val rm = ranked.join(ra, col("__xl") === col("__a"), "left")
-          .select(col("__idx").as("__ia"),
-            coalesce(col("__rt"), lit(0L)).as("__r"))
-        val cm = ranked.join(cb, col("__xl") === col("__b"), "left")
-          .select(col("__idx").as("__ib"),
-            coalesce(col("__ct"), lit(0L)).as("__c"))
-        // chance mass Σ w·r·c over the level² grid (level-sized cross)
-        val wexp = rm.crossJoin(cm)
-          .select((w(col("__ia"), col("__ib")).cast(d19) *
-            col("__r").cast(d19) * col("__c").cast(d19)).cast(d38)
-            .as("__t"))
-          .agg(sum(col("__t")).as("__wexp"))
-        val obsIdx = obs
-          .join(ranked.select(col("__xl").as("__a"),
-            col("__idx").as("__ia")), Seq("__a"))
-          .join(ranked.select(col("__xl").as("__b"),
-            col("__idx").as("__ib")), Seq("__b"))
-        val sums = obsIdx.agg(
-          sum(col("__o")).as("__n"),
-          sum(when(col("__a") === col("__b"), col("__o"))
-            .otherwise(lit(0L))).as("__agree"),
-          sum((w(col("__ia"), col("__ib")).cast(d19) *
-            col("__o").cast(d19)).cast(d38)).as("__wobs"))
-        val out = sums.crossJoin(broadcast(wexp)).select(
-          coalesce(col("__n"), lit(0L)).cast(LongType).as("n"),
-          lit(nLabels).cast(IntegerType).as("levels"),
-          coalesce(col("__agree"), lit(0L)).cast(LongType).as("agree"),
-          when(col("__wexp").isNotNull && col("__wexp") > 0,
-            round(lit(1.0) -
-              (col("__n").cast(d38) * col("__wobs")).cast(DoubleType) /
-                col("__wexp").cast(DoubleType), 6))
-            .otherwise(lit(null).cast(DoubleType)).as("kappa"))
-        graft.util.Caching.materializeAndRelease(out, obs, labels)
-      }
+    val obs = s.persist(base.groupBy("__a", "__b").agg(count(lit(1)).as("__o")))
+    val labels = s.persist(obs.select(col("__a").as("__lab"))
+      .union(obs.select(col("__b").as("__lab"))).distinct())
+    // fail-fast guard action — also materializes obs + labels, so
+    // everything below is pure cache reads (the cramersV pattern)
+    val nLabels = labels.count()
+    require(nLabels <= maxLevels,
+      s"cohenKappa('$aCol', '$bCol') sees $nLabels distinct labels " +
+        s"(> $maxLevels) — κ is a CATEGORICAL agreement statistic; " +
+        "recode high-cardinality verdicts first, or raise maxLevels " +
+        "deliberately")
+    val d19 = DecimalType(19, 0)
+    val d38 = DecimalType(38, 0)
+    // ascending-label ordinal without a global window: rank(l) =
+    // #{m ≤ l} over the level-sized label set (bounded by the guard)
+    val ranked = labels.select(col("__lab").as("__xl"))
+      .join(labels.select(col("__lab").as("__yl")),
+        col("__yl") <= col("__xl"))
+      .groupBy(col("__xl")).agg(count(lit(1)).as("__idx"))
+    def w(i: Column, j: Column): Column = weighting match {
+      case "none"      => when(i === j, lit(0L)).otherwise(lit(1L))
+      case "linear"    => abs(i - j).cast(LongType)
+      case "quadratic" => ((i - j) * (i - j)).cast(LongType)
     }
+    val ra = obs.groupBy("__a").agg(sum(col("__o")).as("__rt"))
+    val cb = obs.groupBy("__b").agg(sum(col("__o")).as("__ct"))
+    // margins on the union label set: absent labels carry 0
+    val rm = ranked.join(ra, col("__xl") === col("__a"), "left")
+      .select(col("__idx").as("__ia"),
+        coalesce(col("__rt"), lit(0L)).as("__r"))
+    val cm = ranked.join(cb, col("__xl") === col("__b"), "left")
+      .select(col("__idx").as("__ib"),
+        coalesce(col("__ct"), lit(0L)).as("__c"))
+    // chance mass Σ w·r·c over the level² grid (level-sized cross)
+    val wexp = rm.crossJoin(cm)
+      .select((w(col("__ia"), col("__ib")).cast(d19) *
+        col("__r").cast(d19) * col("__c").cast(d19)).cast(d38)
+        .as("__t"))
+      .agg(sum(col("__t")).as("__wexp"))
+    val obsIdx = obs
+      .join(ranked.select(col("__xl").as("__a"),
+        col("__idx").as("__ia")), Seq("__a"))
+      .join(ranked.select(col("__xl").as("__b"),
+        col("__idx").as("__ib")), Seq("__b"))
+    val sums = obsIdx.agg(
+      sum(col("__o")).as("__n"),
+      sum(when(col("__a") === col("__b"), col("__o"))
+        .otherwise(lit(0L))).as("__agree"),
+      sum((w(col("__ia"), col("__ib")).cast(d19) *
+        col("__o").cast(d19)).cast(d38)).as("__wobs"))
+    sums.crossJoin(broadcast(wexp)).select(
+      coalesce(col("__n"), lit(0L)).cast(LongType).as("n"),
+      lit(nLabels).cast(IntegerType).as("levels"),
+      coalesce(col("__agree"), lit(0L)).cast(LongType).as("agree"),
+      when(col("__wexp").isNotNull && col("__wexp") > 0,
+        round(lit(1.0) -
+          (col("__n").cast(d38) * col("__wobs")).cast(DoubleType) /
+            col("__wexp").cast(DoubleType), 6))
+        .otherwise(lit(null).cast(DoubleType)).as("kappa"))
   }
 
   /** PHI-K categorical/interval association (Baak, Koopman, Snoek &
@@ -979,15 +948,13 @@ object Profile {
     * Model-artifact-sized driver work, never row-scaled. */
   def phik(df: DataFrame, aCol: String, bCol: String,
            maxGridCells: Long = 10000L): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     require(maxGridCells >= 1, s"maxGridCells must be >= 1, got $maxGridCells")
     val spark = df.sparkSession
     val base = df.select(q(aCol).cast(StringType).as("__a"),
         q(bCol).cast(StringType).as("__b"))
       .filter(col("__a").isNotNull && col("__b").isNotNull)
-    val obs = base.groupBy("__a", "__b").agg(count(lit(1)).as("__o"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val cells = graft.util.Caching.releasingOnFailure(obs) {
+    val cells = Residency.scoped { s =>
+      val obs = s.persist(base.groupBy("__a", "__b").agg(count(lit(1)).as("__o")))
       // the level guard fires BEFORE the driver collect — on a
       // high-cardinality pair the cell set itself is the thing that
       // must never reach the driver (one combined distinct-count
@@ -1001,10 +968,7 @@ object Profile {
           s"($rl × $cl cells > $maxGridCells) — φk is a CATEGORICAL " +
           "association; bucket or recode high-cardinality columns " +
           "first, or raise maxGridCells deliberately")
-      val c = obs.collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-      obs.unpersist(blocking = true)
-      c
+      obs.collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
     }
     val aLevels = cells.map(_._1).distinct.sorted
     val bLevels = cells.map(_._2).distinct.sorted
@@ -1154,8 +1118,8 @@ object Profile {
     * binning convention — identical to the pairwise-complete form
     * whenever the columns are null/NaN-free). Labels are the identical
     * zero-padded ascending format. Returns the binned frame
-    * (__b0 … __bN in `cols` order), PERSISTED — caller unpersists. */
-  private[profile] def quantileBinnedColumns(df: DataFrame,
+    * (__b0 … __bN in `cols` order), persisted in the caller's scope. */
+  private[profile] def quantileBinnedColumns(s: Residency.Scope, df: DataFrame,
       cols: Seq[String], bins: Int): DataFrame = {
     require(bins >= 2 && bins <= 1000, s"bins must be in [2, 1000], got $bins")
     require(cols.nonEmpty, "quantileBinnedColumns needs columns")
@@ -1172,10 +1136,9 @@ object Profile {
       when(col(s"__x$i").isNotNull,
         format_string(s"b%0${math.max(3, bins.toString.length)}d", idx))
     }
-    val binned = base
+    s.persist(base
       .crossJoin(broadcast(base.agg(cutAggs.head, cutAggs.tail: _*)))
-      .select(cols.indices.map(i => bucket(i).as(s"__b$i")): _*)
-    binned.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(cols.indices.map(i => bucket(i).as(s"__b$i")): _*))
   }
 
   /** The HASH-CERTIFIABLE layer of [[phikBinned]]: the SAME quantile

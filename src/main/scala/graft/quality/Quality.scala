@@ -2,6 +2,7 @@ package graft.quality
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.util.Residency
 
 /** Data-quality gates (SURVEY.md §2.8 A3–A5).
   *
@@ -518,9 +519,9 @@ object Quality {
       .filter(col("v").isNotNull)
     val counts = u.groupBy("v").agg(sum("ga").as("ca"), sum("gb").as("cb"))
     val tot = counts.agg(sum("ca").as("n_a"), sum("cb").as("n_b"))
-    val cum = graft.ops.Scan.prefixSums(counts, Seq(col("v").asc), Seq("ca", "cb"))
-    graft.util.Caching.reshapeAndRelease(cum) { c =>
-      c.crossJoin(broadcast(tot))
+    Residency.eager { s =>
+      s.adopt(graft.ops.Scan.prefixSums(counts, Seq(col("v").asc), Seq("ca", "cb")))
+        .crossJoin(broadcast(tot))
         .groupBy("n_a", "n_b")
         // try_divide: a 0-total side divides by zero under ANSI otherwise
         .agg(max(abs(try_divide(col("ca_cum").cast("double"), col("n_a")) -
@@ -612,31 +613,28 @@ object Quality {
     * everything in bucket 0. NULLs carry no ordering evidence and are
     * dropped on both sides — mirror of the oracle's IS NOT NULL. */
   def quantileBucketDrift(a: DataFrame, b: DataFrame, valueCol: String,
-                          nBuckets: Int = 10): DataFrame = {
+                          nBuckets: Int = 10): DataFrame = Residency.eager { s =>
     require(nBuckets >= 2, s"need nBuckets >= 2, got $nBuckets")
     val av = a.select(col(valueCol).as("v")).filter(col("v").isNotNull)
     val counts = av.groupBy("v").agg(count(lit(1)).as("c"))
-    val cum = graft.ops.Scan.prefixSums(counts, Seq(col("v").asc), Seq("c"))
-    graft.util.Caching.releasingOnFailure(cum) {
-      val tot = cum.agg(max("c_cum").as("n"))
-      val ids = a.sparkSession.range(1, nBuckets).toDF("i")
-      // c_cum ≥ ⌈i·n/nB⌉  ⟺  c_cum·nB ≥ i·n (integers) — no division
-      val boundRows = cum.crossJoin(broadcast(tot)).crossJoin(broadcast(ids))
-        .filter(col("c_cum") * nBuckets >= col("i") * col("n"))
-        .groupBy("i").agg(min("v").as("bv"))
-      val wideAggs = (1 until nBuckets).map(i =>
-        max(when(col("i") === i, col("bv"))).as(s"__b$i"))
-      val wide = boundRows.agg(wideAggs.head, wideAggs.tail: _*)
-      val bucket = (1 until nBuckets).map(i =>
-          when(col("v") > col(s"__b$i"), 1L).otherwise(0L))
-        .reduce(_ + _).as("bucket")
-      def bucketize(side: DataFrame): DataFrame =
-        side.select(col(valueCol).as("v")).filter(col("v").isNotNull)
-          .crossJoin(broadcast(wide))
-          .select(bucket)
-      val out = chiSquareDrift(bucketize(a), bucketize(b), "bucket")
-      graft.util.Caching.materializeAndRelease(out, cum)
-    }
+    val cum = s.adopt(graft.ops.Scan.prefixSums(counts, Seq(col("v").asc), Seq("c")))
+    val tot = cum.agg(max("c_cum").as("n"))
+    val ids = a.sparkSession.range(1, nBuckets).toDF("i")
+    // c_cum ≥ ⌈i·n/nB⌉  ⟺  c_cum·nB ≥ i·n (integers) — no division
+    val boundRows = cum.crossJoin(broadcast(tot)).crossJoin(broadcast(ids))
+      .filter(col("c_cum") * nBuckets >= col("i") * col("n"))
+      .groupBy("i").agg(min("v").as("bv"))
+    val wideAggs = (1 until nBuckets).map(i =>
+      max(when(col("i") === i, col("bv"))).as(s"__b$i"))
+    val wide = boundRows.agg(wideAggs.head, wideAggs.tail: _*)
+    val bucket = (1 until nBuckets).map(i =>
+        when(col("v") > col(s"__b$i"), 1L).otherwise(0L))
+      .reduce(_ + _).as("bucket")
+    def bucketize(side: DataFrame): DataFrame =
+      side.select(col(valueCol).as("v")).filter(col("v").isNotNull)
+        .crossJoin(broadcast(wide))
+        .select(bucket)
+    chiSquareDrift(bucketize(a), bucketize(b), "bucket")
   }
 
   /** Population Stability Index over a [[chiSquareDrift]] contingency
@@ -869,7 +867,7 @@ object Quality {
     * per-group single-task window), with group offsets derived from the
     * persisted prefix frame (constant-size running sum over |groups|
     * rows). Returns (group, n, p<p1>, p<p2>, ...), persisted
-    * group-sized per the reshapeAndRelease caller contract. */
+    * group-sized under the eager family's caller-unpersist contract. */
   def exactPercentiles(df: DataFrame, g: String, v: String,
                        percentiles: Seq[Int]): DataFrame = {
     require(percentiles.nonEmpty, "exactPercentiles needs at least one p")
@@ -879,10 +877,9 @@ object Quality {
       s"percentiles must be distinct, got $percentiles")
     val counts = df.filter(col(v).isNotNull)
       .groupBy(col(g), col(v)).agg(count(lit(1)).as("__c"))
-    val cum = graft.ops.Scan.prefixSums(counts,
-      Seq(col(g).asc, col(v).asc), Seq("__c"))
-    graft.util.Caching.reshapeAndRelease(cum) { c =>
-      percentileReport(c, g, v, percentiles)
+    Residency.eager { s =>
+      percentileReport(s.adopt(graft.ops.Scan.prefixSums(counts,
+        Seq(col(g).asc, col(v).asc), Seq("__c"))), g, v, percentiles)
     }
   }
 
@@ -919,45 +916,39 @@ object Quality {
     * deviations is unchanged by pre-aggregation, and `dev` is the same
     * single IEEE subtract/abs, so both statistics are bit-identical to
     * the unfused form; QualitySpec pins it). The pass-2 input reads the
-    * pass-1 cache through a lineage-truncating wrapper ([[graft.dedup
-    * .Dedup.duplicateClusters]]'s `truncated` discipline): each eager
-    * sub-operation otherwise re-analyzes the whole accumulated tree, and
-    * the measured a19/a20 warm cost was ~half Catalyst planning of
-    * 40k-line nested plans. Returns (meds(g, med, n), mads(g, mad)) —
-    * persisted group-sized frames under the family's caller-unpersist
-    * contract. */
-  private def lowerMedianPair(df: DataFrame, g: String,
+    * pass-1 cache through a lineage cut ([[graft.util.Residency.Scope
+    * .truncate]]): each eager sub-operation otherwise re-analyzes the
+    * whole accumulated tree, and the measured a19/a20 warm cost was ~half
+    * Catalyst planning of 40k-line nested plans. Returns (meds(g, med,
+    * n), mads(g, mad)) — cuts over group-sized frames persisted in `s`,
+    * so they are resident until the caller's scope materializes its
+    * result and exits. */
+  private def lowerMedianPair(s: Residency.Scope, df: DataFrame, g: String,
                               v: String): (DataFrame, DataFrame) = {
-    val spark = df.sparkSession
-    def truncated(d: DataFrame): DataFrame =
-      spark.createDataFrame(d.rdd, d.schema)
     val counts = df.filter(col(v).isNotNull)
       .groupBy(col(g), col(v)).agg(count(lit(1)).as("__c"))
-    val cum = graft.ops.Scan.prefixSums(counts,
-      Seq(col(g).asc, col(v).asc), Seq("__c"))
-    graft.util.Caching.releasingOnFailure(cum) {
-      val meds = graft.util.Caching.materializeAndRelease(
-        percentileReport(cum, g, v, Seq(50))
-          .select(col(g), col("p50").as("med"), col("n")))
-      graft.util.Caching.releasingOnFailure(meds) {
-        // weighted deviation counts from the PERSISTED prefix frame —
-        // value-cardinality-sized; the corpus is never re-scanned
-        val devCounts = truncated(cum).select(col(g), col(v), col("__c"))
-          .join(broadcast(truncated(meds).select(col(g), col("med"))), g)
-          .select(col(g), abs(col(v) - col("med")).as("__dev"), col("__c"))
-          .groupBy(col(g), col("__dev")).agg(sum(col("__c")).as("__c"))
-        val cum2 = graft.ops.Scan.prefixSums(devCounts,
-          Seq(col(g).asc, col("__dev").asc), Seq("__c"))
-        cum.unpersist(blocking = true) // cum2 is materialized; pass 1 done
-        val mads = graft.util.Caching.materializeAndRelease(
-          percentileReport(cum2, g, "__dev", Seq(50))
-            .select(col(g), col("p50").as("mad")), cum2)
-        // hand back lineage-truncated views reading the two persisted
-        // frames: the consumers' final plans then analyze two RDD leaves
-        // instead of the full nested eager-pipeline trees
-        (truncated(meds), truncated(mads))
-      }
-    }
+    val cum = s.adopt(graft.ops.Scan.prefixSums(counts,
+      Seq(col(g).asc, col(v).asc), Seq("__c")))
+    val meds = s.persist(percentileReport(cum, g, v, Seq(50))
+      .select(col(g), col("p50").as("med"), col("n")))
+    meds.count()
+    // weighted deviation counts from the PERSISTED prefix frame —
+    // value-cardinality-sized; the corpus is never re-scanned
+    val devCounts = s.truncate(cum).select(col(g), col(v), col("__c"))
+      .join(broadcast(s.truncate(meds).select(col(g), col("med"))), g)
+      .select(col(g), abs(col(v) - col("med")).as("__dev"), col("__c"))
+      .groupBy(col(g), col("__dev")).agg(sum(col("__c")).as("__c"))
+    val cum2 = s.adopt(graft.ops.Scan.prefixSums(devCounts,
+      Seq(col(g).asc, col("__dev").asc), Seq("__c")))
+    s.release(cum) // cum2 is materialized; pass 1 done
+    val mads = s.persist(percentileReport(cum2, g, "__dev", Seq(50))
+      .select(col(g), col("p50").as("mad")))
+    mads.count()
+    s.release(cum2)
+    // hand back lineage cuts reading the two persisted frames: the
+    // consumers' final plans then analyze two RDD leaves instead of the
+    // full nested eager-pipeline trees
+    (s.truncate(meds), s.truncate(mads))
   }
 
   /** Robust outlier gate on the median/MAD scale (Hampel's rule, public
@@ -970,13 +961,13 @@ object Quality {
     *
     * Scale shape: two prefix-scan median passes over (group, value)
     * AGGREGATES, two broadcast joins of group-sized statistics frames —
-    * the corpus itself is never window-sorted or reshuffled. The two
-    * tiny statistics frames stay persisted (group-count rows) under the
-    * operator family's caller-unpersist contract. */
+    * the corpus itself is never window-sorted or reshuffled. EAGER +
+    * caller unpersist: the result is materialized through the two tiny
+    * statistics frames, which are released before return. */
   def madOutliers(df: DataFrame, groupCol: String, valueCol: String,
-                  k: Double = 2.0): DataFrame = {
+                  k: Double = 2.0): DataFrame = Residency.eager { s =>
     require(k > 0, s"k must be > 0, got $k")
-    val (meds, mads) = lowerMedianPair(df, groupCol, valueCol)
+    val (meds, mads) = lowerMedianPair(s, df, groupCol, valueCol)
     df.filter(col(valueCol).isNotNull)
       .join(broadcast(meds.select(col(groupCol), col("med"))), groupCol)
       .withColumn("dev", abs(col(valueCol) - col("med")))
@@ -989,9 +980,11 @@ object Quality {
     * both statistics exact lower medians ([[lowerMedianPair]]) — the
     * audit-face companion of [[madOutliers]] (same two prefix-scan
     * passes, no per-row output). Unlike mean/stddev, one corrupted
-    * extreme value moves neither number. */
-  def robustStats(df: DataFrame, groupCol: String, valueCol: String): DataFrame = {
-    val (meds, mads) = lowerMedianPair(df, groupCol, valueCol)
+    * extreme value moves neither number. EAGER + caller unpersist, as
+    * [[madOutliers]]. */
+  def robustStats(df: DataFrame, groupCol: String,
+                  valueCol: String): DataFrame = Residency.eager { s =>
+    val (meds, mads) = lowerMedianPair(s, df, groupCol, valueCol)
     // n comes out of the median pass (sum of the per-value counts — the
     // same non-null row count the previous corpus re-aggregate computed),
     // so this face never scans the corpus a third time

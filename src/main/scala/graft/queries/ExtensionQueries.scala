@@ -8,6 +8,7 @@ import graft.multimodal.Multimodal
 import graft.sim.{Ivf, Similarity}
 import graft.streaming.Sessionize
 import graft.text.TextOps
+import graft.util.Residency
 
 /** LLM-training-data pipeline operators as named queries over the
   * `documents` / `embeddings` / `events` test tables. SQL-expressible ops
@@ -227,20 +228,19 @@ object ExtensionQueries {
     * [[graft.quality.Quality.groupPercentRank]] (distinct-value windows,
     * broadcast back); every number is rational-over-counts + round-6, so
     * the whole fusion hash-checks. */
-  private val txtQualityEnsemble: Q = (s, dir) => {
+  private val txtQualityEnsemble: Q = (s, dir) => Residency.eager { scope =>
     // Spread before the heavy signal expressions (single-row-group scan
     // = one task otherwise), and PERSIST the scored base: it feeds three
     // consumers (both rank tables + the final join), which each
     // recomputed the signal expressions over the whole corpus — nested
     // groupPercentRank calls were worse still (measured 13.7 s vs ~2 s
     // at sf0.1 for that shape). Released after the result materializes.
-    val base = graft.util.Spread.forMapWork(
+    val base = scope.persist(graft.util.Spread.forMapWork(
         t(s, dir, "documents").select(col("doc_id"), col("text")))
       .select(col("doc_id"),
         TextOps.qualityScore(col("text")).as("quality"),
         TextOps.stopwordRatio(col("text")).as("sw_ratio"))
-      .withColumn("g", lit(0))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("g", lit(0)))
     val rq = graft.quality.Quality.percentRankTable(base, "g", "quality")
       .withColumnRenamed("pctile", "pct_q")
     val rs = graft.quality.Quality.percentRankTable(base, "g", "sw_ratio")
@@ -250,12 +250,11 @@ object ExtensionQueries {
     // the engines' decimal-rounding of the binary double disagree — the
     // cross-engine boundary hazard. IEEE add/divide on identical inputs
     // is bit-identical, so the raw double IS the stable contract.
-    val out = base.join(broadcast(rq), Seq("g", "quality"))
+    base.join(broadcast(rq), Seq("g", "quality"))
       .join(broadcast(rs), Seq("g", "sw_ratio"))
       .select(col("doc_id"), col("quality"), col("sw_ratio"),
         col("pct_q"), col("pct_sw"),
         ((col("pct_q") + col("pct_sw")) / 2).as("ensemble"))
-    graft.util.Caching.materializeAndRelease(out, base)
   }
 
   /** Per-source percent rank of the quality score via
@@ -2229,15 +2228,15 @@ object ExtensionQueries {
     // Distributed token-intersection Jaccard (value-identical to the
     // per-pair ngramJaccard expression, ~10× faster when every pair's
     // value is actually evaluated — which the threshold filter forces).
-    val pairs = Dedup.consecutiveTokenJaccardPairs(d, "text", "doc_id",
-      threshold = 0.7)
-    val out = Dedup.duplicateClusters(d.select(col("doc_id")), "doc_id",
-      pairs.select("id_a", "id_b"))
-    pairs.unpersist(blocking = true) // edges were materialized by the loop
-    // reshapeAndRelease: the computed `kept` column makes this projection
-    // NOT a canonical no-op, so unpersisting the wrapper would miss the
-    // persisted label frame (the emb_semantic_dedup leak class)
-    graft.util.Caching.reshapeAndRelease(out) { labels =>
+    Residency.eager { scope =>
+      val pairs = scope.adopt(Dedup.consecutiveTokenJaccardPairs(d, "text", "doc_id",
+        threshold = 0.7))
+      val labels = scope.adopt(Dedup.duplicateClusters(d.select(col("doc_id")), "doc_id",
+        pairs.select("id_a", "id_b")))
+      scope.release(pairs) // edges were materialized by the loop
+      // the computed `kept` column makes this projection NOT a canonical
+      // no-op, so unpersisting the wrapper would miss the persisted label
+      // frame: the projection itself is the returned persisted frame
       labels.select(col("id").as("doc_id"), col("cluster").as("cluster_id"),
         (col("id") === col("cluster")).as("kept"))
     }
@@ -2264,9 +2263,9 @@ object ExtensionQueries {
     // rename-only projections happen to canonicalize to a no-op (so the
     // wrapper's unpersist finds the cached plan), but that is a fragile
     // subtlety to depend on — reshape explicitly like the rest
-    graft.util.Caching.reshapeAndRelease(
-      Dedup.duplicateClusters(nodes, "doc_id", pairs)) { labels =>
-      labels.select(col("id").as("doc_id"), col("cluster").as("cluster_id"))
+    Residency.eager { scope =>
+      scope.adopt(Dedup.duplicateClusters(nodes, "doc_id", pairs))
+        .select(col("id").as("doc_id"), col("cluster").as("cluster_id"))
     }
   }
 
@@ -2356,14 +2355,14 @@ object ExtensionQueries {
     val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
     val planted = emb.filter(col("vec_id") % 10 === 0)
       .select((col("vec_id") + 10000).as("vec_id"), col("embedding"))
-    // reshapeAndRelease: the cast/rename projection must itself be the
-    // persisted frame, or a caller's unpersist() silently misses the
-    // operator's cached result (Dataset.unpersist matches exact plans).
-    graft.util.Caching.reshapeAndRelease(
-      graft.sim.SemDedup.semanticDedup(emb.unionByName(planted),
-        threshold = 0.95, nlist = 8)) { sd =>
-      sd.select(col("id").as("vec_id"), col("dup_group"),
-        col("keep").cast(IntegerType).as("keep"))
+    // the cast/rename projection must itself be the persisted frame, or
+    // a caller's unpersist() silently misses the operator's cached result
+    // (Dataset.unpersist matches exact plans)
+    Residency.eager { scope =>
+      scope.adopt(graft.sim.SemDedup.semanticDedup(emb.unionByName(planted),
+          threshold = 0.95, nlist = 8))
+        .select(col("id").as("vec_id"), col("dup_group"),
+          col("keep").cast(IntegerType).as("keep"))
     }
   }
 
@@ -3378,7 +3377,7 @@ object ExtensionQueries {
   /** [[simRpTopk]]'s exactness pin: shortlist = Int.MaxValue keeps every
     * candidate through the reduced-space ranking, so the rerank sees the
     * full corpus and the result is provably brute force — the whole RP
-    * plumbing (portable reduce, long-exact shortlist ranking, heap
+    * plumbing (portable reduce, long-exact window shortlist ranking,
     * rerank) runs and hash-checks against the brute-force oracle. */
   private val simRpExact: Q = (s, dir) => {
     val emb = t(s, dir, "embeddings")
@@ -3581,15 +3580,13 @@ object ExtensionQueries {
       .select((col("doc_id") + 100000).as("doc_id"),
         concat(col("text"), lit(" zq")).as("text"))
     val corpus = docs.unionByName(planted)
-    val pairs = Dedup.winnowNearDups(corpus, "text", "doc_id",
-      shingleK = 15, window = 20, minShared = 2)
-    try {
-      graft.util.Caching.reshapeAndRelease(
-        Dedup.duplicateClusters(corpus.select(col("doc_id")), "doc_id",
-          pairs.select(col("id_a"), col("id_b")))) { labels =>
-        labels.select(col("id").as("doc_id"), col("cluster").as("cluster_id"))
-      }
-    } finally pairs.unpersist(blocking = true)
+    Residency.eager { scope =>
+      val pairs = scope.adopt(Dedup.winnowNearDups(corpus, "text", "doc_id",
+        shingleK = 15, window = 20, minShared = 2))
+      scope.adopt(Dedup.duplicateClusters(corpus.select(col("doc_id")), "doc_id",
+          pairs.select(col("id_a"), col("id_b"))))
+        .select(col("id").as("doc_id"), col("cluster").as("cluster_id"))
+    }
   }
 
   /** Stored winnow-index probe — the STEADY-STATE form of [[ddWinnow]]

@@ -10,6 +10,7 @@ import graft.io.{Sinks, Sources}
 import graft.ops.Ops
 import graft.profile.Profile
 import graft.quality.Quality
+import graft.util.Residency
 
 /** SURVEY.md §2 operator inventory as named, DuckDB-oracle-checked queries.
   *
@@ -618,11 +619,11 @@ object RelationalQueries {
     * through a handful of IEEE ops at ROUND 6 — hash-green against the
     * single-window DuckDB replay, where corr() over rank doubles would
     * be partition-order noise. */
-  private val pr14Spearman: Q = (s, dir) => {
+  private val pr14Spearman: Q = (s, dir) => Residency.eager { scope =>
     val li = t(s, dir, "lineitem")
-    Profile.spearman(li, "l_quantity", "l_extendedprice")
+    scope.adopt(Profile.spearman(li, "l_quantity", "l_extendedprice"))
       .select(col("n"), col("rho").as("rho_qty_price"))
-      .crossJoin(Profile.spearman(li, "l_discount", "l_tax")
+      .crossJoin(scope.adopt(Profile.spearman(li, "l_discount", "l_tax"))
         .select(col("rho").as("rho_disc_tax")))
   }
 
@@ -1142,10 +1143,9 @@ object RelationalQueries {
         "id", "id", "name", "name", q = 3, maxDist = 1)
       .filter(col("left_id") < col("right_id"))
       .select(col("left_id").as("id_a"), col("right_id").as("id_b"))
-    graft.util.Caching.reshapeAndRelease(
-      graft.dedup.Dedup.duplicateClusters(entities.select("id"), "id", pairs)) {
-      labels =>
-        labels.select(col("id"), col("cluster").as("cluster_id"),
+    Residency.eager { scope =>
+      scope.adopt(graft.dedup.Dedup.duplicateClusters(entities.select("id"), "id", pairs))
+        .select(col("id"), col("cluster").as("cluster_id"),
           (col("id") === col("cluster")).cast(IntegerType).as("kept"))
     }
   }
@@ -1286,12 +1286,13 @@ object RelationalQueries {
     * exact lower medians (order statistics — bit-portable, computed by
     * distributed prefix scan, never a per-group window sort). The whole
     * report — median, deviation, MAD and the flag — is hash-checked. */
-  private val a19MadOutliers: Q = (s, dir) =>
-    graft.quality.Quality.madOutliers(
+  private val a19MadOutliers: Q = (s, dir) => Residency.eager { scope =>
+    scope.adopt(graft.quality.Quality.madOutliers(
         t(s, dir, "orders").select("o_orderkey", "o_orderstatus", "o_totalprice"),
-        "o_orderstatus", "o_totalprice", k = 2.0)
+        "o_orderstatus", "o_totalprice", k = 2.0))
       .filter(col("outlier") === 1)
       .select("o_orderkey", "o_orderstatus", "o_totalprice", "med", "dev", "mad")
+  }
 
   /** A20 — robust per-status location/scale summary (n, lower median,
     * MAD): the audit face of [[a19MadOutliers]]. */

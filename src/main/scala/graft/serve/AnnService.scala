@@ -149,19 +149,19 @@ object AnnService {
     // leaves parked partitions a REWRITE recovery restores
     graft.io.Sinks.recoverCrashedSwap(spark, dir)
     graft.io.Sinks.recoverCrashedRewrite(spark, dir)
-    val ids = removedIds.select(col(idCol).as("cand_id"))
-      .dropDuplicates("cand_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    graft.util.Residency.scoped { s =>
+      val ids = s.persist(removedIds.select(col(idCol).as("cand_id"))
+        .dropDuplicates("cand_id"))
       val touched = spark.read.parquet(dir).select("cand_id", "cell")
         .join(broadcast(ids), Seq("cand_id"), "left_semi")
         .select("cell").distinct().collect().map(_.getInt(0)).sorted
-      if (touched.isEmpty) return
-      val tl = touched.map(Int.box)
-      val scan = spark.read.parquet(dir).filter(col("cell").isin(tl: _*))
-      graft.io.Sinks.rewritePartitions(spark, dir, "cell", touched,
-        scan.join(broadcast(ids), Seq("cand_id"), "left_anti"))
-    } finally ids.unpersist()
+      if (touched.nonEmpty) {
+        val tl = touched.map(Int.box)
+        val scan = spark.read.parquet(dir).filter(col("cell").isin(tl: _*))
+        graft.io.Sinks.rewritePartitions(spark, dir, "cell", touched,
+          scan.join(broadcast(ids), Seq("cand_id"), "left_anti"))
+      }
+    }
   }
 
   /** The unpartitioned-thin-layout takedown shared by the flat-PQ and

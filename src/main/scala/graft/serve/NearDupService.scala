@@ -3,6 +3,7 @@ package graft.serve
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.dedup.Dedup
+import graft.util.Residency
 
 /** STORED near-duplicate index — the MinHash-LSH family brought to the
   * same uniform stored-layout lifecycle as the ANN tiers
@@ -143,10 +144,9 @@ object NearDupService {
     // jobs and run concurrently (guide §2.6); bucket values are
     // identical (same rows either way — the parquet round trip preserved
     // them bit-for-bit).
-    val sigs = Dedup.minHashSignatures(df, textCol, idCol,
-        bands * rowsPerBand, shingleK)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Residency.scoped { s =>
+      val sigs = s.persist(Dedup.minHashSignatures(df, textCol, idCol,
+        bands * rowsPerBand, shingleK))
       sigs.queryExecution.toRdd.count() // materialize before the overlap
       graft.util.Parallel.par2(spark)(
         () => oneFilePerGroup(
@@ -157,7 +157,7 @@ object NearDupService {
             groups), "bgrp")
           .write.mode("overwrite").partitionBy("bgrp")
           .parquet(s"$root/buckets"))
-    } finally sigs.unpersist(blocking = true)
+    }
     Seq((bands, rowsPerBand, shingleK, groups))
       .toDF("bands", "rows_per_band", "shingle_k", "groups")
       .coalesce(1).write.mode("overwrite").parquet(s"$root/meta")
@@ -173,7 +173,13 @@ object NearDupService {
     * PRECONDITION (the [[SearchService.appendDelta]] posture): delta ids
     * are NEW — re-ingesting a live id leaves two signature rows for it
     * and the probe would report both. Use [[removeFromIndex]] first for
-    * updates. */
+    * updates.
+    *
+    * Crash order: bucket rows are appended only AFTER the signature
+    * append finished. [[removeFromIndex]] derives a removed id's bucket
+    * partitions from its STORED signature, so a failure between the two
+    * appends leaves signatures without buckets — which a takedown of the
+    * batch ids clears — never bucket rows no takedown can find. */
   def appendDelta(df: DataFrame, textCol: String, idCol: String,
                   root: String): Unit = {
     val spark = df.sparkSession
@@ -185,24 +191,18 @@ object NearDupService {
     graft.io.Sinks.recoverCrashedSwap(spark, s"$root/signatures")
     graft.io.Sinks.recoverCrashedSwap(spark, s"$root/buckets")
     val m = readMeta(spark, root)
-    val sigs = Dedup.minHashSignatures(df, textCol, idCol,
-      m.bands * m.rowsPerBand, m.shingleK)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // materialize the shared signature cache once, then the two
-      // dataset appends are independent jobs — run them concurrently
-      // (guide §2.6, the buildIndex shape)
-      sigs.queryExecution.toRdd.count()
-      graft.util.Parallel.par2(spark)(
-        () => oneFilePerGroup(
-            sigs.withColumn("idgrp", idGrp(col("id"), m.groups)), "idgrp")
-          .write.mode("append").partitionBy("idgrp")
-          .parquet(s"$root/signatures"),
-        () => oneFilePerGroup(bucketRows(withBands(sigs, m.bands, m.rowsPerBand),
-            m.groups), "bgrp")
-          .write.mode("append").partitionBy("bgrp")
-          .parquet(s"$root/buckets"))
-    } finally sigs.unpersist()
+    Residency.scoped { s =>
+      // the signature cache is shared by both appends
+      val sigs = s.persist(Dedup.minHashSignatures(df, textCol, idCol,
+        m.bands * m.rowsPerBand, m.shingleK))
+      oneFilePerGroup(sigs.withColumn("idgrp", idGrp(col("id"), m.groups)), "idgrp")
+        .write.mode("append").partitionBy("idgrp")
+        .parquet(s"$root/signatures")
+      oneFilePerGroup(bucketRows(withBands(sigs, m.bands, m.rowsPerBand),
+          m.groups), "bgrp")
+        .write.mode("append").partitionBy("bgrp")
+        .parquet(s"$root/buckets")
+    }
   }
 
   /** Re-crawled-document UPSERT — the [[SearchService.upsertDelta]]
@@ -231,10 +231,9 @@ object NearDupService {
     require(threshold > 0, "probe requires a positive threshold")
     val m = readMeta(spark, root)
     val numHashes = m.bands * m.rowsPerBand
-    val deltaSigs = Dedup.minHashSignatures(newBatch, textCol, idCol,
-        numHashes, m.shingleK)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Residency.scoped { s =>
+      val deltaSigs = s.persist(Dedup.minHashSignatures(newBatch, textCol, idCol,
+        numHashes, m.shingleK))
       val d = bucketRows(withBands(deltaSigs, m.bands, m.rowsPerBand),
           m.groups)
         .withColumnRenamed("id", "new_id")
@@ -244,43 +243,45 @@ object NearDupService {
       // ≤ 64-row collect → static partition pruning on the stored scan
       val grps = d.select("bgrp").distinct()
         .collect().map(_.getInt(0)).sorted.map(Int.box)
-      if (grps.isEmpty) return deltaSigs.sparkSession.emptyDataFrame
+      if (grps.isEmpty) deltaSigs.sparkSession.emptyDataFrame
         .select(lit(0L).as("new_id"), lit(0L).as("ref_id"),
           lit(0.0).as("est_jaccard")).limit(0)
-      val refBuckets = spark.read.parquet(s"$root/buckets")
-        .filter(col("bgrp").isin(grps: _*))
-      graft.util.Guards.checkBucketOccupancy(refBuckets,
-        Seq("band", "bucket"), maxBucketOccupancy,
-        "NearDupService.probe(stored index)",
-        "exact-dedup the corpus before indexing it")
-      val cand = d.join(refBuckets.select(col("band"), col("bucket"),
-            col("id").as("ref_id")),
-          Seq("band", "bucket"))
-        .select(col("new_id"), col("ref_id"))
-        .dropDuplicates("new_id", "ref_id")
-        .filter(col("new_id") =!= col("ref_id"))
-        .withColumn("idgrp", idGrp(col("ref_id"), m.groups))
-      // candidate idgrps are computable from ref_id — ≤ 64-row collect
-      // prunes the signatures scan the same way
-      val idgrps = cand.select("idgrp").distinct()
-        .collect().map(_.getInt(0)).sorted.map(Int.box)
-      val refSigs =
-        if (idgrps.isEmpty)
-          spark.read.parquet(s"$root/signatures").limit(0)
-        else spark.read.parquet(s"$root/signatures")
-          .filter(col("idgrp").isin(idgrps: _*))
-      val agree = size(filter(zip_with(col("__dsig"), col("sig"),
-        (x, y) => x === y), e => e))
-      cand.join(deltaSigs.select(col("id").as("new_id"),
-          col("sig").as("__dsig")), Seq("new_id"))
-        .join(refSigs.select(col("idgrp"), col("id").as("ref_id"),
-          col("sig")), Seq("idgrp", "ref_id"))
-        .withColumn("est_jaccard", round(
-          agree.cast("double") / numHashes, 6))
-        .filter(col("est_jaccard") >= threshold)
-        .select(col("new_id"), col("ref_id"), col("est_jaccard"))
-        .localCheckpoint(true) // materialize before releasing deltaSigs
-    } finally deltaSigs.unpersist()
+      else {
+        val refBuckets = spark.read.parquet(s"$root/buckets")
+          .filter(col("bgrp").isin(grps: _*))
+        graft.util.Guards.checkBucketOccupancy(refBuckets,
+          Seq("band", "bucket"), maxBucketOccupancy,
+          "NearDupService.probe(stored index)",
+          "exact-dedup the corpus before indexing it")
+        val cand = d.join(refBuckets.select(col("band"), col("bucket"),
+              col("id").as("ref_id")),
+            Seq("band", "bucket"))
+          .select(col("new_id"), col("ref_id"))
+          .dropDuplicates("new_id", "ref_id")
+          .filter(col("new_id") =!= col("ref_id"))
+          .withColumn("idgrp", idGrp(col("ref_id"), m.groups))
+        // candidate idgrps are computable from ref_id — ≤ 64-row collect
+        // prunes the signatures scan the same way
+        val idgrps = cand.select("idgrp").distinct()
+          .collect().map(_.getInt(0)).sorted.map(Int.box)
+        val refSigs =
+          if (idgrps.isEmpty)
+            spark.read.parquet(s"$root/signatures").limit(0)
+          else spark.read.parquet(s"$root/signatures")
+            .filter(col("idgrp").isin(idgrps: _*))
+        val agree = size(filter(zip_with(col("__dsig"), col("sig"),
+          (x, y) => x === y), e => e))
+        // pinned: materialized before the scope releases deltaSigs
+        Residency.pin(cand.join(deltaSigs.select(col("id").as("new_id"),
+            col("sig").as("__dsig")), Seq("new_id"))
+          .join(refSigs.select(col("idgrp"), col("id").as("ref_id"),
+            col("sig")), Seq("idgrp", "ref_id"))
+          .withColumn("est_jaccard", round(
+            agree.cast("double") / numHashes, 6))
+          .filter(col("est_jaccard") >= threshold)
+          .select(col("new_id"), col("ref_id"), col("est_jaccard")))
+      }
+    }
   }
 
   /** Exact-verified probe: LSH candidates from the stored buckets, then
@@ -314,10 +315,9 @@ object NearDupService {
     // whole-stage-codegen fusion of explode → partial aggregate and the
     // cache write/read costs more than the second explosion it saves.
     // Both passes deliberately re-explode.
-    val deltaSigs = Dedup.minHashSignatures(newBatch, textCol, idCol,
-        m.bands * m.rowsPerBand, m.shingleK)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Residency.scoped { s =>
+      val deltaSigs = s.persist(Dedup.minHashSignatures(newBatch, textCol, idCol,
+        m.bands * m.rowsPerBand, m.shingleK))
       val d = bucketRows(withBands(deltaSigs, m.bands, m.rowsPerBand),
           m.groups)
         .withColumnRenamed("id", "new_id")
@@ -335,19 +335,16 @@ object NearDupService {
         .filter(col("new_id") =!= col("ref_id"))
       // the kernel materializes eagerly, releases its corpus-sized
       // persists itself, and hands back a persisted pair-sized frame;
-      // the eager localCheckpoint below materializes the projection
-      // through that cache, after which the kernel frame is released —
-      // this op keeps its no-cached-frames-left-behind return contract
-      val verified = Dedup.verifyPairsJaccardSided(cand, newBatch,
-        refDocs, textCol, idCol, "new_id", "ref_id", m.shingleK)
-      try {
-        verified
-          .withColumn("jaccard", round(col("jaccard"), 6))
-          .filter(col("jaccard") >= threshold)
-          .select(col("new_id"), col("ref_id"), col("jaccard"))
-          .localCheckpoint(true)
-      } finally verified.unpersist(blocking = true)
-    } finally deltaSigs.unpersist()
+      // the pin below materializes the projection through that cache,
+      // after which the scope releases the kernel frame — this op keeps
+      // its no-cached-frames-left-behind return contract
+      val verified = s.adopt(Dedup.verifyPairsJaccardSided(cand, newBatch,
+        refDocs, textCol, idCol, "new_id", "ref_id", m.shingleK))
+      Residency.pin(verified
+        .withColumn("jaccard", round(col("jaccard"), 6))
+        .filter(col("jaccard") >= threshold)
+        .select(col("new_id"), col("ref_id"), col("jaccard")))
+    }
   }
 
   /** O(removed + touched partitions) takedown: the removed ids'
@@ -376,38 +373,37 @@ object NearDupService {
     graft.streaming.BatchCommit.scrubUncommitted(spark, root,
       Seq(s"$root/signatures", s"$root/buckets"))
     val m = readMeta(spark, root)
-    val ids = removedIds.select(col(idCol).as("id"))
-      .dropDuplicates("id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Residency.scoped { s =>
+      val ids = s.persist(removedIds.select(col(idCol).as("id")).dropDuplicates("id"))
       val idgrps = ids.select(idGrp(col("id"), m.groups).as("idgrp")).distinct()
         .collect().map(_.getInt(0)).sorted
-      if (idgrps.isEmpty) return
-      val idgrpLit = idgrps.map(Int.box)
-      val sigScan = spark.read.parquet(s"$root/signatures")
-        .filter(col("idgrp").isin(idgrpLit: _*))
-      // the removed rows' buckets — recovered, not guessed
-      val removedSigs = sigScan.join(broadcast(ids), Seq("id"), "left_semi")
-      val bgrps = bucketRows(withBands(removedSigs, m.bands, m.rowsPerBand),
-          m.groups)
-        .select("bgrp").distinct().collect().map(_.getInt(0)).sorted
-      // The two dataset rewrites touch disjoint directories and both
-      // read their touched sets from the PRE-REWRITE layout (bgrps was
-      // derived above, before either rewrite) — independent job chains,
-      // run concurrently (guide §2.6). Each keeps its own staging dir
-      // and swap loop, so crash-recovery semantics are unchanged.
-      val rewriteSigs = () => rewritePartitions(spark, s"$root/signatures",
-        "idgrp", idgrps, sigScan.join(broadcast(ids), Seq("id"), "left_anti"))
-      if (bgrps.nonEmpty) {
-        val bgrpLit = bgrps.map(Int.box)
-        val bScan = spark.read.parquet(s"$root/buckets")
-          .filter(col("bgrp").isin(bgrpLit: _*))
-        graft.util.Parallel.par2(spark)(
-          rewriteSigs,
-          () => rewritePartitions(spark, s"$root/buckets", "bgrp", bgrps,
-            bScan.join(broadcast(ids), Seq("id"), "left_anti")))
-      } else rewriteSigs()
-    } finally ids.unpersist()
+      if (idgrps.nonEmpty) {
+        val idgrpLit = idgrps.map(Int.box)
+        val sigScan = spark.read.parquet(s"$root/signatures")
+          .filter(col("idgrp").isin(idgrpLit: _*))
+        // the removed rows' buckets — recovered, not guessed
+        val removedSigs = sigScan.join(broadcast(ids), Seq("id"), "left_semi")
+        val bgrps = bucketRows(withBands(removedSigs, m.bands, m.rowsPerBand),
+            m.groups)
+          .select("bgrp").distinct().collect().map(_.getInt(0)).sorted
+        // The two dataset rewrites touch disjoint directories and both
+        // read their touched sets from the PRE-REWRITE layout (bgrps was
+        // derived above, before either rewrite) — independent job chains,
+        // run concurrently (guide §2.6). Each keeps its own staging dir
+        // and swap loop, so crash-recovery semantics are unchanged.
+        val rewriteSigs = () => rewritePartitions(spark, s"$root/signatures",
+          "idgrp", idgrps, sigScan.join(broadcast(ids), Seq("id"), "left_anti"))
+        if (bgrps.nonEmpty) {
+          val bgrpLit = bgrps.map(Int.box)
+          val bScan = spark.read.parquet(s"$root/buckets")
+            .filter(col("bgrp").isin(bgrpLit: _*))
+          graft.util.Parallel.par2(spark)(
+            rewriteSigs,
+            () => rewritePartitions(spark, s"$root/buckets", "bgrp", bgrps,
+              bScan.join(broadcast(ids), Seq("id"), "left_anti")))
+        } else rewriteSigs()
+      }
+    }
   }
 
   private def rewritePartitions(spark: SparkSession, dir: String,
@@ -441,17 +437,16 @@ object NearDupService {
                                       root: String, meta: NearDupMeta)
                                      : Seq[(String, String)] = {
     requireUniqueIds(batch, idCol, "NearDupService.writeStagedBatch")
-    val sigs = Dedup.minHashSignatures(batch, textCol, idCol,
-        meta.bands * meta.rowsPerBand, meta.shingleK)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Residency.scoped { s =>
+      val sigs = s.persist(Dedup.minHashSignatures(batch, textCol, idCol,
+        meta.bands * meta.rowsPerBand, meta.shingleK))
       oneFilePerGroup(sigs.withColumn("idgrp",
           idGrp(col("id"), meta.groups)), "idgrp")
         .write.partitionBy("idgrp").parquet(s"$staging/signatures")
       oneFilePerGroup(bucketRows(withBands(sigs, meta.bands,
           meta.rowsPerBand), meta.groups), "bgrp")
         .write.partitionBy("bgrp").parquet(s"$staging/buckets")
-    } finally sigs.unpersist()
+    }
     Seq(s"$staging/signatures" -> s"$root/signatures",
       s"$staging/buckets" -> s"$root/buckets")
   }

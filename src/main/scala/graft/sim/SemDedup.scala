@@ -6,6 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.VectorExprs
+import graft.util.Residency
 
 /** SemDeDup — Abbas et al. 2023, "SemDeDup: Data-efficient learning at
   * web-scale through semantic deduplication" (public): embedding-space
@@ -106,7 +107,7 @@ object SemDedup {
                     nlist: Int = 16,
                     idCol: String = "vec_id", vecCol: String = "embedding",
                     trainFraction: Double = 1.0, seed: Long = 42L,
-                    maxCellOccupancy: Long = 100000L): DataFrame = {
+                    maxCellOccupancy: Long = 100000L): DataFrame = Residency.eager { s =>
     require(threshold > 0 && threshold <= 1, s"threshold in (0,1], got $threshold")
     // the id rides as a Long; a silent cast would turn string ids into
     // nulls and report every duplicate as unique with no error
@@ -130,18 +131,15 @@ object SemDedup {
 
     // Persisted: the cell self-join reads it twice, the centroid scoring
     // and the final join read it again — released before returning.
-    val assigned = model.transform(fv).drop("__fv")
+    val assigned = s.persist(model.transform(fv).drop("__fv")
       .join(broadcast(centroids), Seq("__cell"))
       .select(col("id"), col("vec"), col("__cell"),
         VectorExprs.norm(col("vec")).as("nrm"),
-        round(VectorExprs.cosine(col("vec"), col("__cent")), 6).as("centroid_cosine"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        round(VectorExprs.cosine(col("vec"), col("__cent")), 6).as("centroid_cosine")))
 
-    graft.util.Caching.releasingOnFailure(assigned) {
-      graft.util.Guards.checkBucketOccupancy(
-        assigned.select("__cell"), Seq("__cell"), maxCellOccupancy,
-        "semanticDedup", "raise nlist (more, smaller cells) or pre-dedup exact copies")
-    }
+    graft.util.Guards.checkBucketOccupancy(
+      assigned.select("__cell"), Seq("__cell"), maxCellOccupancy,
+      "semanticDedup", "raise nlist (more, smaller cells) or pre-dedup exact copies")
 
     val a = assigned.alias("a"); val b = assigned.alias("b")
     val pairs = a.join(b, col("a.__cell") === col("b.__cell") &&
@@ -154,11 +152,9 @@ object SemDedup {
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
 
     // transitive duplicate groups; labels comes back persisted and is
-    // released below with the rest of the intermediates (a non-convergence
-    // throw inside must still release `assigned`)
-    val labels = graft.util.Caching.releasingOnFailure(assigned) {
-      graft.dedup.Dedup.duplicateClusters(assigned.select("id"), "id", pairs)
-    }
+    // released with the rest of the intermediates
+    val labels = s.adopt(
+      graft.dedup.Dedup.duplicateClusters(assigned.select("id"), "id", pairs))
 
     // keep rule: lowest (centroid_cosine, id) per group survives — the
     // least-typical exemplar, the paper's pruning direction
@@ -166,10 +162,9 @@ object SemDedup {
       .groupBy(col("cluster").as("dup_group"))
       .agg(min(struct(col("centroid_cosine"), col("id"))).as("__m"))
       .select(col("dup_group"), col("__m.id").as("__keep_id"))
-    val out = assigned.join(labels, Seq("id"))
+    assigned.join(labels, Seq("id"))
       .join(keepers, col("cluster") === col("dup_group"))
       .select(col("id"), col("dup_group"), col("centroid_cosine"),
         (col("id") === col("__keep_id")).as("keep"))
-    graft.util.Caching.materializeAndRelease(out, assigned, labels)
   }
 }

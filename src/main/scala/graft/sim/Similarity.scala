@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.util.Residency
 
 /** Similarity search over embedding columns (`array<float>`).
   *
@@ -295,18 +296,15 @@ object Similarity {
         keepCols.map(col): _*)
   }
 
-  /** Reduced-space shortlist + exact rerank over PRECOMPUTED
-    * (id, vec, r) frames — the shared tail of [[rpTopK]] and
-    * [[rpTopKPortable]]. Candidates are ranked per query by the
-    * reduced-space inner product (dimOut terms — 8× cheaper than a
-    * full-width dot) with the (score desc, cand_id) tie-break, the top
-    * `shortlist` survive, and only those pay the full-width
-    * rounded-cosine rerank. Long scores compare exactly (no double
-    * cast — see [[rpReducePortable]]). */
-  /** Reduced-space pair scoring shared by both rpRerank tails: the
-    * unrolled sum of codegen'd element_at products — an aggregate/
-    * zip_with HOF here would run interpreted on every scored pair, the
-    * per-row hot path. */
+  /** Reduced-space pair scoring over PRECOMPUTED (id, vec, r) frames,
+    * shared by both shortlist + exact rerank tails ([[rpRerank]] for
+    * [[rpTopKPortable]], [[rpRerankHeap]] for [[rpTopK]]). Candidates
+    * are scored per query by the reduced-space inner product (dimOut
+    * terms — 8× cheaper than a full-width dot); the tails keep the top
+    * `shortlist` and only those pay the full-width rounded-cosine
+    * rerank. The dot is the unrolled sum of codegen'd element_at
+    * products — an aggregate/zip_with HOF here would run interpreted on
+    * every scored pair, the per-row hot path. */
   private def rpScored(corpusRed: DataFrame, queriesRed: DataFrame,
                        dimOut: Int): DataFrame = {
     val q = queriesRed.select(col("id").as("query_id"), col("vec").as("qvec"),
@@ -394,20 +392,6 @@ object Similarity {
       dimOut)
   }
 
-  /** Probe a STORED random-projection index — the steady-state form that
-    * completes the stored-probe family (LSH/PQ/IVF/IVF-PQ all have one):
-    * `reduced` is the (id, vec, r) frame [[rpReducePortable]] produced,
-    * written once to parquet; each probe only projects the QUERIES
-    * (|queries|·dim work, nothing corpus-sized), ranks the reduced-space
-    * shortlist by the exact LONG dot, and pays the full-width rerank on
-    * the survivors. The corpus is never re-projected — at 100 TB the
-    * projection pass is the expensive half, and this splits it off
-    * exactly like [[graft.sim.Ivf]]'s build/probe seam. The projection
-    * is identified by (dimOut, seed): probing with a different pair than
-    * the build silently scores garbage, so callers persist those two
-    * ints alongside the frame. Reduced coordinates are exact LONGs, so
-    * the whole probe replays in SQL — hash-checkable even at a partial
-    * shortlist. */
   /** O(delta) incremental ingest into a stored RP reduced frame — the RP
     * member of the index-maintenance family (BM25 `appendDelta`, IVF
     * `appendToIndex`, IVF-PQ `appendToResidualIndex`): project ONLY the
@@ -430,6 +414,20 @@ object Similarity {
     reduced.join(broadcast(removedIds.select(col(idCol).as("id"))),
       Seq("id"), "left_anti")
 
+  /** Probe a STORED random-projection index — the steady-state form that
+    * completes the stored-probe family (LSH/PQ/IVF/IVF-PQ all have one):
+    * `reduced` is the (id, vec, r) frame [[rpReducePortable]] produced,
+    * written once to parquet; each probe only projects the QUERIES
+    * (|queries|·dim work, nothing corpus-sized), ranks the reduced-space
+    * shortlist by the exact LONG dot, and pays the full-width rerank on
+    * the survivors. The corpus is never re-projected — at 100 TB the
+    * projection pass is the expensive half, and this splits it off
+    * exactly like [[graft.sim.Ivf]]'s build/probe seam. The projection
+    * is identified by (dimOut, seed): probing with a different pair than
+    * the build silently scores garbage, so callers persist those two
+    * ints alongside the frame. Reduced coordinates are exact LONGs, so
+    * the whole probe replays in SQL — hash-checkable even at a partial
+    * shortlist. */
   def rpProbePortable(reduced: DataFrame, queries: DataFrame, k: Int,
                       shortlist: Int = 20, dimOut: Int = 8, seed: Int = 42,
                       idCol: String = "vec_id", vecCol: String = "embedding",
@@ -509,12 +507,11 @@ object Similarity {
     // deterministic, SQL-replayable selection (lowest id wins)
     val q = query.select(col(idCol).as("query_id"), col(vecCol).as("qvec"))
       .orderBy(col("query_id")).limit(1)
-    val rel = corpus.select(col(idCol).as("cand_id"), col(vecCol).as("cvec"))
-      .join(broadcast(q), col("query_id") =!= col("cand_id"))
-      .select(col("cand_id"), col("cvec"),
-        round(cosine(col("qvec"), col("cvec")), 6).as("rel"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Residency.scoped { s =>
+      val rel = s.persist(corpus.select(col(idCol).as("cand_id"), col(vecCol).as("cvec"))
+        .join(broadcast(q), col("query_id") =!= col("cand_id"))
+        .select(col("cand_id"), col("cvec"),
+          round(cosine(col("qvec"), col("cvec")), 6).as("rel")))
       val picked = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Double)]
       val pickedVecs = scala.collection.mutable.ArrayBuffer.empty[Seq[Float]]
       var rank = 0
@@ -542,7 +539,7 @@ object Similarity {
         }
       }
       picked.toSeq.toDF("rank", "cand_id", "score")
-    } finally rel.unpersist(blocking = true)
+    }
   }
 
   /** Banding + bucket join + exact rerank over PRECOMPUTED (id, vec, sig)
@@ -700,7 +697,7 @@ object Similarity {
   def cosineNearDups(df: DataFrame, threshold: Double,
                      idCol: String = "vec_id", vecCol: String = "embedding",
                      bits: Int = 32, bands: Int = 4, seed: Int = 42,
-                     maxBucketOccupancy: Long = 100000L): DataFrame = {
+                     maxBucketOccupancy: Long = 100000L): DataFrame = Residency.eager { s =>
     // same band-config validation as lshTopK: rowsPerBand = 0 would send
     // every row to one empty bucket (a misleading "degenerate corpus"
     // guard failure on healthy data), and a non-dividing bands count
@@ -717,10 +714,9 @@ object Similarity {
     // without the persist evaluates the posexplode signature aggregate
     // (and the corpus scan) twice — plan-canonicalization reuse is not
     // dependable across AQE's per-consumer rewrites (see Dedup). Released
-    // at the end via materializeAndRelease (bounded residency).
-    val sigs = rhpSignatures(df, idCol, vecCol, bits, seed)
-      .withColumn("nrm", norm(col("vec")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // when the scope exits (bounded residency).
+    val sigs = s.persist(rhpSignatures(df, idCol, vecCol, bits, seed)
+      .withColumn("nrm", norm(col("vec"))))
     val banded = sigs
       .select(col("id"), col("vec"), col("nrm"),
         explode(transform(sequence(lit(0), lit(bands - 1)),
@@ -728,13 +724,11 @@ object Similarity {
             concat_ws("", slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand))).as("bucket"))))
           .as("bb"))
       .select(col("id"), col("vec"), col("nrm"), col("bb.band"), col("bb.bucket"))
-    graft.util.Caching.releasingOnFailure(sigs) {
-      graft.util.Guards.checkBucketOccupancy(
-        banded.select("band", "bucket"), Seq("band", "bucket"), maxBucketOccupancy,
-        "cosineNearDups", "drop constant/zero embeddings or exact-dedup vectors first")
-    }
+    graft.util.Guards.checkBucketOccupancy(
+      banded.select("band", "bucket"), Seq("band", "bucket"), maxBucketOccupancy,
+      "cosineNearDups", "drop constant/zero embeddings or exact-dedup vectors first")
     val a = banded.alias("a"); val b = banded.alias("b")
-    val pairs = a.join(b, col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
+    a.join(b, col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
         col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
         col("a.vec").as("va"), col("b.vec").as("vb"),
@@ -743,7 +737,6 @@ object Similarity {
       .withColumn("cosine", cosineWithNorms(col("va"), col("vb"), col("na"), col("nb")))
       .filter(col("cosine") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("cosine"), 6).as("cosine"))
-    graft.util.Caching.materializeAndRelease(pairs, sigs)
   }
 
   /** Per-group mean embedding (centroids): the aggregate behind dataset

@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.util.Residency
 
 /** Text-analysis operators for large-scale training-data pipelines:
   * language ID, quality scoring, token counting, document fingerprinting.
@@ -852,43 +853,36 @@ object TextOps {
     * train once, then encode with [[bpeSegment]]/[[bpeTokenizeToIds]],
     * which are map-only and corpus-scale. */
   def bpeMerges(df: DataFrame, textCol: String, numMerges: Int,
-                minPairCount: Long = 2L): DataFrame = {
+                minPairCount: Long = 2L): DataFrame = Residency.scoped { s =>
     require(numMerges > 0, s"numMerges must be > 0, got $numMerges")
     val spark = df.sparkSession
     import spark.implicits._
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    def truncated(d: DataFrame): DataFrame = spark.createDataFrame(d.rdd, d.schema)
-
-    var seg = truncated(
-        df.select(explode(tokens(lower(col(textCol)))).as("word"))
-          .filter(col("word") =!= "")
-          .groupBy("word").agg(count(lit(1)).as("freq"))
-          .select(concat_ws(BpeSep, split(col("word"), "")).as("seg"), col("freq")))
-      .persist(lvl)
+    var seg = s.persist(s.truncate(
+      df.select(explode(tokens(lower(col(textCol)))).as("word"))
+        .filter(col("word") =!= "")
+        .groupBy("word").agg(count(lit(1)).as("freq"))
+        .select(concat_ws(BpeSep, split(col("word"), "")).as("seg"), col("freq"))))
 
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    try {
-      var i = 0
-      var done = false
-      while (i < numMerges && !done) {
-        i += 1
-        val top = bpePairCounts(seg).limit(1).collect()
-        if (top.isEmpty || top(0).getAs[Long]("cnt") < minPairCount) done = true
-        else {
-          val (l, r, cnt) = (top(0).getAs[String]("l"),
-            top(0).getAs[String]("r"), top(0).getAs[Long]("cnt"))
-          merges += ((i, l, r, cnt))
-          val next = truncated(seg.select(
-              regexp_replace(col("seg"), mergePattern(l, r),
-                java.util.regex.Matcher.quoteReplacement(l + r)).as("seg"),
-              col("freq")))
-            .persist(lvl)
-          next.count() // materialize before releasing the parent
-          seg.unpersist(blocking = true)
-          seg = next
-        }
+    var i = 0
+    var done = false
+    while (i < numMerges && !done) {
+      i += 1
+      val top = bpePairCounts(seg).limit(1).collect()
+      if (top.isEmpty || top(0).getAs[Long]("cnt") < minPairCount) done = true
+      else {
+        val (l, r, cnt) = (top(0).getAs[String]("l"),
+          top(0).getAs[String]("r"), top(0).getAs[Long]("cnt"))
+        merges += ((i, l, r, cnt))
+        val next = s.persist(s.truncate(seg.select(
+          regexp_replace(col("seg"), mergePattern(l, r),
+            java.util.regex.Matcher.quoteReplacement(l + r)).as("seg"),
+          col("freq"))))
+        next.count() // materialize before releasing the parent
+        s.release(seg)
+        seg = next
       }
-    } finally seg.unpersist(blocking = true)
+    }
     merges.toSeq.toDF("merge_rank", "left", "right", "pair_count")
   }
 
@@ -941,20 +935,17 @@ object TextOps {
     * max(64, 4·batch) fixed-width rows. Lineage truncation and cache
     * residency as in [[bpeMerges]]. */
   def bpeMergesBatched(df: DataFrame, textCol: String, numMerges: Int,
-                       minPairCount: Long = 2L, maxBatch: Int = 64): DataFrame = {
+                       minPairCount: Long = 2L,
+                       maxBatch: Int = 64): DataFrame = Residency.scoped { s =>
     require(numMerges > 0, s"numMerges must be > 0, got $numMerges")
     require(maxBatch > 0, s"maxBatch must be > 0, got $maxBatch")
     val spark = df.sparkSession
     import spark.implicits._
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    def truncated(d: DataFrame): DataFrame = spark.createDataFrame(d.rdd, d.schema)
-
-    var seg = truncated(
-        df.select(explode(tokens(lower(col(textCol)))).as("word"))
-          .filter(col("word") =!= "")
-          .groupBy("word").agg(count(lit(1)).as("freq"))
-          .select(concat_ws(BpeSep, split(col("word"), "")).as("seg"), col("freq")))
-      .persist(lvl)
+    var seg = s.persist(s.truncate(
+      df.select(explode(tokens(lower(col(textCol)))).as("word"))
+        .filter(col("word") =!= "")
+        .groupBy("word").agg(count(lit(1)).as("freq"))
+        .select(concat_ws(BpeSep, split(col("word"), "")).as("seg"), col("freq"))))
 
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     // output symbols of every merge emitted so far — a candidate whose
@@ -962,60 +953,57 @@ object TextOps {
     // already EXISTS, so its merge can raise pre-existing pair counts
     // past the boundary (see the independence argument above)
     val emitted = scala.collection.mutable.Set.empty[String]
-    try {
-      var done = false
-      while (merges.length < numMerges && !done) {
-        val cap = math.min(maxBatch, numMerges - merges.length)
-        val fetch = math.max(64, cap * 4)
-        val rows = bpePairCounts(seg).limit(fetch).collect()
-          .map(r => (r.getAs[String]("l"), r.getAs[String]("r"),
-            r.getAs[Long]("cnt")))
-        val used = scala.collection.mutable.Set.empty[String]
-        val batch = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-        // None = no boundary seen (the scan covered every remaining pair)
-        var boundary: Option[Long] = None
-        var stop = false
-        var idx = 0
-        while (idx < rows.length && !stop) {
-          val (l, r, c) = rows(idx)
-          if (c < minPairCount) stop = true // below-threshold tail can't perturb
-          else if (batch.length == cap || used(l) || used(r) || used(l + r)
-              || emitted(l + r)) {
-            boundary = Some(c); stop = true
-          } else {
-            batch += ((l, r, c)); used += l; used += r; used += (l + r)
-            idx += 1
-          }
-        }
-        if (boundary.isEmpty && !stop && rows.length == fetch)
-          boundary = rows.lastOption.map(_._3) // unseen tail ≤ last fetched
-        boundary.foreach { b =>
-          while (batch.nonEmpty && batch.last._3 == b) batch.remove(batch.length - 1)
-        }
-        if (batch.isEmpty) {
-          // degrade to the always-exact sequential top-1
-          rows.headOption.filter(_._3 >= minPairCount) match {
-            case Some(top) => batch += top
-            case None => done = true
-          }
-        }
-        if (!done) {
-          batch.foreach { case (l, r, c) =>
-            merges += ((merges.length + 1, l, r, c))
-            emitted += (l + r)
-          }
-          val rewritten = batch.foldLeft(col("seg")) { case (acc, (l, r, _)) =>
-            regexp_replace(acc, mergePattern(l, r),
-              java.util.regex.Matcher.quoteReplacement(l + r))
-          }
-          val next = truncated(seg.select(rewritten.as("seg"), col("freq")))
-            .persist(lvl)
-          next.count() // materialize before releasing the parent
-          seg.unpersist(blocking = true)
-          seg = next
+    var done = false
+    while (merges.length < numMerges && !done) {
+      val cap = math.min(maxBatch, numMerges - merges.length)
+      val fetch = math.max(64, cap * 4)
+      val rows = bpePairCounts(seg).limit(fetch).collect()
+        .map(r => (r.getAs[String]("l"), r.getAs[String]("r"),
+          r.getAs[Long]("cnt")))
+      val used = scala.collection.mutable.Set.empty[String]
+      val batch = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
+      // None = no boundary seen (the scan covered every remaining pair)
+      var boundary: Option[Long] = None
+      var stop = false
+      var idx = 0
+      while (idx < rows.length && !stop) {
+        val (l, r, c) = rows(idx)
+        if (c < minPairCount) stop = true // below-threshold tail can't perturb
+        else if (batch.length == cap || used(l) || used(r) || used(l + r)
+            || emitted(l + r)) {
+          boundary = Some(c); stop = true
+        } else {
+          batch += ((l, r, c)); used += l; used += r; used += (l + r)
+          idx += 1
         }
       }
-    } finally seg.unpersist(blocking = true)
+      if (boundary.isEmpty && !stop && rows.length == fetch)
+        boundary = rows.lastOption.map(_._3) // unseen tail ≤ last fetched
+      boundary.foreach { b =>
+        while (batch.nonEmpty && batch.last._3 == b) batch.remove(batch.length - 1)
+      }
+      if (batch.isEmpty) {
+        // degrade to the always-exact sequential top-1
+        rows.headOption.filter(_._3 >= minPairCount) match {
+          case Some(top) => batch += top
+          case None => done = true
+        }
+      }
+      if (!done) {
+        batch.foreach { case (l, r, c) =>
+          merges += ((merges.length + 1, l, r, c))
+          emitted += (l + r)
+        }
+        val rewritten = batch.foldLeft(col("seg")) { case (acc, (l, r, _)) =>
+          regexp_replace(acc, mergePattern(l, r),
+            java.util.regex.Matcher.quoteReplacement(l + r))
+        }
+        val next = s.persist(s.truncate(seg.select(rewritten.as("seg"), col("freq"))))
+        next.count() // materialize before releasing the parent
+        s.release(seg)
+        seg = next
+      }
+    }
     merges.toSeq.toDF("merge_rank", "left", "right", "pair_count")
   }
 
@@ -1784,7 +1772,7 @@ object TextOps {
     * shuffle; the ≤ `buckets`-row annotated spine and the one-row totals
     * broadcast back. */
   def dsirStats(raw: DataFrame, target: DataFrame, textCol: String,
-                idCol: String, buckets: Int = 1024): DataFrame = {
+                idCol: String, buckets: Int = 1024): DataFrame = Residency.eager { s =>
     val (docB0, _, tgtCnt, _, spine) =
       dsirCounts(raw, target, textCol, idCol, buckets)
     // The (doc, bucket) aggregate feeds THREE consumers (the per-doc
@@ -1795,8 +1783,7 @@ object TextOps {
     // release them after the output materializes (the minHashNearDups
     // bounded-residency discipline); the operator becomes eager, which
     // every registry face already treats it as.
-    val docB = docB0
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val docB = s.persist(docB0)
     val rawCnt = docB.groupBy("b").agg(sum(col("c")).as("cr"))
     val totals = rawCnt.agg(coalesce(sum(col("cr")), lit(0L)).as("tr"))
       .crossJoin(tgtCnt.agg(coalesce(sum(col("ct")), lit(0L)).as("tt")))
@@ -1825,14 +1812,13 @@ object TextOps {
         sum(col("c").cast(d19) * col("ct0").cast(d19)).as("s_tgt"),
         sum(col("c").cast(d19) * col("cr0").cast(d19)).as("s_raw"),
         sum(col("c").cast(d19) * col("diff")).as("margin"))
-    val out = raw.select(col(idCol).as("doc_id"))
+    raw.select(col(idCol).as("doc_id"))
       .join(scored, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("n_feats"), lit(0L)).as("n_feats"),
         coalesce(col("s_tgt").cast(d38), lit(0).cast(d38)).as("s_tgt"),
         coalesce(col("s_raw").cast(d38), lit(0).cast(d38)).as("s_raw"),
         coalesce(col("margin").cast(d38), lit(0).cast(d38)).as("margin"))
-    graft.util.Caching.materializeAndRelease(out, docB)
   }
 
   /** The TRAINED DSIR artifact as a standalone per-bucket frame — the
@@ -1988,20 +1974,20 @@ object TextOps {
     * when done. */
   def dsirSelect(raw: DataFrame, target: DataFrame, textCol: String,
                  idCol: String, buckets: Int = 1024,
-                 budgetFrac: Double = 0.5): DataFrame = {
+                 budgetFrac: Double = 0.5): DataFrame = Residency.eager { s =>
     require(budgetFrac > 0 && budgetFrac <= 1.0,
       s"budgetFrac must be in (0, 1], got $budgetFrac")
     // dsirStats returns a PERSISTED frame (it materializes through its
-    // internal doc-bucket cache) — hold the original handle and release
+    // internal doc-bucket cache) — adopt the original handle and release
     // it as soon as the scan output below is materialized; unpersisting
     // a projection wrapper would silently leak the underlying cache
-    // entry (the reshapeAndRelease lesson).
-    val statsFull = dsirStats(raw, target, textCol, idCol, buckets)
+    // entry.
+    val statsFull = s.adopt(dsirStats(raw, target, textCol, idCol, buckets))
     val stats = statsFull
       .select(col("doc_id"), col("n_feats"), col("margin"))
-    val cum = graft.ops.Scan.prefixSums(stats,
-      Seq(col("margin").desc, col("doc_id").asc), Seq("n_feats"))
-    statsFull.unpersist(blocking = true)
+    val cum = s.adopt(graft.ops.Scan.prefixSums(stats,
+      Seq(col("margin").desc, col("doc_id").asc), Seq("n_feats")))
+    s.release(statsFull)
     // the scan's LAST running value IS the corpus total (max works because
     // n_feats ≥ 0 makes the running sum monotone) — read it from the
     // persisted scan output instead of re-running the whole stats
@@ -2009,12 +1995,10 @@ object TextOps {
     val total = cum.agg(coalesce(max(col("n_feats_cum")), lit(0L)).as("tf"))
     val budget =
       floor(lit(budgetFrac) * col("tf").cast(DoubleType)).cast(LongType)
-    graft.util.Caching.reshapeAndRelease(cum) { c =>
-      c.crossJoin(broadcast(total))
-        .select(col("doc_id"), col("n_feats"), col("margin"),
-          col("n_feats_cum").as("cum_feats"),
-          (col("n_feats_cum") <= budget).as("kept"))
-    }
+    cum.crossJoin(broadcast(total))
+      .select(col("doc_id"), col("n_feats"), col("margin"),
+        col("n_feats_cum").as("cum_feats"),
+        (col("n_feats_cum") <= budget).as("kept"))
   }
 
   /** DSIR Gumbel-top-k resampling — the STOCHASTIC selection step of Xie

@@ -35,21 +35,12 @@ object Parallel {
     * Failure discipline: EVERY sibling future is awaited before the
     * first failure rethrows — an early rethrow would leave sibling Spark
     * jobs running (and their persisted frames materializing) behind the
-    * caller's back, defeating the family's no-cached-frames-on-failure
-    * residency guarantee. Callers whose thunks persist frames pass
-    * `onAbandoned` to release the completed siblings' handles the throw
-    * would otherwise orphan. */
-  def all[A](session: SparkSession)(thunks: (() => A)*): Seq[A] =
-    allCleaning[A](session, _ => ())(thunks: _*)
-
-  /** [[all]] with a disposal hook: when any thunk fails, `onAbandoned`
-    * runs on each sibling result that COMPLETED (so e.g. its persisted
-    * frame can be unpersisted) before the first failure's cause is
-    * rethrown. Never invoked on the success path. An interrupt of the
+    * caller's back. Thunks that persist register their frames with the
+    * caller's [[Residency.Scope]], which releases the completed
+    * siblings' frames when the rethrow leaves it. An interrupt of the
     * waiting caller cancels the pending siblings and rethrows the
     * `InterruptedException` with the caller's interrupt flag set. */
-  def allCleaning[A](session: SparkSession, onAbandoned: A => Unit)
-                    (thunks: (() => A)*): Seq[A] = {
+  def all[A](session: SparkSession)(thunks: (() => A)*): Seq[A] = {
     val futs = thunks.map { th =>
       pool.submit(new java.util.concurrent.Callable[A] {
         def call(): A = {
@@ -75,19 +66,9 @@ object Parallel {
     }
     // an interrupt outranks a sibling's failure: it is why the wait ended
     results.collectFirst { case Left(t: InterruptedException) => t }
-      .orElse(results.collectFirst { case Left(t) => t }) match {
-      case Some(first) =>
-        results.foreach {
-          case Right(a) =>
-            // best-effort disposal: a cleanup failure must not mask the
-            // original cause
-            try onAbandoned(a)
-            catch { case scala.util.control.NonFatal(_) => () }
-          case Left(_) => ()
-        }
-        throw first
-      case None => results.collect { case Right(a) => a }
-    }
+      .orElse(results.collectFirst { case Left(t) => t })
+      .foreach(first => throw first)
+    results.collect { case Right(a) => a }
   }
 
   /** Two differently-typed independent actions, concurrently. */

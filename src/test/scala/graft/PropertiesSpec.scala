@@ -72,19 +72,6 @@ object PropertiesSpec extends Properties("graft") {
       }
     }
 
-  propertyWithSeed("surrogateKeyScalable ≡ window surrogateKey at any parallelism", None) =
-    forAll(Gen.listOfN(30, Gen.choose(0, 9)), Gen.choose(1, 7)) {
-      (ks: List[Int], parts: Int) =>
-        ks.isEmpty || {
-          val df = ks.map(Tuple1(_)).toDF("k").repartition(parts)
-          val win = Ops.surrogateKey(df, Seq("k"), "id")
-            .orderBy("id").as[(Int, Long)].collect()
-          val scl = Ops.surrogateKeyScalable(df, Seq("k"), "id")
-            .orderBy("id").as[(Int, Long)].collect()
-          win.sameElements(scl)
-        }
-    }
-
   propertyWithSeed("dedupKeysAgg ≡ window dedupKeys on unique tie-breaks", None) =
     forAll(Gen.listOfN(40, Gen.zip(Gen.choose(0, 5), Gen.choose(0, 1000000)))) {
       pairs: List[(Int, Int)] =>

@@ -1,22 +1,30 @@
 package graft
 
 /** Session-wide cache-residency audit: a long-lived serving session
-  * (QueryService, a bench loop) invoking the near-dup operators repeatedly
-  * must return to its cache baseline once callers release the results —
-  * no corpus-sized intermediate may survive an operator call (those are
-  * released inside the operators via Caching.materializeAndRelease), and
-  * the pair-sized results are bounded by the caller-unpersist contract. */
+  * (QueryService, a bench loop) invoking the persisting operators
+  * repeatedly must return to its cache baseline once callers release the
+  * results — no intermediate may survive an operator call (those are
+  * released inside the operators by their graft.util.Residency scope),
+  * and the results are bounded by the caller-unpersist contract. */
 class ResidencySpec extends SparkSpec {
 
-  // The registry queries that persist internally: the LSH families, the
-  // iterative components resolver, and the cluster-scoped semantic dedup.
+  // The registry queries that persist internally, one or more per
+  // operator family whose residency a scope manages: the LSH families,
+  // the iterative components resolver, the cluster-scoped semantic
+  // dedup, the fused median/MAD pair, the graph loops (which also pin
+  // their rounds), the rank-map Spearman, the BPE trainer and φk.
   private val names = Seq("dd_minhash_lsh", "dd_simhash", "emb_near_dup",
-    "dd_components", "emb_semantic_dedup", "pipe_near_dedup")
+    "dd_components", "emb_semantic_dedup", "pipe_near_dedup",
+    "a19_mad_outliers", "a20_robust_stats", "gr_hits", "gr_bfs",
+    "pr14_spearman", "txt_bpe_learn", "pr17_phik")
 
   test("repeated near-dup query invocations return the session to its cache baseline") {
     val dir = "/root/testdata/sf0.001"
-    def cachedIds = spark.sparkContext.getPersistentRDDs.keySet
-    val before = cachedIds
+    def all = spark.sparkContext.getPersistentRDDs
+    // Checkpoint pins are blocks the returned frame's lineage reads, not
+    // cache entries: they live while a frame reads them and go with it.
+    def cachedIds = all.filterNot(_._2.isCheckpointed).keySet
+    val before = all.keySet
     (1 to 2).foreach { _ =>        // twice: the long-lived-session shape
       names.foreach { n =>
         val out = SparkEntry.queries(n)(spark, dir)
@@ -29,6 +37,15 @@ class ResidencySpec extends SparkSpec {
     }
     assert((cachedIds -- before).isEmpty,
       s"cache baseline not restored; leaked ids ${cachedIds -- before}")
+    // with every result released nothing reads the pins any more; the
+    // session's registry holds them weakly, so a collection drops them
+    val deadline = System.currentTimeMillis() + 30000L
+    while ((all.keySet -- before).nonEmpty && System.currentTimeMillis() < deadline) {
+      System.gc()
+      Thread.sleep(200)
+    }
+    assert((all.keySet -- before).isEmpty,
+      s"pins outlived every frame reading them: ${all.keySet -- before}")
   }
 
   test("profile() leaves no persisted RDD behind (long-form passes + association tabs)") {

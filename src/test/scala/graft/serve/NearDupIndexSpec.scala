@@ -167,4 +167,33 @@ class NearDupIndexSpec extends SparkSpec {
     val stats = NearDupService.bandStats(spark, root).collect()
     assert(stats.forall(_.getAs[Long]("n_ids") === 21L))
   }
+
+  test("appendDelta writes buckets only after signatures: a failed append " +
+      "leaves state a takedown of the batch ids clears") {
+    val root = java.nio.file.Files.createTempDirectory("graft_nd_order").toString
+    val docs = corpus(80)
+    NearDupService.buildIndex(docs.filter($"doc_id" <= 60), "text", "doc_id", root)
+    val batch = docs.filter($"doc_id" > 60)
+    def batchRows(ds: String): Long =
+      spark.read.parquet(s"$root/$ds").filter($"id" > 60L).count()
+    // a plain file in place of the dataset dir makes that append fail
+    def failingAppendTo(ds: String): Unit = {
+      val dir = new java.io.File(s"$root/$ds")
+      val aside = new java.io.File(s"$root/$ds.aside")
+      assert(dir.renameTo(aside) && dir.createNewFile())
+      try intercept[Exception](NearDupService.appendDelta(batch, "text", "doc_id", root))
+      finally assert(dir.delete() && aside.renameTo(dir))
+    }
+    // a failed signature append never reaches the bucket append
+    failingAppendTo("signatures")
+    assert(batchRows("buckets") === 0L, "bucket rows appended without their signatures")
+    // a failed bucket append leaves signatures without buckets ...
+    failingAppendTo("buckets")
+    assert(batchRows("signatures") === 20L)
+    assert(batchRows("buckets") === 0L)
+    // ... which removeFromIndex finds from the stored signatures
+    NearDupService.removeFromIndex(spark, root, batch.select("doc_id"), "doc_id")
+    assert(batchRows("signatures") === 0L)
+    assert(batchRows("buckets") === 0L)
+  }
 }

@@ -1,27 +1,41 @@
 package graft.util
 
 import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicBoolean
+import scala.jdk.CollectionConverters._
 import graft.SparkSpec
 
 class ParallelSpec extends SparkSpec {
 
   test("all: results in order; the first failure rethrows after completed siblings are disposed") {
     assert(Parallel.all(spark)(() => 1, () => 2, () => 3) === Seq(1, 2, 3))
-    val disposed = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    // disposal is the caller's scope: the completed siblings registered
+    // their persisted frames there, and the rethrow releases them
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val completed = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val created = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val e = intercept[IllegalStateException] {
-      Parallel.allCleaning[Int](spark, disposed.add(_))(
-        () => 1, () => throw new IllegalStateException("boom"), () => 3)
+      Residency.scoped { s =>
+        def persisted(n: Int): Int = {
+          val d = s.persist(spark.range(n).toDF("id"))
+          d.count()
+          completed.add(n)
+          (spark.sparkContext.getPersistentRDDs.keySet -- before).foreach(created.add)
+          n
+        }
+        Parallel.all(spark)(
+          () => persisted(10), () => throw new IllegalStateException("boom"),
+          () => persisted(30))
+      }
     }
     assert(e.getMessage === "boom")
-    assert(disposed.toArray.toSet === Set(1, 3))
+    assert(completed.toArray.toSet === Set(10, 30), "every sibling is awaited before the rethrow")
+    assert(!created.isEmpty, "the siblings' frames were never cached")
+    assertReleased(created.asScala.toSet)
   }
 
-  test("allCleaning: an interrupt of the waiting caller cancels the pending " +
-      "siblings and rethrows promptly with the interrupt flag kept") {
+  test("all: a caller interrupt cancels pending siblings") {
     val started = new CountDownLatch(2)
     val siblingInterrupted = new CountDownLatch(2)
-    val disposedAfterInterrupt = new AtomicBoolean(false)
     @volatile var thrown: Throwable = null
     @volatile var flagKept = false
     def blocker(): Int = {
@@ -30,8 +44,7 @@ class ParallelSpec extends SparkSpec {
       catch { case e: InterruptedException => siblingInterrupted.countDown(); throw e }
     }
     val caller = new Thread(() => {
-      try Parallel.allCleaning[Int](spark, _ => disposedAfterInterrupt.set(true))(
-        () => blocker(), () => blocker())
+      try Parallel.all(spark)(() => blocker(), () => blocker())
       catch { case t: Throwable => thrown = t; flagKept = Thread.currentThread().isInterrupted }
     })
     caller.start()
@@ -44,6 +57,5 @@ class ParallelSpec extends SparkSpec {
     assert(thrown.isInstanceOf[InterruptedException], s"got $thrown")
     assert(flagKept, "interrupt flag not restored on the caller")
     assert(siblingInterrupted.await(10, TimeUnit.SECONDS), "pending siblings were not cancelled")
-    assert(!disposedAfterInterrupt.get, "no sibling completed, so nothing to dispose")
   }
 }
