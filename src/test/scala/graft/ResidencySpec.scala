@@ -58,4 +58,59 @@ class ResidencySpec extends SparkSpec {
     assert(p.rows === 60 && p.phik.nonEmpty)
     assertReleased(spark.sparkContext.getPersistentRDDs.keySet.toSet -- before)
   }
+
+  /** The registered RDD ids, copied: the registry map's own key set
+    * holds its RDDs strongly and would keep them alive. */
+  private def ids: Set[Int] = spark.sparkContext.getPersistentRDDs.keysIterator.toSet
+
+  /** Wait (bounded, as above) for a collection to drop every id in
+    * `pins`: a pin lives while a frame reads it and goes with the last. */
+  private def awaitCollected(pins: Set[Int]): Unit = {
+    def live = ids & pins
+    val deadline = System.currentTimeMillis() + 30000L
+    while (live.nonEmpty && System.currentTimeMillis() < deadline) {
+      System.gc()
+      Thread.sleep(200)
+    }
+    assert(live.isEmpty, s"pins outlived every frame reading them: $live")
+  }
+
+  private def fixtures(tag: String) =
+    graft.pipeline.Fixtures.writeAll(java.nio.file.Files.createTempDirectory(tag))
+
+  test("StateEconomics.build's pins go once its tables are dropped, and a refused build leaves none") {
+    import graft.pipeline.StateEconomics
+    val before = ids
+    var built = StateEconomics.build(spark, fixtures("graft_res_build"))
+    val pins = ids -- before
+    assert(built.size === 11 && pins.size === 11, s"pins $pins")
+    built = null
+    awaitCollected(pins)
+
+    // the negative fixture: a null Year the table_CPI gate refuses
+    val in = fixtures("graft_res_refused")
+    val mw = java.nio.file.Paths.get(in.minWageCsv)
+    java.nio.file.Files.write(mw, (new String(java.nio.file.Files.readAllBytes(mw), "windows-1252") +
+      "\n,Nowhere,1.0,1.0,1.15,8.55,34.8,,1.0,1.0,").getBytes("windows-1252"))
+    val beforeRefused = ids
+    intercept[graft.quality.PrimaryKeyViolation](StateEconomics.build(spark, in))
+    val refused = ids -- beforeRefused
+    assert(refused.nonEmpty, "the gate reads pins, so the refused build made some")
+    awaitCollected(refused)
+  }
+
+  test("a missing input fails the concurrent source preparation with its reader's own exception") {
+    import graft.pipeline.StateEconomics
+    val in = fixtures("graft_res_missing")
+    val before = ids
+    intercept[java.nio.file.NoSuchFileException](
+      StateEconomics.build(spark, in.copy(unemploymentXlsx = in.unemploymentXlsx + ".missing")))
+    intercept[java.nio.file.NoSuchFileException](
+      StateEconomics.build(spark, in.copy(minWageCsv = in.minWageCsv + ".missing")))
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      StateEconomics.build(spark, in.copy(schoolExpenseCsv = in.schoolExpenseCsv + ".missing")))
+    assert(e.getMessage.contains("PATH_NOT_FOUND"), e.getMessage)
+    // nothing is pinned before every source is prepared
+    assert((ids -- before).isEmpty)
+  }
 }

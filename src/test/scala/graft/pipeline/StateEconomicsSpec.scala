@@ -161,6 +161,66 @@ class StateEconomicsSpec extends SparkSpec {
     assert(html.contains("table_fed_min_wage") && html.contains("Fed_Min_Wage"))
   }
 
+  test("the load ships the gated rows: a source rewritten after build does not reach the tables") {
+    val in = Fixtures.writeAll(Files.createTempDirectory("graft_fixtures_reload"))
+    val built = StateEconomics.build(spark, in)
+    val cpiRows = built("table_CPI").count()
+    // Blank one row's Year in place. The byte length stays the same, so
+    // the file listing Spark holds for the build's scans still covers it.
+    val mwPath = java.nio.file.Paths.get(in.minWageCsv)
+    val bytes = Files.readAllBytes(mwPath)
+    val text = new String(bytes, "windows-1252")
+    val at = text.indexOf("\n2017,Colorado,") + 1
+    Files.write(mwPath, (text.take(at) + "    " + text.drop(at + 4)).getBytes("windows-1252"))
+    assert(Files.size(mwPath) === bytes.length.toLong)
+    Seq("table_CPI", "table_fed_min_wage").foreach { t =>
+      assert(built(t).filter($"Year".isNull).count() === 0, s"$t holds a null Year the gate never saw")
+    }
+    assert(built("table_CPI").count() === cpiRows)
+    // the rewrite is a real violation: a fresh build over it is refused
+    intercept[graft.quality.PrimaryKeyViolation](StateEconomics.build(spark, in))
+  }
+
+  test("the returned tables are computed once: reading them scans no input and reshuffles nothing") {
+    import org.apache.spark.scheduler._
+    import org.apache.spark.sql.execution.SparkPlanInfo
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import java.util.concurrent.atomic.AtomicLong
+    def nodes(p: SparkPlanInfo): Seq[String] = p.nodeName +: p.children.flatMap(nodes)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
+    val mapTasks, shuffleRecords = new AtomicLong
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskType == "ShuffleMapTask") {
+          mapTasks.incrementAndGet()
+          shuffleRecords.addAndGet(e.taskMetrics.shuffleWriteMetrics.recordsWritten)
+        }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.add(nodes(s.sparkPlanInfo))
+        case _ =>
+      }
+    }
+    val built = tables
+    org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      built.values.foreach(_.count())
+      org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // Task input metrics also count a pin's block reads, so "no input"
+    // is read off the plans: each count's only leaf is its pin's RDD
+    // scan and its only exchange is the count's own.
+    import scala.jdk.CollectionConverters._
+    assert(plans.size === 11)
+    plans.asScala.foreach { p =>
+      assert(p.filter(_.startsWith("Scan")) === Seq("Scan ExistingRDD"), p.mkString(" / "))
+      assert(p.count(_ == "Exchange") === 1, p.mkString(" / "))
+    }
+    // nothing but the counts' partial rows, one per map task, is shuffled
+    assert(mapTasks.get > 0 && shuffleRecords.get <= mapTasks.get,
+      s"$shuffleRecords shuffle records from $mapTasks map tasks")
+  }
+
   test("negative: a null PK in a source makes the matching gate throw (A5)") {
     // Corrupt the min-wage fixture with an empty Year — dedup keeps
     // null-keyed rows, so table_CPI's (Year) gate must reject the build,
