@@ -12,18 +12,21 @@ object SparkEntry {
     RelationalQueries.queries ++ ExtensionQueries.queries
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Bucketed/quantized-approximation ops
-    * (dd_minhash_lsh, dd_simhash, sim_lsh_ann, sim_pq_topk,
-    * sim_ivfpq_topk, sim_rp_topk, dd_incremental_neardup, dd_index_probe,
-    * txt_quality_gate_approx) are rows-only: their output is defined by
-    * the bucketing/codebooks/sketches, so they are verified by
+    * (dd_minhash_lsh, dd_simhash, sim_pq_topk, sim_ivfpq_topk,
+    * dd_incremental_neardup, dd_index_probe, txt_quality_gate_approx)
+    * are rows-only: their output is defined by the
+    * bucketing/codebooks/sketches, so they are verified by
     * planted-duplicate / exact-recovery ScalaTest checks — AND each has
     * an exactness-pinned oracle twin or spec pin that closes the loop
-    * (dd_minhash_verified, dd_simhash_exact, sim_lsh_exact, sim_pq_exact,
+    * (dd_minhash_verified, dd_simhash_exact, sim_pq_exact,
     * sim_ivfpq_exact, txt_quality_gate, DedupSpec stored≡in-memory:
-    * guaranteed-recall / universal-bucket / grid-recovery / full-probe
-    * parameterizations of the same operators). The approximate-regime
-    * QUALITY numbers are themselves oracle-checked via the recall
-    * metrics (sim_lsh_recall, sim_pq_recall, sim_ivf_recall). The
+    * guaranteed-recall / grid-recovery / full-probe parameterizations of
+    * the same operators). The random-hyperplane faces (sim_lsh_ann,
+    * sim_rp_topk) are not among them: their md5 planes and long
+    * projection sums replay exactly in SQL, so their approximate rows
+    * are hash-checked. The approximate-regime QUALITY numbers are
+    * themselves oracle-checked via the recall metrics (sim_lsh_recall,
+    * sim_pq_recall, sim_ivf_recall, sim_rp_recall). The
     * transcendental-score faces (txt_bm25_topk / txt_bm25_probe — ln in
     * BM25) and the codec face (txt_compression_ratio — deflate length is
     * zlib-build-dependent) are rows-only by the portability law, with

@@ -2336,8 +2336,11 @@ object ExtensionQueries {
     Similarity.quantizedTopK(emb, emb.filter(col("vec_id") < 10), k = 5)
   }
 
-  /** LSH-bucketed ANN — the scale path; recall vs brute force is asserted
-    * in ScalaTest. Rows-only check. */
+  /** LSH-bucketed ANN — the scale path at the production bits = 16,
+    * bands = 4. Every step replays in SQL (md5 planes, long projection
+    * sums — see [[Similarity.rhpSignatures]]), so the approximate result
+    * rows themselves are hash-checked; recall vs brute force is
+    * `sim_lsh_recall`. */
   private val simLshAnn: Q = (s, dir) => {
     val emb = t(s, dir, "embeddings")
     Similarity.lshTopK(emb, emb.filter(col("vec_id") < 10), k = 5)
@@ -2378,8 +2381,8 @@ object ExtensionQueries {
   /** [[simLshAnn]]'s exactness pin: bits = 0 probes one universal bucket
     * (every pair is a candidate — the IVF nprobe = nlist analog), so the
     * whole LSH plumbing — banding, bucket join, candidate dedup, heap
-    * rerank — must reproduce brute force bit-for-bit and shares its SQL
-    * oracle. Production recall at bits > 0 stays pinned by ScalaTest. */
+    * rerank — must reproduce brute force bit-for-bit and shares the
+    * brute-force SQL oracle. */
   private val simLshExact: Q = (s, dir) => {
     val emb = t(s, dir, "embeddings")
     Similarity.lshTopK(emb, emb.filter(col("vec_id") < 10), k = 5,
@@ -2459,14 +2462,14 @@ object ExtensionQueries {
   }
 
   /** ANN recall@k as a NUMBER the oracle checks every round: overlap of
-    * [[Similarity.lshTopKPortable]]'s top-5 (production parameters —
+    * [[Similarity.lshTopK]]'s top-5 (production parameters —
     * bits = 16, bands = 4, the same banding statistics as `sim_lsh_ann`)
     * against the exact brute-force top-5, reduced by
     * [[Similarity.recallAtK]] to one all-integer row (k, n_queries,
-    * n_hits, mean_recall). The portable signature family replays every
+    * n_hits, mean_recall). The signature family replays every
     * arithmetic step in SQL (md5-derived hyperplanes, integer-quantized
     * projections, order-independent long sums — see
-    * [[Similarity.rhpSignaturesPortable]]), so the DuckDB oracle
+    * [[Similarity.rhpSignatures]]), so the DuckDB oracle
     * recomputes signatures, banding, the bucket join, the cosine rerank,
     * AND the recall ratio — closing the loop that ScalaTest floors only
     * bound: approximate-regime LSH recall is hash-checked end to end. */
@@ -2474,7 +2477,7 @@ object ExtensionQueries {
     val emb = t(s, dir, "embeddings")
     val q = emb.filter(col("vec_id") < 10)
     Similarity.recallAtK(
-      Similarity.lshTopKPortable(emb, q, k = 5, bits = 16, bands = 4),
+      Similarity.lshTopK(emb, q, k = 5, bits = 16, bands = 4),
       Similarity.bruteForceTopK(emb, q, k = 5), k = 5)
   }
 
@@ -2766,14 +2769,14 @@ object ExtensionQueries {
   private val simRpMerge: Q = (s, dir) => {
     val emb = t(s, dir, "embeddings")
     val root = storedIndexPath("rp_base", dir) { out =>
-      Similarity.rpReducePortable(emb.filter(col("vec_id") % 5 =!= 3),
+      Similarity.rpReduce(emb.filter(col("vec_id") % 5 =!= 3),
           "vec_id", "embedding", dimOut = 8, seed = 42)
         .write.mode("overwrite").parquet(s"$out/reduced")
     }
     val merged = Similarity.rpAppendReduced(
       s.read.parquet(s"$root/reduced"),
       emb.filter(col("vec_id") % 5 === 3), dimOut = 8, seed = 42)
-    Similarity.rpProbePortable(merged, emb.filter(col("vec_id") < 10),
+    Similarity.rpProbe(merged, emb.filter(col("vec_id") < 10),
       k = 5, shortlist = 20, dimOut = 8, seed = 42)
   }
 
@@ -3361,14 +3364,14 @@ object ExtensionQueries {
     probeStoredIvf(s, path, emb.filter(col("vec_id") < 10))
   }
 
-  /** JL random-projection ANN, production form (Johnson & Lindenstrauss
-    * 1984): vectors reduced 64→8 dims by seeded random projection, the
-    * top-20 shortlist ranked by the 8-term reduced inner product, exact
-    * cosine rerank to top-5 — full-width arithmetic only touches the
-    * shortlist, and at rest the reduced column is 1/8 the scan. Reduced
-    * coordinates are data+hash-defined floats, so rows-only;
-    * `sim_rp_exact` pins exactness at shortlist=|corpus| and
-    * `sim_rp_recall` hash-checks the portable twin's recall. */
+  /** JL random-projection ANN (Johnson & Lindenstrauss 1984): vectors
+    * reduced 64→8 dims by seeded random projection, the top-20 shortlist
+    * ranked by the 8-term reduced inner product, exact cosine rerank to
+    * top-5 — full-width arithmetic only touches the shortlist, and at
+    * rest the reduced column is 1/8 the scan. Reduced coordinates are
+    * exact longs, so the rows hash-check against `sim_rp_probe`'s replay
+    * (same k, dimOut, shortlist, seed and queries); `sim_rp_exact` pins
+    * exactness at shortlist=|corpus| and `sim_rp_recall` the recall. */
   private val simRpTopk: Q = (s, dir) => {
     val emb = t(s, dir, "embeddings")
     Similarity.rpTopK(emb, emb.filter(col("vec_id") < 10), k = 5)
@@ -3377,17 +3380,17 @@ object ExtensionQueries {
   /** [[simRpTopk]]'s exactness pin: shortlist = Int.MaxValue keeps every
     * candidate through the reduced-space ranking, so the rerank sees the
     * full corpus and the result is provably brute force — the whole RP
-    * plumbing (portable reduce, long-exact window shortlist ranking,
+    * plumbing (reduce, long-exact window shortlist ranking,
     * rerank) runs and hash-checks against the brute-force oracle. */
   private val simRpExact: Q = (s, dir) => {
     val emb = t(s, dir, "embeddings")
-    Similarity.rpTopKPortable(emb, emb.filter(col("vec_id") < 10), k = 5,
+    Similarity.rpTopK(emb, emb.filter(col("vec_id") < 10), k = 5,
       shortlist = Int.MaxValue)
   }
 
   /** Stored-index RP probe — the family's steady-state form, completing
     * the stored-probe set ([[simIvfProbe]], [[simPqProbe]],
-    * [[simIvfpqProbe]]): the portable (id, vec, r) reduced frame is
+    * [[simIvfpqProbe]]): the (id, vec, r) reduced frame is
     * written once and probed WITHOUT re-projecting the corpus — each
     * probe projects only the 10 query vectors, ranks the shortlist by
     * the exact LONG reduced dot over the stored coordinates, and reranks
@@ -3400,14 +3403,14 @@ object ExtensionQueries {
   private def rpStoredBase(s: SparkSession, dir: String,
                            emb: DataFrame): String =
     storedIndexPath("rp", dir) { out =>
-      Similarity.rpReducePortable(emb, "vec_id", "embedding",
+      Similarity.rpReduce(emb, "vec_id", "embedding",
           dimOut = 8, seed = 42)
         .write.mode("overwrite").parquet(s"$out/reduced")
     }
 
   private def probeStoredRp(s: SparkSession, root: String,
                             queries: DataFrame): DataFrame =
-    Similarity.rpProbePortable(s.read.parquet(s"$root/reduced"),
+    Similarity.rpProbe(s.read.parquet(s"$root/reduced"),
       queries, k = 5, shortlist = 20, dimOut = 8, seed = 42)
 
   private val simRpProbe: Q = (s, dir) => {
@@ -3416,7 +3419,7 @@ object ExtensionQueries {
     probeStoredRp(s, root, emb.filter(col("vec_id") < 10))
   }
 
-  /** FILTERED RP ANN ([[Similarity.rpProbePortable]] with a candidate
+  /** FILTERED RP ANN ([[Similarity.rpProbe]] with a candidate
     * predicate — the [[simIvfFiltered]] contract on the JL family): the
     * attribute rides the stored reduced frame (`keepCols`), the equality
     * lands BELOW the shortlist (matching candidates only enter the
@@ -3429,9 +3432,9 @@ object ExtensionQueries {
     val emb = t(s, dir, "embeddings")
     val tagged = emb.withColumn("tag",
       pmod(col("vec_id"), lit(3L)).cast(IntegerType))
-    val reduced = Similarity.rpReducePortable(tagged, "vec_id", "embedding",
+    val reduced = Similarity.rpReduce(tagged, "vec_id", "embedding",
       dimOut = 8, seed = 42, keepCols = Seq("tag"))
-    Similarity.rpProbePortable(reduced, emb.filter(col("vec_id") < 10),
+    Similarity.rpProbe(reduced, emb.filter(col("vec_id") < 10),
       k = 5, shortlist = 20, dimOut = 8, seed = 42,
       filter = Some(col("tag") === 1))
   }
@@ -3493,7 +3496,7 @@ object ExtensionQueries {
   }
 
   /** RP member of the recall family ([[simLshRecall]], [[simPqRecall]],
-    * [[simIvfRecall]]): recall@5 of the PORTABLE JL pipeline (md5-derived
+    * [[simIvfRecall]]): recall@5 of the JL pipeline (md5-derived
     * planes, integer-quantized LONG coordinates, long-exact shortlist
     * ranking) at the production shortlist=20 vs exact brute force —
     * hash-checked because every arithmetic step replays exactly in SQL. */
@@ -3501,11 +3504,11 @@ object ExtensionQueries {
     val emb = t(s, dir, "embeddings")
     val q = emb.filter(col("vec_id") < 10)
     Similarity.recallAtK(
-      Similarity.rpTopKPortable(emb, q, k = 5, dimOut = 8, shortlist = 20),
+      Similarity.rpTopK(emb, q, k = 5, dimOut = 8, shortlist = 20),
       Similarity.bruteForceTopK(emb, q, k = 5), k = 5)
   }
 
-  /** Recall CURVE of the portable LSH pipeline: recall@{1,5,10} vs exact
+  /** Recall CURVE of the LSH pipeline: recall@{1,5,10} vs exact
     * brute force in ONE hash-checked frame (the single-k recall metrics'
     * generalization — see [[Similarity.recallCurve]]). The matched-pair
     * frame is built once; each pair feeds every cutoff ≥ its
@@ -3514,7 +3517,7 @@ object ExtensionQueries {
     val emb = t(s, dir, "embeddings")
     val q = emb.filter(col("vec_id") < 10)
     Similarity.recallCurve(
-      Similarity.lshTopKPortable(emb, q, k = 10, bits = 16, bands = 4),
+      Similarity.lshTopK(emb, q, k = 10, bits = 16, bands = 4),
       Similarity.bruteForceTopK(emb, q, k = 10), Seq(1, 5, 10))
   }
 
@@ -4667,31 +4670,40 @@ object ExtensionQueries {
   private val pqGridFilteredOracle: String =
     pqGridOracle(" AND c.vec_id % 3 = 1")
 
-  /** Generated oracle for sim_lsh_recall: replays the PORTABLE
-    * random-hyperplane LSH pipeline — md5-derived hyperplanes (first 13
-    * hex chars parsed arithmetically, /2^51 − 1), integer-quantized
-    * projection terms (floor(x·plane·2^20 + 0.5) as BIGINT, summed —
-    * order-independent), sign packing into a bit string, 4×4-bit banding,
-    * the bucket join, the rounded-cosine rerank — then reduces ANN∩exact
-    * overlap to the same one-row recall ratio recallAtK emits. */
-  private def simLshRecallOracle: String = {
-    val bits = 16; val bands = 4; val rpb = bits / bands; val k = 5; val seed = 42
-    def plane(p: Int) =
-      "(CAST(list_sum(list_transform(generate_series(1,13), j -> " +
-        "CAST(strpos('0123456789abcdef', substring(md5(CAST(i - 1 AS VARCHAR) || " +
-        s"'_${p}_$seed'), j, 1)) - 1 AS BIGINT) << ((13 - j) * 4))) AS BIGINT) " +
-        "/ 2251799813685248.0 - 1.0)"
-    val projs = (0 until bits).map(p =>
+  /** SQL for the md5-derived hyperplane component `p` at the 1-based
+    * list position `i` — [[Similarity.rhpSignatures]]' plane(pos, p): the
+    * first 13 hex chars of md5("pos_p_seed") parsed arithmetically,
+    * /2^51 − 1. */
+  private def md5Plane(p: Int, seed: Int): String =
+    "(CAST(list_sum(list_transform(generate_series(1,13), j -> " +
+      "CAST(strpos('0123456789abcdef', substring(md5(CAST(i - 1 AS VARCHAR) || " +
+      s"'_${p}_$seed'), j, 1)) - 1 AS BIGINT) << ((13 - j) * 4))) AS BIGINT) " +
+      "/ 2251799813685248.0 - 1.0)"
+
+  /** SQL select list of the `n` projection columns p0..p{n-1} of the list
+    * `v`: integer-quantized terms floor(x·plane·2^20 + 0.5) as BIGINT,
+    * summed — order-independent, so every engine gets the same longs. */
+  private def md5Projections(n: Int, seed: Int): String =
+    (0 until n).map(p =>
       s"CAST(list_sum(list_transform(generate_series(1, len(v)), i -> " +
-        s"CAST(floor(v[i] * ${plane(p)} * 1048576.0 + 0.5) AS BIGINT))) AS BIGINT) AS p$p")
+        s"CAST(floor(v[i] * ${md5Plane(p, seed)} * 1048576.0 + 0.5) AS BIGINT))) AS BIGINT) AS p$p")
       .mkString(", ")
+
+  /** Shared LSH-replay CTE prefix (e → proj → sig → cand → cs) of
+    * [[Similarity.lshTopK]] over the queries vec_id < 10: md5 planes and
+    * long projection sums, sign packing into a bit string, `bands`-way
+    * banding, the bucket join, then the rounded-cosine scoring of every
+    * distinct candidate pair — the pipeline [[simLshAnnOracle]],
+    * [[simLshRecallOracle]] and [[simRecallCurveOracle]] consume. */
+  private def lshCandidateCtes(bits: Int, bands: Int, seed: Int): String = {
+    val rpb = bits / bands
     val sigStr = (0 until bits).map(p =>
       s"(CASE WHEN p$p >= 0 THEN '1' ELSE '0' END)").mkString(" || ")
     val bandCond = (0 until bands).map(b =>
       s"substring(q.s, ${b * rpb + 1}, $rpb) = substring(c.s, ${b * rpb + 1}, $rpb)")
       .mkString(" OR ")
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |proj AS (SELECT vec_id, v, $projs FROM e),
+    s"""e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+       |proj AS (SELECT vec_id, v, ${md5Projections(bits, seed)} FROM e),
        |sig AS (SELECT vec_id, $sigStr AS s FROM proj),
        |cand AS (SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS cand_id
        |  FROM sig q JOIN sig c ON q.vec_id < 10 AND c.vec_id <> q.vec_id
@@ -4701,8 +4713,25 @@ object ExtensionQueries {
        |       OR list_dot_product(c.v, c.v) = 0 THEN 0.0
        |     ELSE list_cosine_similarity(q.v, c.v) END, 6) AS cosine
        |  FROM cand cd JOIN e q ON q.vec_id = cd.query_id
-       |    JOIN e c ON c.vec_id = cd.cand_id),
-       |ann AS (SELECT query_id, cand_id FROM (
+       |    JOIN e c ON c.vec_id = cd.cand_id)""".stripMargin
+  }
+
+  /** Final SELECT of the ANN replays: the top-k of the scored `cs`
+    * (query_id, cand_id, cosine) CTE per query, ranked by the engine's
+    * (cosine desc, cand_id) tie-break. */
+  private def rankedTopK(k: Int): String =
+    s"""SELECT query_id, cand_id, cosine, rank FROM (
+       |  SELECT query_id, cand_id, cosine,
+       |    CAST(row_number() OVER (PARTITION BY query_id
+       |      ORDER BY cosine DESC, cand_id) AS INTEGER) AS rank
+       |  FROM cs)
+       |WHERE rank <= $k""".stripMargin
+
+  /** Recall tail of the ANN replays (ann → ex → hits → nq → report): the
+    * top-k ids of the scored `cs` CTE against the exact rounded-cosine
+    * top-k over `e`, reduced to the one row recallAtK emits. */
+  private def recallAtKTail(k: Int): String =
+    s"""ann AS (SELECT query_id, cand_id FROM (
        |  SELECT query_id, cand_id, row_number() OVER (PARTITION BY query_id
        |    ORDER BY cosine DESC, cand_id) AS rank FROM cs) WHERE rank <= $k),
        |ex AS (SELECT query_id, cand_id FROM (
@@ -4720,40 +4749,26 @@ object ExtensionQueries {
        |SELECT CAST($k AS INTEGER) AS k, n_queries, n_hits,
        |  ROUND(CAST(n_hits AS DOUBLE) / (n_queries * $k), 6) AS mean_recall
        |FROM nq, hits""".stripMargin
-  }
+
+  /** Generated oracle for sim_lsh_ann: the LSH replay at the face's
+    * production parameters (bits 16, bands 4, seed 42) ending in the
+    * ranked top-5 rows. */
+  private def simLshAnnOracle: String =
+    s"""WITH ${lshCandidateCtes(bits = 16, bands = 4, seed = 42)}
+       |${rankedTopK(5)}""".stripMargin
+
+  /** Generated oracle for sim_lsh_recall: the LSH replay reduced by the
+    * ANN∩exact overlap to the same one-row recall ratio recallAtK emits. */
+  private def simLshRecallOracle: String =
+    s"""WITH ${lshCandidateCtes(bits = 16, bands = 4, seed = 42)},
+       |${recallAtKTail(5)}""".stripMargin
 
   /** Generated oracle for sim_recall_curve: the sim_lsh_recall replay at
     * depth 10, then the curve reduction — each matched pair contributes
     * to every cutoff ≥ its max(ann_rank, exact_rank). */
   private def simRecallCurveOracle: String = {
-    val bits = 16; val bands = 4; val rpb = bits / bands; val depth = 10
-    val seed = 42
-    def plane(p: Int) =
-      "(CAST(list_sum(list_transform(generate_series(1,13), j -> " +
-        "CAST(strpos('0123456789abcdef', substring(md5(CAST(i - 1 AS VARCHAR) || " +
-        s"'_${p}_$seed'), j, 1)) - 1 AS BIGINT) << ((13 - j) * 4))) AS BIGINT) " +
-        "/ 2251799813685248.0 - 1.0)"
-    val projs = (0 until bits).map(p =>
-      s"CAST(list_sum(list_transform(generate_series(1, len(v)), i -> " +
-        s"CAST(floor(v[i] * ${plane(p)} * 1048576.0 + 0.5) AS BIGINT))) AS BIGINT) AS p$p")
-      .mkString(", ")
-    val sigStr = (0 until bits).map(p =>
-      s"(CASE WHEN p$p >= 0 THEN '1' ELSE '0' END)").mkString(" || ")
-    val bandCond = (0 until bands).map(b =>
-      s"substring(q.s, ${b * rpb + 1}, $rpb) = substring(c.s, ${b * rpb + 1}, $rpb)")
-      .mkString(" OR ")
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |proj AS (SELECT vec_id, v, $projs FROM e),
-       |sig AS (SELECT vec_id, $sigStr AS s FROM proj),
-       |cand AS (SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS cand_id
-       |  FROM sig q JOIN sig c ON q.vec_id < 10 AND c.vec_id <> q.vec_id
-       |    AND ($bandCond)),
-       |cs AS (SELECT cd.query_id, cd.cand_id,
-       |   ROUND(CASE WHEN list_dot_product(q.v, q.v) = 0
-       |       OR list_dot_product(c.v, c.v) = 0 THEN 0.0
-       |     ELSE list_cosine_similarity(q.v, c.v) END, 6) AS cosine
-       |  FROM cand cd JOIN e q ON q.vec_id = cd.query_id
-       |    JOIN e c ON c.vec_id = cd.cand_id),
+    val depth = 10
+    s"""WITH ${lshCandidateCtes(bits = 16, bands = 4, seed = 42)},
        |ann AS (SELECT query_id, cand_id, rank FROM (
        |  SELECT query_id, cand_id, row_number() OVER (PARTITION BY query_id
        |    ORDER BY cosine DESC, cand_id) AS rank FROM cs) WHERE rank <= $depth),
@@ -4776,30 +4791,17 @@ object ExtensionQueries {
        |FROM (VALUES (1), (5), (10)) ks(k), nq""".stripMargin
   }
 
-  /** Generated oracle for sim_rp_recall: replays the PORTABLE random-
-    * projection pipeline — the same md5-derived planes and integer-
-    * quantized projection terms as the LSH oracle, but the 8 per-plane
-    * LONG sums are KEPT as reduced coordinates; the shortlist ranks by
-    * the exact BIGINT reduced dot (never a double cast — the sums reach
-    * 2^26 and an 8-term dot 2^55, outside double-exact range), the top-20
-    * survivors pay the rounded-cosine rerank, then the same recall
-    * reduction vs exact brute force. */
-  /** Shared RP-replay CTE prefix (e → proj → short → cs): portable
-    * projection, LONG-exact shortlist ranking, rounded-cosine scoring of
-    * the survivors — the pipeline both [[simRpRecallOracle]] and
-    * [[simRpProbeOracle]] consume. */
+  /** Shared RP-replay CTE prefix (e → proj → short → cs) of
+    * [[Similarity.rpTopK]] / [[Similarity.rpProbe]]: the md5-plane
+    * projection with the `dimOut` LONG sums KEPT as reduced coordinates,
+    * the shortlist ranked by the exact BIGINT reduced dot (never a double
+    * cast — the sums reach 2^26 and an 8-term dot 2^55, outside
+    * double-exact range), and the rounded-cosine scoring of the
+    * survivors — the pipeline [[simRpRecallOracle]], [[simRpProbeOracle]]
+    * and the stored-RP mutation oracles consume. */
   private def rpShortlistCtes(dimOut: Int, shortlist: Int, seed: Int,
                               candWhere: String = "",
                               upsert: Boolean = false): String = {
-    def plane(p: Int) =
-      "(CAST(list_sum(list_transform(generate_series(1,13), j -> " +
-        "CAST(strpos('0123456789abcdef', substring(md5(CAST(i - 1 AS VARCHAR) || " +
-        s"'_${p}_$seed'), j, 1)) - 1 AS BIGINT) << ((13 - j) * 4))) AS BIGINT) " +
-        "/ 2251799813685248.0 - 1.0)"
-    val projs = (0 until dimOut).map(p =>
-      s"CAST(list_sum(list_transform(generate_series(1, len(v)), i -> " +
-        s"CAST(floor(v[i] * ${plane(p)} * 1048576.0 + 0.5) AS BIGINT))) AS BIGINT) AS p$p")
-      .mkString(", ")
     val rdot = (0 until dimOut).map(p => s"q.p$p * c.p$p").mkString(" + ")
     // upsert = true swaps every vec_id ≡ 0 mod 10 vector for its
     // successor's BEFORE projection — queries and candidates both read
@@ -4816,7 +4818,7 @@ object ExtensionQueries {
           |e AS (SELECT e0.vec_id, coalesce(u.v, e0.v) AS v
           |  FROM e0 LEFT JOIN up u USING (vec_id))""".stripMargin
     s"""$corpusCtes,
-       |proj AS (SELECT vec_id, v, $projs FROM e),
+       |proj AS (SELECT vec_id, v, ${md5Projections(dimOut, seed)} FROM e),
        |short AS (SELECT query_id, cand_id FROM (
        |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
        |    row_number() OVER (PARTITION BY q.vec_id
@@ -4831,45 +4833,25 @@ object ExtensionQueries {
        |    JOIN e c ON c.vec_id = sh.cand_id)""".stripMargin
   }
 
-  /** Generated oracle for sim_rp_probe: the stored-index probe returns
-    * the ANN rows themselves (query_id, cand_id, cosine, rank ≤ k), so
-    * the oracle is the shared RP replay with a final ranked SELECT —
-    * identical to what the engine's stored (id, vec, r) frame + query
-    * projection compute, because the stored LONG coordinates replay
-    * exactly. */
-  private def simRpProbeOracle: String = {
-    val dimOut = 8; val shortlist = 20; val k = 5; val seed = 42
-    s"""WITH ${rpShortlistCtes(dimOut, shortlist, seed)}
-       |SELECT query_id, cand_id, cosine, rank FROM (
-       |  SELECT query_id, cand_id, cosine,
-       |    CAST(row_number() OVER (PARTITION BY query_id
-       |      ORDER BY cosine DESC, cand_id) AS INTEGER) AS rank
-       |  FROM cs)
-       |WHERE rank <= $k""".stripMargin
-  }
+  /** Generated oracle for sim_rp_probe (and sim_rp_merge, sim_rp_topk):
+    * the RP replay at k 5, dimOut 8, shortlist 20, seed 42 with the final
+    * ranked SELECT. The stored (id, vec, r) frame, the merged one and the
+    * in-memory reduction all hold the same exact LONG coordinates, so
+    * one replay certifies all three. */
+  private def simRpProbeOracle: String =
+    s"""WITH ${rpShortlistCtes(dimOut = 8, shortlist = 20, seed = 42)}
+       |${rankedTopK(5)}""".stripMargin
 
   /** Generated oracle for sim_rp_takedown: the shared RP replay with the
     * removed ids excluded from the CANDIDATE side of the shortlist join
     * — a resurrected reduced row would perturb the shortlist ranking
     * before the rerank, so the exclusion certifies the thin-frame
     * rewrite end to end. */
-  private def simRpTakedownOracle: String = {
-    val dimOut = 8; val shortlist = 20; val k = 5; val seed = 42
-    s"""WITH ${rpShortlistCtes(dimOut, shortlist, seed,
+  private def simRpTakedownOracle: String =
+    s"""WITH ${rpShortlistCtes(dimOut = 8, shortlist = 20, seed = 42,
         candWhere = " AND c.vec_id % 7 <> 2")}
-       |SELECT query_id, cand_id, cosine, rank FROM (
-       |  SELECT query_id, cand_id, cosine,
-       |    CAST(row_number() OVER (PARTITION BY query_id
-       |      ORDER BY cosine DESC, cand_id) AS INTEGER) AS rank
-       |  FROM cs)
-       |WHERE rank <= $k""".stripMargin
-  }
+       |${rankedTopK(5)}""".stripMargin
 
-  /** Generated oracle for sim_rp_upsert: the shared RP replay over the
-    * POST-UPSERT corpus (queries and candidates both) — the upserted
-    * documents' reduced coordinates are recomputed from their NEW
-    * vectors, so a stale reduced row or a wrong-geometry re-projection
-    * breaks the shortlist hash. */
   /** The SQ8 replay generator (scale = max|x|/127 per vector,
     * q = floor(x/scale + 0.5), score = sa·sc·Σ qa·qc round 6 — the
     * `sim_quantized_topk` arithmetic over a parameterized corpus):
@@ -4955,56 +4937,30 @@ object ExtensionQueries {
          |FROM nq, hits""".stripMargin
   }
 
-  private def simRpUpsertOracle: String = {
-    val dimOut = 8; val shortlist = 20; val k = 5; val seed = 42
-    s"""WITH ${rpShortlistCtes(dimOut, shortlist, seed, upsert = true)}
-       |SELECT query_id, cand_id, cosine, rank FROM (
-       |  SELECT query_id, cand_id, cosine,
-       |    CAST(row_number() OVER (PARTITION BY query_id
-       |      ORDER BY cosine DESC, cand_id) AS INTEGER) AS rank
-       |  FROM cs)
-       |WHERE rank <= $k""".stripMargin
-  }
+  /** Generated oracle for sim_rp_upsert: the shared RP replay over the
+    * POST-UPSERT corpus (queries and candidates both) — the upserted
+    * documents' reduced coordinates are recomputed from their NEW
+    * vectors, so a stale reduced row or a wrong-geometry re-projection
+    * breaks the shortlist hash. */
+  private def simRpUpsertOracle: String =
+    s"""WITH ${rpShortlistCtes(dimOut = 8, shortlist = 20, seed = 42, upsert = true)}
+       |${rankedTopK(5)}""".stripMargin
 
   /** Generated oracle for sim_rp_filtered: the shared RP replay with the
     * attribute equality applied to the CANDIDATE side of the shortlist
     * join — proving the engine's predicate sits below the SHORTLIST
     * (matching candidates only enter the reduced-space ranking), not
     * after it. */
-  private def simRpFilteredOracle: String = {
-    val dimOut = 8; val shortlist = 20; val k = 5; val seed = 42
-    s"""WITH ${rpShortlistCtes(dimOut, shortlist, seed,
+  private def simRpFilteredOracle: String =
+    s"""WITH ${rpShortlistCtes(dimOut = 8, shortlist = 20, seed = 42,
         candWhere = " AND c.vec_id % 3 = 1")}
-       |SELECT query_id, cand_id, cosine, rank FROM (
-       |  SELECT query_id, cand_id, cosine,
-       |    CAST(row_number() OVER (PARTITION BY query_id
-       |      ORDER BY cosine DESC, cand_id) AS INTEGER) AS rank
-       |  FROM cs)
-       |WHERE rank <= $k""".stripMargin
-  }
+       |${rankedTopK(5)}""".stripMargin
 
-  private def simRpRecallOracle: String = {
-    val dimOut = 8; val shortlist = 20; val k = 5; val seed = 42
-    s"""WITH ${rpShortlistCtes(dimOut, shortlist, seed)},
-       |ann AS (SELECT query_id, cand_id FROM (
-       |  SELECT query_id, cand_id, row_number() OVER (PARTITION BY query_id
-       |    ORDER BY cosine DESC, cand_id) AS rank FROM cs) WHERE rank <= $k),
-       |ex AS (SELECT query_id, cand_id FROM (
-       |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-       |    row_number() OVER (PARTITION BY q.vec_id ORDER BY
-       |      ROUND(CASE WHEN list_dot_product(q.v, q.v) = 0
-       |          OR list_dot_product(c.v, c.v) = 0 THEN 0.0
-       |        ELSE list_cosine_similarity(q.v, c.v) END, 6) DESC,
-       |      c.vec_id) AS rank
-       |  FROM e q, e c WHERE q.vec_id < 10 AND c.vec_id <> q.vec_id)
-       |  WHERE rank <= $k),
-       |hits AS (SELECT count(*) AS n_hits FROM ann
-       |  JOIN ex USING (query_id, cand_id)),
-       |nq AS (SELECT count(DISTINCT query_id) AS n_queries FROM ex)
-       |SELECT CAST($k AS INTEGER) AS k, n_queries, n_hits,
-       |  ROUND(CAST(n_hits AS DOUBLE) / (n_queries * $k), 6) AS mean_recall
-       |FROM nq, hits""".stripMargin
-  }
+  /** Generated oracle for sim_rp_recall: the RP replay at the production
+    * shortlist 20, reduced by the same recall tail as the LSH oracle. */
+  private def simRpRecallOracle: String =
+    s"""WITH ${rpShortlistCtes(dimOut = 8, shortlist = 20, seed = 42)},
+       |${recallAtKTail(5)}""".stripMargin
 
   /** Generated oracle for sim_mmr_select: the greedy MMR loop unrolled as
     * 5 MATERIALIZED-CTE rounds (the txt_bpe_learn pattern). Round i cross
@@ -7192,8 +7148,11 @@ bruteForceCosineOracle,
       "sim_pq_distortion" -> pqDistortionClosedFormOracle,
       "sim_ivfpq_distortion" -> pqDistortionClosedFormOracle,
       // the RP merge face's merged frame must equal the full-corpus
-      // reduction — sharing the stored-probe oracle certifies the append
+      // reduction — sharing the stored-probe oracle certifies the append;
+      // the in-memory sim_rp_topk runs the probe's parameters over the
+      // same exact LONG reduction, so it shares the replay too
       "sim_rp_merge" -> simRpProbeOracle,
+      "sim_rp_topk" -> simRpProbeOracle,
       // Threshold 1.0 keeps exactly the identical-shingle-set pairs, whose
       // identical signatures guarantee LSH recall; the oracle groups docs
       // by a canonical sorted-shingle-list digest — no pairwise join.
@@ -7214,9 +7173,11 @@ bruteForceCosineOracle,
       "dd_winnow_probe" -> ddWinnowProbeOracle,
       "dd_winnow_dedup" -> ddWinnowDedupOracle,
       // approximate-regime recall metrics: the ANN pipeline AND the
-      // overlap ratio replay in SQL (portable signature / codebook
+      // overlap ratio replay in SQL (md5-plane signature / codebook
       // families), so recall@5 is a hash-checked number, not a floor.
+      // sim_lsh_ann is the same replay ending in its ranked rows.
       "sim_lsh_recall" -> simLshRecallOracle,
+      "sim_lsh_ann" -> simLshAnnOracle,
       // shortlist = Int.MaxValue keeps every candidate through the
       // reduced-space ranking ⇒ rerank sees the full corpus ⇒ provably
       // brute force (the lshTopK bits=0 analog for random projection).

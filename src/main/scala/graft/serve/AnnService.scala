@@ -534,18 +534,18 @@ object AnnFlatPqService {
 
 /** ANN serving over a STORED random-projection (JL) index — the RP
   * member of the uniform [[AnnBackend]] tier (flat IVF, residual
-  * IVF-PQ, flat PQ, RP): the portable (id, vec, r) reduced frame
-  * ([[Similarity.rpReducePortable]]'s output, written once) is opened
+  * IVF-PQ, flat PQ, RP): the (id, vec, r) reduced frame
+  * ([[Similarity.rpReduce]]'s output, written once) is opened
   * and each request projects ONLY the query vector, ranks the
   * reduced-space shortlist by the exact LONG dot over the stored
   * coordinates, and pays the full-width rerank on the `shortlist`
   * survivors — the corpus is never re-projected
-  * ([[Similarity.rpProbePortable]], the `sim_rp_probe` layout).
+  * ([[Similarity.rpProbe]], the `sim_rp_probe` layout).
   *
   * The projection is identified by (dimOut, seed): dimOut is recovered
   * from the stored `r` width, but `seed` cannot be — callers must pass
   * the build-time seed or the probe silently scores garbage (the
-  * rpProbePortable contract). Same request-safety envelope as the other
+  * rpProbe contract). Same request-safety envelope as the other
   * backends: dimension checked, k capped, bounded collect, typed-literal
   * vector. */
 final class AnnRpService(reduced: DataFrame, val dim: Int,
@@ -559,7 +559,7 @@ final class AnnRpService(reduced: DataFrame, val dim: Int,
   require(dimOut > 0, s"dimOut must be > 0, got $dimOut")
   filterCols.foreach(c => require(reduced.columns.contains(c),
     s"filterable column '$c' is not in the stored reduced frame " +
-      s"(carry it via rpReducePortable keepCols; found: " +
+      s"(carry it via rpReduce keepCols; found: " +
       s"${reduced.columns.mkString(", ")})"))
 
   /** Top-k ids for the query vector: (cand_id, cosine, rank), rank 1..k —
@@ -586,7 +586,7 @@ final class AnnRpService(reduced: DataFrame, val dim: Int,
     val spark = reduced.sparkSession
     import spark.implicits._
     val q = Seq((-1L, vec.toArray)).toDF("vec_id", "embedding")
-    Similarity.rpProbePortable(reduced, q, k, shortlist, dimOut, seed,
+    Similarity.rpProbe(reduced, q, k, shortlist, dimOut, seed,
         filter = pred)
       .orderBy(col("rank"))
       .select(col("cand_id"), col("cosine"), col("rank"))
@@ -661,7 +661,7 @@ object AnnRpService {
       "empty — the projection width is unrecoverable; rebuild instead")
     val extras = reduced.columns.filterNot(Set("id", "vec", "r")).toSeq
     removeFromIndex(spark, root, batch.select(col(idCol)), idCol)
-    Similarity.rpReducePortable(batch, idCol, vecCol, dimOut, seed,
+    Similarity.rpReduce(batch, idCol, vecCol, dimOut, seed,
         keepCols = extras)
       .coalesce(1).write.mode("append").parquet(s"$root/reduced")
   }

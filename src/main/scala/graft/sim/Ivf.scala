@@ -127,7 +127,7 @@ object Ivf {
       queries, k, nprobe, idCol, vecCol)
 
   /** PORTABLE IVF — the oracle bridge of the IVF family (`sim_ivf_recall`),
-    * completing the recall triad with [[Similarity.lshTopKPortable]] and
+    * completing the recall triad with [[Similarity.lshTopK]] and
     * [[Pq.pqTopKPortable]]: the k-means coarse quantizer is replaced by a
     * deterministic id-strided centroid sample (k-means init with zero
     * Lloyd iterations), and BOTH the corpus assignment and the query probe

@@ -148,32 +148,10 @@ object Similarity {
     * (dimension, plane) — deterministic, no stored model, identical on
     * every executor. Returns (id, vec, sig: array<int>).
     *
-    * Scale shape: posexplode the vector → `bits` codegen'd sum-aggregates
-    * (map-side partial, so the shuffle carries one row per vector), rather
-    * than `bits` interpreted higher-order-function passes per row. The
-    * input vector rides along via `first` — one shuffle total. */
-  def rhpSignatures(df: DataFrame, idCol: String, vecCol: String,
-                    bits: Int = 16, seed: Int = 42): DataFrame = {
-    val projAggs = (0 until bits).map { p =>
-      // hash(pos, plane, seed) → pseudo-random plane component in [-1, 1)
-      sum(col("x") *
-        (xxhash64(col("pos"), lit(p), lit(seed)).cast(DoubleType) /
-          lit(Long.MaxValue.toDouble))).as(s"p$p")
-    }
-    val signBits = array((0 until bits).map(p =>
-      when(col(s"p$p") >= 0, lit(1)).otherwise(lit(0))): _*)
-    df.select(col(idCol).as("id"), col(vecCol).as("vec"))
-      .select(col("id"), col("vec"), posexplode(col("vec")).as(Seq("pos", "x0")))
-      .select(col("id"), col("vec"), col("pos"), col("x0").cast(DoubleType).as("x"))
-      .groupBy("id")
-      .agg(first(col("vec")).as("vec"), projAggs: _*)
-      .select(col("id"), col("vec"), signBits.as("sig"))
-  }
-
-  /** PORTABLE random-hyperplane signatures — the oracle bridge for the
-    * LSH recall metric (`sim_lsh_recall`), with the same banded-LSH
-    * statistics as [[rhpSignatures]] but every arithmetic step exactly
-    * reproducible in any SQL engine with md5:
+    * Every arithmetic step replays exactly in any SQL engine with md5, so
+    * each operator built on these planes ([[lshTopK]], [[rpTopK]],
+    * [[rpProbe]], [[cosineNearDups]]) is hash-checkable against a SQL
+    * oracle:
     *   - plane(pos, p) = h/2^51 − 1 ∈ [−1, 1), where h is the first 13
     *     hex chars of md5("pos_p_seed") — 52 bits, exactly representable
     *     in a double, and integer-by-power-of-two division is exact;
@@ -181,41 +159,40 @@ object Similarity {
     *     floor(x·plane·2^20 + 0.5) as a long, and the per-bit projection
     *     is the long SUM of those terms. Integer addition is
     *     order-independent, so Spark's unordered partial aggregation and
-    *     a SQL engine's group sum produce identical sign bits — the float
-    *     sum in [[rhpSignatures]] is order-dependent at the ulp level and
-    *     therefore unsound to hash-compare.
-    * The 2^-20 term quantization only perturbs hyperplane directions
-    * (recall statistics are unchanged); [[rhpSignatures]] (xxhash64,
-    * float sums, no md5 cost) stays the fast production default. Same
-    * scale shape: posexplode → `bits` codegen'd long-sum aggregates with
-    * map-side partials, one row per vector on the shuffle.
-    *
-    * The plane table depends only on (pos, plane, seed) — dims × bits
-    * values — so it is computed ONCE driver-side (bit-identical doubles:
-    * 13 hex chars = 52 bits, exactly representable, and the division is
-    * by a power of two) and broadcast as literal arrays; the per-row work
-    * is an array lookup instead of an md5 over row-varying input (which
-    * cost |corpus| · dims · bits hashes — the difference between 2.2 s
-    * and 0.9 s at sf0.1). The ORACLE still re-derives every plane from
-    * md5 arithmetically in SQL, so the cross-engine check covers the
-    * whole derivation. */
-  def rhpSignaturesPortable(df: DataFrame, idCol: String, vecCol: String,
-                            bits: Int = 16, seed: Int = 42): DataFrame = {
-    val proj = portableProjections(df, idCol, vecCol, bits, seed)
+    *     a SQL engine's group sum produce identical sign bits; a float sum
+    *     is order-dependent at the ulp level and could never be
+    *     hash-compared.
+    * The 2^-20 term quantization only perturbs hyperplane directions, so
+    * the banded-LSH recall statistics are those of any random-hyperplane
+    * family. See [[projections]] for the scale shape. */
+  def rhpSignatures(df: DataFrame, idCol: String, vecCol: String,
+                    bits: Int = 16, seed: Int = 42): DataFrame = {
+    val proj = projections(df, idCol, vecCol, bits, seed)
     val signBits = array((0 until bits).map(p =>
       when(col(s"p$p") >= 0, lit(1)).otherwise(lit(0))): _*)
     proj.select(col("id"), col("vec"), signBits.as("sig"))
   }
 
-  /** Shared portable-projection core: n LONG columns p0..p{n-1} per
-    * vector, each the integer sum of floor(x·plane·2^20 + 0.5) terms over
-    * the md5-derived plane table (see [[rhpSignaturesPortable]] for why
-    * every step is exactly SQL-replayable). [[rhpSignaturesPortable]]
-    * sign-packs these; [[rpReducePortable]] keeps the values as the
-    * reduced-space coordinates. Returns (id, vec, p0..p{n-1}). */
-  private def portableProjections(df: DataFrame, idCol: String,
-                                  vecCol: String, n: Int, seed: Int,
-                                  keepCols: Seq[String] = Nil): DataFrame = {
+  /** Shared projection core: n LONG columns p0..p{n-1} per vector, each
+    * the integer sum of floor(x·plane·2^20 + 0.5) terms over the
+    * md5-derived plane table (see [[rhpSignatures]] for why every step is
+    * exactly SQL-replayable). [[rhpSignatures]] sign-packs these;
+    * [[rpReduce]] keeps the values as the reduced-space coordinates.
+    * Returns (id, vec, p0..p{n-1}).
+    *
+    * Scale shape: posexplode the vector → `n` codegen'd long-sum
+    * aggregates with map-side partials, one row per vector on the
+    * shuffle, rather than `n` interpreted higher-order-function passes
+    * per row. The plane table depends only on (pos, plane, seed) — dims ×
+    * n values — so it is computed ONCE driver-side (bit-identical
+    * doubles) and broadcast as literal arrays; the per-row work is an
+    * array lookup instead of an md5 over row-varying input (which cost
+    * |corpus| · dims · bits hashes — 2.2 s vs 0.9 s at sf0.1). The SQL
+    * oracles still re-derive every plane from md5 arithmetically, so the
+    * cross-engine check covers the whole derivation. */
+  private def projections(df: DataFrame, idCol: String,
+                          vecCol: String, n: Int, seed: Int,
+                          keepCols: Seq[String] = Nil): DataFrame = {
     // one-row dim probe (sanctioned scalar gate); empty input → no rows,
     // any plane table works, use dim 0
     val dim = df.select(size(col(vecCol)).as("d")).limit(1)
@@ -243,70 +220,44 @@ object Similarity {
       .agg(first(col("vec")).as("vec"), projAggs ++ keepAggs: _*)
   }
 
-  /** Random-projection (Johnson–Lindenstrauss) reduction, production
-    * form: each vector is projected onto `dimOut` seeded pseudo-random
-    * hyperplanes (same xxhash64 derivation as [[rhpSignatures]], but the
-    * REAL-VALUED projection is kept instead of its sign). Returns
-    * (id, vec, r: array<double>) — an 8× smaller vector whose inner
-    * products approximate the originals' (JL lemma, Johnson &
-    * Lindenstrauss 1984), so a reduced-space shortlist prunes the
-    * candidate set before any full-width arithmetic runs.
+  /** Random-projection (Johnson–Lindenstrauss) reduction: each vector is
+    * projected onto `dimOut` seeded pseudo-random hyperplanes — the
+    * [[rhpSignatures]] planes and integer-quantized terms, with the LONG
+    * sums kept instead of sign-packed. Returns (id, vec, r: array<long>) —
+    * an 8× smaller vector whose inner products approximate the originals'
+    * (JL lemma, Johnson & Lindenstrauss 1984), so a reduced-space
+    * shortlist prunes the candidate set before any full-width arithmetic
+    * runs — plus any `keepCols` attribute columns denormalized onto the
+    * reduced rows (the filtered-search carry, [[Ivf.assignPortable]]'s
+    * keepCols contract for the RP family).
     *
-    * Scale shape: identical to [[rhpSignatures]] — posexplode → `dimOut`
-    * codegen'd sum-aggregates with map-side partials, one row per vector
-    * on the shuffle; at rest the reduced column is dimOut/dim the size of
-    * the corpus scan. */
+    * Every reduced coordinate and so every reduced-space inner product is
+    * exact integer arithmetic, order-independent under partial
+    * aggregation and replayable in SQL. Component magnitudes are
+    * ≤ dim·2^20 ≈ 2^26 (|x| ≤ 1 embeddings), so a dimOut-term dot stays
+    * ≤ 2^56 — inside long range, but NOT exactly representable as double,
+    * which is why ranking must compare the LONG, never a double cast. */
   def rpReduce(df: DataFrame, idCol: String, vecCol: String,
-               dimOut: Int = 8, seed: Int = 42): DataFrame = {
+               dimOut: Int = 8, seed: Int = 42,
+               keepCols: Seq[String] = Nil): DataFrame = {
     require(dimOut > 0, s"rpReduce requires dimOut > 0, got $dimOut")
-    val projAggs = (0 until dimOut).map { p =>
-      sum(col("x") *
-        (xxhash64(col("pos"), lit(p), lit(seed)).cast(DoubleType) /
-          lit(Long.MaxValue.toDouble))).as(s"p$p")
-    }
-    df.select(col(idCol).as("id"), col(vecCol).as("vec"))
-      .select(col("id"), col("vec"), posexplode(col("vec")).as(Seq("pos", "x0")))
-      .select(col("id"), col("vec"), col("pos"), col("x0").cast(DoubleType).as("x"))
-      .groupBy("id")
-      .agg(first(col("vec")).as("vec"), projAggs: _*)
-      .select(col("id"), col("vec"),
-        array((0 until dimOut).map(p => col(s"p$p")): _*).as("r"))
-  }
-
-  /** PORTABLE [[rpReduce]] — md5-derived planes, integer-quantized terms,
-    * LONG component sums (the [[rhpSignaturesPortable]] arithmetic with
-    * the values kept instead of sign-packed). Every reduced coordinate
-    * and therefore every reduced-space inner product is exact integer
-    * arithmetic, order-independent under partial aggregation and exactly
-    * replayable in SQL — the oracle bridge for `sim_rp_recall`. Component
-    * magnitudes are ≤ dim·2^20 ≈ 2^26 (|x| ≤ 1 embeddings), so a
-    * dimOut-term dot stays ≤ 2^56 — inside long range, but NOT exactly
-    * representable as double, which is why ranking must compare the LONG,
-    * never a double cast. Returns (id, vec, r: array<long>), plus any
-    * `keepCols` attribute columns denormalized onto the reduced rows —
-    * the filtered-search carry ([[Ivf.assignPortable]]'s keepCols
-    * contract for the RP family). */
-  def rpReducePortable(df: DataFrame, idCol: String, vecCol: String,
-                       dimOut: Int = 8, seed: Int = 42,
-                       keepCols: Seq[String] = Nil): DataFrame = {
-    require(dimOut > 0, s"rpReducePortable requires dimOut > 0, got $dimOut")
-    portableProjections(df, idCol, vecCol, dimOut, seed, keepCols)
+    projections(df, idCol, vecCol, dimOut, seed, keepCols)
       .select(col("id") +: col("vec") +:
         array((0 until dimOut).map(p => col(s"p$p")): _*).as("r") +:
         keepCols.map(col): _*)
   }
 
-  /** Reduced-space pair scoring over PRECOMPUTED (id, vec, r) frames,
-    * shared by both shortlist + exact rerank tails ([[rpRerank]] for
-    * [[rpTopKPortable]], [[rpRerankHeap]] for [[rpTopK]]). Candidates
-    * are scored per query by the reduced-space inner product (dimOut
-    * terms — 8× cheaper than a full-width dot); the tails keep the top
-    * `shortlist` and only those pay the full-width rounded-cosine
-    * rerank. The dot is the unrolled sum of codegen'd element_at
-    * products — an aggregate/zip_with HOF here would run interpreted on
-    * every scored pair, the per-row hot path. */
-  private def rpScored(corpusRed: DataFrame, queriesRed: DataFrame,
-                       dimOut: Int): DataFrame = {
+  /** Shortlist + exact rerank over PRECOMPUTED (id, vec, r) frames.
+    * Candidates are scored per query by the reduced-space inner product
+    * (dimOut terms — 8× cheaper than a full-width dot; the unrolled sum
+    * of codegen'd element_at products, since an aggregate/zip_with HOF
+    * would run interpreted on every scored pair). The shortlist ranks by
+    * row_number over that exact LONG score — the bounded-heap
+    * `topk_desc` ranks doubles only, lossy past 2^53 (see [[rpReduce]]) —
+    * and only the top `shortlist` pay the full-width rounded-cosine
+    * rerank. The SQL oracles replay this exact formulation. */
+  private def rpRerank(corpusRed: DataFrame, queriesRed: DataFrame,
+                       k: Int, shortlist: Int, dimOut: Int): DataFrame = {
     val q = queriesRed.select(col("id").as("query_id"), col("vec").as("qvec"),
       col("r").as("qr"))
     val c = corpusRed.select(col("id").as("cand_id"), col("vec").as("cvec"),
@@ -314,82 +265,31 @@ object Similarity {
     val rdot = (0 until dimOut).map(p =>
       element_at(col("qr"), p + 1) * element_at(col("cr"), p + 1))
       .reduce(_ + _)
-    c.join(broadcast(q), col("query_id") =!= col("cand_id"))
-      .withColumn("rscore", rdot)
-  }
-
-  /** PORTABLE shortlist + rerank: the shortlist ranks by row_number over
-    * the exact LONG reduced score (a bounded double-score heap would be
-    * lossy past 2^53 — see [[rpReducePortable]]); the oracle replays
-    * this exact formulation. The window sorts every scored pair per
-    * query — acceptable for the oracle-scale twin; the production path
-    * below uses the bounded heap instead. */
-  private def rpRerank(corpusRed: DataFrame, queriesRed: DataFrame,
-                       k: Int, shortlist: Int, dimOut: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("rscore").desc, col("cand_id"))
-    val cand = rpScored(corpusRed, queriesRed, dimOut)
+    val cand = c.join(broadcast(q), col("query_id") =!= col("cand_id"))
+      .withColumn("rscore", rdot)
       .withColumn("rrank", row_number().over(w))
       .filter(col("rrank") <= shortlist)
       .withColumn("cosine", round(cosine(col("qvec"), col("cvec")), 6))
     topKExplode(cand, "cosine", k)
   }
 
-  /** PRODUCTION shortlist + rerank: the reduced-space shortlist runs
-    * through the bounded-heap `topk_desc` aggregate — map-side partials
-    * cap the shuffle at `shortlist` rows per query per partition, where
-    * a window formulation shuffles and sorts EVERY scored pair (the
-    * bruteForceTopKAgg argument, applied to the shortlist stage). The
-    * survivors re-join the reduced frames for their vectors (shortlist-
-    * sized join, corpus never reshuffles) and pay the exact rerank. */
-  private def rpRerankHeap(corpusRed: DataFrame, queriesRed: DataFrame,
-                           k: Int, shortlist: Int, dimOut: Int): DataFrame = {
-    val short = topKExplode(
-      rpScored(corpusRed, queriesRed, dimOut)
-        .select(col("query_id"), col("cand_id"),
-          col("rscore").cast(DoubleType).as("rscore")),
-      "rscore", shortlist)
-      .select(col("query_id"), col("cand_id"))
-    val cand = short
-      .join(corpusRed.select(col("id").as("cand_id"), col("vec").as("cvec")),
-        Seq("cand_id"))
-      .join(broadcast(queriesRed
-        .select(col("id").as("query_id"), col("vec").as("qvec"))),
-        Seq("query_id"))
-      .withColumn("cosine", round(cosine(col("qvec"), col("cvec")), 6))
-    topKExplode(cand, "cosine", k)
-  }
-
-  /** JL-reduced ANN, production form: [[rpReduce]] both sides, shortlist
-    * in the reduced space, exact rerank to top-k. `shortlist >= |corpus|`
-    * is the EXACTNESS mode (the lshTopK bits=0 analog): every candidate
-    * survives the shortlist, so the result is provably identical to brute
-    * force while the whole RP plumbing (reduce, reduced-space ranking,
-    * rerank) still runs — hash-checkable against the brute-force oracle.
-    * Production recall at small shortlists is pinned numerically by
-    * `sim_rp_recall` (portable twin) and RpSpec floors. */
+  /** JL-reduced ANN: [[rpReduce]] both sides, shortlist in the reduced
+    * space, exact rerank to top-k. The whole pipeline replays in SQL, so
+    * the result rows are hash-checked at any shortlist (`sim_rp_topk`);
+    * `shortlist >= |corpus|` is the EXACTNESS mode (the lshTopK bits=0
+    * analog): every candidate survives the shortlist, so the result is
+    * provably identical to brute force while the whole RP plumbing still
+    * runs (`sim_rp_exact`). */
   def rpTopK(corpus: DataFrame, queries: DataFrame, k: Int,
              idCol: String = "vec_id", vecCol: String = "embedding",
              dimOut: Int = 8, shortlist: Int = 20,
              seed: Int = 42): DataFrame = {
     require(k > 0 && shortlist >= k,
       s"rpTopK requires shortlist >= k > 0, got k=$k shortlist=$shortlist")
-    rpRerankHeap(rpReduce(corpus, idCol, vecCol, dimOut, seed),
+    rpRerank(rpReduce(corpus, idCol, vecCol, dimOut, seed),
       rpReduce(queries, idCol, vecCol, dimOut, seed), k, shortlist, dimOut)
-  }
-
-  /** [[rpTopK]] over the PORTABLE projection family — the form whose
-    * recall against brute force is a hash-checkable number (reduced
-    * coordinates are exact longs; see [[rpReducePortable]]). */
-  def rpTopKPortable(corpus: DataFrame, queries: DataFrame, k: Int,
-                     idCol: String = "vec_id", vecCol: String = "embedding",
-                     dimOut: Int = 8, shortlist: Int = 20,
-                     seed: Int = 42): DataFrame = {
-    require(k > 0 && shortlist >= k,
-      s"rpTopKPortable requires shortlist >= k > 0, got k=$k shortlist=$shortlist")
-    rpRerank(rpReducePortable(corpus, idCol, vecCol, dimOut, seed),
-      rpReducePortable(queries, idCol, vecCol, dimOut, seed), k, shortlist,
-      dimOut)
   }
 
   /** O(delta) incremental ingest into a stored RP reduced frame — the RP
@@ -404,7 +304,7 @@ object Similarity {
                       dimOut: Int = 8, seed: Int = 42,
                       keepCols: Seq[String] = Nil): DataFrame =
     reduced.unionByName(
-      rpReducePortable(delta, idCol, vecCol, dimOut, seed, keepCols))
+      rpReduce(delta, idCol, vecCol, dimOut, seed, keepCols))
 
   /** O(removed) deletion from a stored RP reduced frame — the
     * [[rpAppendReduced]] compliance twin: anti-join the (id, vec, r)
@@ -416,7 +316,7 @@ object Similarity {
 
   /** Probe a STORED random-projection index — the steady-state form that
     * completes the stored-probe family (LSH/PQ/IVF/IVF-PQ all have one):
-    * `reduced` is the (id, vec, r) frame [[rpReducePortable]] produced,
+    * `reduced` is the (id, vec, r) frame [[rpReduce]] produced,
     * written once to parquet; each probe only projects the QUERIES
     * (|queries|·dim work, nothing corpus-sized), ranks the reduced-space
     * shortlist by the exact LONG dot, and pays the full-width rerank on
@@ -428,12 +328,12 @@ object Similarity {
     * ints alongside the frame. Reduced coordinates are exact LONGs, so
     * the whole probe replays in SQL — hash-checkable even at a partial
     * shortlist. */
-  def rpProbePortable(reduced: DataFrame, queries: DataFrame, k: Int,
-                      shortlist: Int = 20, dimOut: Int = 8, seed: Int = 42,
-                      idCol: String = "vec_id", vecCol: String = "embedding",
-                      filter: Option[Column] = None): DataFrame = {
+  def rpProbe(reduced: DataFrame, queries: DataFrame, k: Int,
+              shortlist: Int = 20, dimOut: Int = 8, seed: Int = 42,
+              idCol: String = "vec_id", vecCol: String = "embedding",
+              filter: Option[Column] = None): DataFrame = {
     require(k > 0 && shortlist >= k,
-      s"rpProbePortable requires shortlist >= k > 0, got k=$k shortlist=$shortlist")
+      s"rpProbe requires shortlist >= k > 0, got k=$k shortlist=$shortlist")
     // the predicate lands on the stored reduced frame BEFORE the
     // shortlist ranking — shortlist survivors (and therefore the k
     // results) are MATCHING survivors, and on a stored layout the
@@ -442,8 +342,7 @@ object Similarity {
     // lets non-matching candidates crowd matching ones out of the
     // shortlist.
     rpRerank(filter.map(reduced.filter).getOrElse(reduced),
-      rpReducePortable(queries, idCol, vecCol, dimOut, seed), k, shortlist,
-      dimOut)
+      rpReduce(queries, idCol, vecCol, dimOut, seed), k, shortlist, dimOut)
   }
 
   /** k-NN majority-vote classification: each query's k exact nearest
@@ -542,22 +441,42 @@ object Similarity {
     }
   }
 
-  /** Banding + bucket join + exact rerank over PRECOMPUTED (id, vec, sig)
-    * frames — the shared tail of [[lshTopK]] (xxhash signatures) and
-    * [[lshTopKPortable]] (md5-derived portable signatures). Both sig
-    * frames must come from the same signature family and seed. */
-  private[sim] def lshTopKFromSigs(corpusSigs: DataFrame, querySigs: DataFrame,
-                                   k: Int, bits: Int, bands: Int): DataFrame = {
+  /** One (band, bucket) struct per band of a `sig` column, exploded: band
+    * b's bucket is the concatenation of its `bits / bands` sign bits. */
+  private def bandBuckets(bits: Int, bands: Int): Column = {
     val rowsPerBand = bits / bands
-    def banded(sigs: DataFrame, id: String, vec: String) =
-      sigs.select(col("id").as(id), col("vec").as(vec),
-        explode(transform(sequence(lit(0), lit(bands - 1)),
-          b => struct(b.as("band"),
-            concat_ws("", slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand))).as("bucket"))))
-          .as("bb"))
+    explode(transform(sequence(lit(0), lit(bands - 1)),
+      b => struct(b.as("band"),
+        concat_ws("", slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand))).as("bucket"))))
+  }
+
+  /** LSH ANN over [[rhpSignatures]]: signatures split into `bands`;
+    * candidate pairs share a band bucket; exact cosine rerank keeps top-k
+    * per query. Recall is tunable via bits/bands; at 100 TB the bucket
+    * join replaces the full cross product. Every step replays in SQL, so
+    * the result rows are hash-checked at the production bits/bands
+    * (`sim_lsh_ann`), and so is recall against brute force
+    * (`sim_lsh_recall`).
+    *
+    * `bits = 0` is the EXACTNESS mode (the [[Ivf]] `nprobe = nlist`
+    * analog): zero hyperplanes put every vector in one universal bucket,
+    * so every pair is a candidate and the result is provably identical to
+    * brute force — while the whole LSH plumbing (banding, bucket join,
+    * candidate dedup, heap rerank) still runs (`sim_lsh_exact`). */
+  def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int,
+              idCol: String = "vec_id", vecCol: String = "embedding",
+              bits: Int = 16, bands: Int = 4, seed: Int = 42): DataFrame = {
+    require(bits >= 0 && bands > 0 && bits % bands == 0,
+      s"need bits >= 0 divisible by bands > 0; got bits=$bits bands=$bands")
+    def banded(df: DataFrame, id: String, vec: String) =
+      if (bits == 0)
+        df.select(col(idCol).as(id), col(vecCol).as(vec),
+          lit(0).as("band"), lit("").as("bucket"))
+      else rhpSignatures(df, idCol, vecCol, bits, seed)
+        .select(col("id").as(id), col("vec").as(vec), bandBuckets(bits, bands).as("bb"))
         .select(col(id), col(vec), col("bb.band"), col("bb.bucket"))
-    val qb = banded(querySigs, "query_id", "qvec")
-    val cb = banded(corpusSigs, "cand_id", "cvec")
+    val qb = banded(queries, "query_id", "qvec")
+    val cb = banded(corpus, "cand_id", "cvec")
     val cand = cb.join(qb.hint("broadcast"),
         qb("band") === cb("band") && qb("bucket") === cb("bucket") &&
         col("query_id") =!= col("cand_id"))
@@ -569,56 +488,6 @@ object Similarity {
     // rerank via the bounded-heap aggregate (k rows per query per
     // partition on the shuffle); same (cosine desc, cand_id) tie-break
     topKExplode(cand, "cosine", k)
-  }
-
-  /** LSH ANN: signatures split into `bands`; candidate pairs share a band
-    * bucket; exact cosine rerank keeps top-k per query. Recall is tunable
-    * via bits/bands; at 100 TB the bucket join replaces the full cross
-    * product.
-    *
-    * `bits = 0` is the EXACTNESS mode (the [[Ivf]] `nprobe = nlist`
-    * analog): zero hyperplanes put every vector in one universal bucket,
-    * so every pair is a candidate and the result is provably identical to
-    * brute force — while the whole LSH plumbing (banding, bucket join,
-    * candidate dedup, heap rerank) still runs. That makes the operator
-    * hash-checkable against a brute-force SQL oracle; production recall
-    * at bits > 0 is pinned numerically by `sim_lsh_recall` (portable
-    * twin) and by SimilaritySpec floors. */
-  def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-              idCol: String = "vec_id", vecCol: String = "embedding",
-              bits: Int = 16, bands: Int = 4, seed: Int = 42): DataFrame = {
-    require(bits >= 0 && bands > 0 && bits % bands == 0,
-      s"need bits >= 0 divisible by bands > 0; got bits=$bits bands=$bands")
-    if (bits == 0) {
-      def universal(df: DataFrame, id: String, vec: String) =
-        df.select(col(idCol).as(id), col(vecCol).as(vec),
-          lit(0).as("band"), lit("").as("bucket"))
-      val qb = universal(queries, "query_id", "qvec")
-      val cb = universal(corpus, "cand_id", "cvec")
-      val cand = cb.join(qb.hint("broadcast"),
-          qb("band") === cb("band") && qb("bucket") === cb("bucket") &&
-          col("query_id") =!= col("cand_id"))
-        .select(col("query_id"), col("cand_id"), col("qvec"), col("cvec"))
-        .dropDuplicates("query_id", "cand_id")
-        .withColumn("cosine", round(cosine(col("qvec"), col("cvec")), 6))
-      topKExplode(cand, "cosine", k)
-    } else lshTopKFromSigs(
-      rhpSignatures(corpus, idCol, vecCol, bits, seed),
-      rhpSignatures(queries, idCol, vecCol, bits, seed), k, bits, bands)
-  }
-
-  /** [[lshTopK]] over the PORTABLE signature family — the form whose
-    * recall against brute force is a hash-checkable number (every
-    * arithmetic step replays exactly in SQL; see
-    * [[rhpSignaturesPortable]]). */
-  def lshTopKPortable(corpus: DataFrame, queries: DataFrame, k: Int,
-                      idCol: String = "vec_id", vecCol: String = "embedding",
-                      bits: Int = 16, bands: Int = 4, seed: Int = 42): DataFrame = {
-    require(bits > 0 && bands > 0 && bits % bands == 0,
-      s"need bits > 0 divisible by bands > 0; got bits=$bits bands=$bands")
-    lshTopKFromSigs(
-      rhpSignaturesPortable(corpus, idCol, vecCol, bits, seed),
-      rhpSignaturesPortable(queries, idCol, vecCol, bits, seed), k, bits, bands)
   }
 
   /** Overlap@k recall of an ANN top-k result against the exact top-k:
@@ -698,10 +567,10 @@ object Similarity {
                      idCol: String = "vec_id", vecCol: String = "embedding",
                      bits: Int = 32, bands: Int = 4, seed: Int = 42,
                      maxBucketOccupancy: Long = 100000L): DataFrame = Residency.eager { s =>
-    // same band-config validation as lshTopK: rowsPerBand = 0 would send
-    // every row to one empty bucket (a misleading "degenerate corpus"
-    // guard failure on healthy data), and a non-dividing bands count
-    // silently ignores the trailing signature bits
+    // lshTopK's band-config validation minus its bits = 0 exactness mode:
+    // rowsPerBand = 0 would send every row to one empty bucket (a
+    // misleading "degenerate corpus" guard failure on healthy data), and a
+    // non-dividing bands count silently ignores the trailing signature bits
     require(bits > 0 && bands > 0 && bits % bands == 0,
       s"need bits > 0 divisible by bands > 0; got bits=$bits bands=$bands")
     // Default 8-bit band buckets: 2-bit buckets (the old 16/8 split) give
@@ -709,24 +578,25 @@ object Similarity {
     // blowup that showed up even at 1k vectors (12 s) and is fatal at
     // scale. 8-bit bands keep recall ~0.9 at cosine 0.95 while cutting
     // candidates by ~64×.
-    val rowsPerBand = bits / bands
+    // The signatures' one-row width probe runs before their pass, so it
+    // reads the input through this cache (its first partition fills it)
+    // instead of running the caller's lineage a second time; released as
+    // soon as the signatures are materialized.
+    val input = s.persist(df.select(col(idCol), col(vecCol)))
     // Persisted: both sides of the bucket self-join read this frame, which
     // without the persist evaluates the posexplode signature aggregate
     // (and the corpus scan) twice — plan-canonicalization reuse is not
     // dependable across AQE's per-consumer rewrites (see Dedup). Released
     // when the scope exits (bounded residency).
-    val sigs = s.persist(rhpSignatures(df, idCol, vecCol, bits, seed)
+    val sigs = s.persist(rhpSignatures(input, idCol, vecCol, bits, seed)
       .withColumn("nrm", norm(col("vec"))))
     val banded = sigs
-      .select(col("id"), col("vec"), col("nrm"),
-        explode(transform(sequence(lit(0), lit(bands - 1)),
-          b => struct(b.as("band"),
-            concat_ws("", slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand))).as("bucket"))))
-          .as("bb"))
+      .select(col("id"), col("vec"), col("nrm"), bandBuckets(bits, bands).as("bb"))
       .select(col("id"), col("vec"), col("nrm"), col("bb.band"), col("bb.bucket"))
     graft.util.Guards.checkBucketOccupancy(
       banded.select("band", "bucket"), Seq("band", "bucket"), maxBucketOccupancy,
       "cosineNearDups", "drop constant/zero embeddings or exact-dedup vectors first")
+    s.release(input)  // the guard's pass materialized `sigs`
     val a = banded.alias("a"); val b = banded.alias("b")
     a.join(b, col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
         col("a.id") < col("b.id"))

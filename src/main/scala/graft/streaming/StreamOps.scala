@@ -622,8 +622,8 @@ object StreamOps {
   /** Streaming ingest into a stored RP (JL random-projection) layout —
     * completing live ingest across ALL FOUR stored index families (BM25,
     * flat IVF, residual IVF-PQ, RP): each micro-batch's vectors are
-    * reduced with the SEEDED portable projection
-    * ([[graft.sim.Similarity.rpReducePortable]] — the quantizer here is
+    * reduced with the SEEDED projection
+    * ([[graft.sim.Similarity.rpReduce]] — the quantizer here is
     * the (dimOut, seed) pair itself, so there is nothing stored to pin;
     * callers must pass the layout's build parameters, the
     * [[graft.serve.AnnRpService]] contract) and appended as (id, vec, r)
@@ -653,7 +653,7 @@ object StreamOps {
                     dimOut: Int = 8, seed: Int = 42): Boolean = {
     if (batch.isEmpty) return false
     BatchCommit.runOnce(batch.sparkSession, root, batchId) { staging =>
-      graft.sim.Similarity.rpReducePortable(batch, idCol, vecCol, dimOut, seed)
+      graft.sim.Similarity.rpReduce(batch, idCol, vecCol, dimOut, seed)
         .write.parquet(s"$staging/reduced")
       Seq(s"$staging/reduced" -> s"$root/reduced")
     }

@@ -15,7 +15,6 @@ class EdgeInputSpec extends SparkSpec {
   private def empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
 
   test("empty corpus: dedup family returns 0 rows, leaves no caches") {
-    def cachedIds = spark.sparkContext.getPersistentRDDs.keySet
     val before = cachedIds
     assert(Dedup.exactGroups(empty, "text", "doc_id").count() === 0)
     assert(Dedup.exactDedup(empty, "text", "doc_id").count() === 0)
@@ -38,7 +37,6 @@ class EdgeInputSpec extends SparkSpec {
   }
 
   test("empty/degenerate inputs: round-7 operators stay defined") {
-    def cachedIds = spark.sparkContext.getPersistentRDDs.keySet
     val before = cachedIds
     // portable simhash over an empty corpus: 0 pairs, nothing cached
     val sh = Dedup.signatureNearDups(
@@ -65,15 +63,17 @@ class EdgeInputSpec extends SparkSpec {
   }
 
   test("empty/degenerate inputs: round-9 operators stay defined") {
-    def cachedIds = spark.sparkContext.getPersistentRDDs.keySet
     val before = cachedIds
     val emptyVec = Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
     val vecs = (0 until 8).map(i =>
       (i.toLong, Array.tabulate(8)(d => (i * 8 + d).toFloat)))
       .toDF("vec_id", "embedding")
-    // portable LSH: empty corpus / empty queries → 0 rows, no crash
-    assert(graft.sim.Similarity.lshTopKPortable(emptyVec, vecs, k = 3).count() === 0)
-    assert(graft.sim.Similarity.lshTopKPortable(vecs, emptyVec, k = 3).count() === 0)
+    // LSH at bits 16 and the JL shortlist: empty corpus / empty queries →
+    // 0 rows, no crash (the projection's dim probe sees no row)
+    assert(graft.sim.Similarity.lshTopK(emptyVec, vecs, k = 3, bits = 16).count() === 0)
+    assert(graft.sim.Similarity.lshTopK(vecs, emptyVec, k = 3, bits = 16).count() === 0)
+    assert(graft.sim.Similarity.rpTopK(emptyVec, vecs, k = 3).count() === 0)
+    assert(graft.sim.Similarity.rpTopK(vecs, emptyVec, k = 3).count() === 0)
     // recallAtK with an empty ANN side: hits 0, n_queries from exact
     val exact = Seq((1L, 2L), (1L, 3L)).toDF("query_id", "cand_id")
     val emptyPairs = Seq.empty[(Long, Long)].toDF("query_id", "cand_id")
@@ -184,7 +184,6 @@ class EdgeInputSpec extends SparkSpec {
   }
 
   test("empty/degenerate inputs: round-10 operators stay defined") {
-    def cachedIds = spark.sparkContext.getPersistentRDDs.keySet
     val before = cachedIds
     // winnowing: empty corpus → no fingerprints, no pairs, no caches
     assert(Dedup.winnowFingerprints(empty, "text", "doc_id").count() === 0)

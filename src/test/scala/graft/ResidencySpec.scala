@@ -20,53 +20,49 @@ class ResidencySpec extends SparkSpec {
 
   test("repeated near-dup query invocations return the session to its cache baseline") {
     val dir = "/root/testdata/sf0.001"
-    def all = spark.sparkContext.getPersistentRDDs
     // Checkpoint pins are blocks the returned frame's lineage reads, not
     // cache entries: they live while a frame reads them and go with it.
-    def cachedIds = all.filterNot(_._2.isCheckpointed).keySet
-    val before = all.keySet
+    def unpinnedIds = spark.sparkContext.getPersistentRDDs.iterator
+      .collect { case (id, rdd) if !rdd.isCheckpointed => id }.toSet
+    val before = cachedIds
     (1 to 2).foreach { _ =>        // twice: the long-lived-session shape
       names.foreach { n =>
         val out = SparkEntry.queries(n)(spark, dir)
         assert(out.count() > 0, s"$n returned no rows")
         // After the operator returns, at most the pair-sized result is new.
-        assert((cachedIds -- before).size <= 1,
-          s"$n left more than its result cached: ids ${cachedIds -- before}")
+        assert((unpinnedIds -- before).size <= 1,
+          s"$n left more than its result cached: ids ${unpinnedIds -- before}")
         out.unpersist(blocking = true)
       }
     }
-    assert((cachedIds -- before).isEmpty,
-      s"cache baseline not restored; leaked ids ${cachedIds -- before}")
+    assert((unpinnedIds -- before).isEmpty,
+      s"cache baseline not restored; leaked ids ${unpinnedIds -- before}")
     // with every result released nothing reads the pins any more; the
     // session's registry holds them weakly, so a collection drops them
     val deadline = System.currentTimeMillis() + 30000L
-    while ((all.keySet -- before).nonEmpty && System.currentTimeMillis() < deadline) {
+    while ((cachedIds -- before).nonEmpty && System.currentTimeMillis() < deadline) {
       System.gc()
       Thread.sleep(200)
     }
-    assert((all.keySet -- before).isEmpty,
-      s"pins outlived every frame reading them: ${all.keySet -- before}")
+    assert((cachedIds -- before).isEmpty,
+      s"pins outlived every frame reading them: ${cachedIds -- before}")
   }
 
   test("profile() leaves no persisted RDD behind (long-form passes + association tabs)") {
     import spark.implicits._
     val d = (0 until 60).map(i => (i % 7, (i * 13 % 11).toDouble, s"c${i % 3}", s"t${i % 4}"))
       .toDF("a", "b", "s", "t")
-    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val before = cachedIds
     val p = graft.profile.Profile.profile(d, "t", exact = true)
     graft.profile.Profile.profile(d, "t")
     assert(p.rows === 60 && p.phik.nonEmpty)
-    assertReleased(spark.sparkContext.getPersistentRDDs.keySet.toSet -- before)
+    assertReleased(cachedIds -- before)
   }
-
-  /** The registered RDD ids, copied: the registry map's own key set
-    * holds its RDDs strongly and would keep them alive. */
-  private def ids: Set[Int] = spark.sparkContext.getPersistentRDDs.keysIterator.toSet
 
   /** Wait (bounded, as above) for a collection to drop every id in
     * `pins`: a pin lives while a frame reads it and goes with the last. */
   private def awaitCollected(pins: Set[Int]): Unit = {
-    def live = ids & pins
+    def live = cachedIds & pins
     val deadline = System.currentTimeMillis() + 30000L
     while (live.nonEmpty && System.currentTimeMillis() < deadline) {
       System.gc()
@@ -80,9 +76,9 @@ class ResidencySpec extends SparkSpec {
 
   test("StateEconomics.build's pins go once its tables are dropped, and a refused build leaves none") {
     import graft.pipeline.StateEconomics
-    val before = ids
+    val before = cachedIds
     var built = StateEconomics.build(spark, fixtures("graft_res_build"))
-    val pins = ids -- before
+    val pins = cachedIds -- before
     assert(built.size === 11 && pins.size === 11, s"pins $pins")
     built = null
     awaitCollected(pins)
@@ -92,9 +88,9 @@ class ResidencySpec extends SparkSpec {
     val mw = java.nio.file.Paths.get(in.minWageCsv)
     java.nio.file.Files.write(mw, (new String(java.nio.file.Files.readAllBytes(mw), "windows-1252") +
       "\n,Nowhere,1.0,1.0,1.15,8.55,34.8,,1.0,1.0,").getBytes("windows-1252"))
-    val beforeRefused = ids
+    val beforeRefused = cachedIds
     intercept[graft.quality.PrimaryKeyViolation](StateEconomics.build(spark, in))
-    val refused = ids -- beforeRefused
+    val refused = cachedIds -- beforeRefused
     assert(refused.nonEmpty, "the gate reads pins, so the refused build made some")
     awaitCollected(refused)
   }
@@ -102,7 +98,7 @@ class ResidencySpec extends SparkSpec {
   test("a missing input fails the concurrent source preparation with its reader's own exception") {
     import graft.pipeline.StateEconomics
     val in = fixtures("graft_res_missing")
-    val before = ids
+    val before = cachedIds
     intercept[java.nio.file.NoSuchFileException](
       StateEconomics.build(spark, in.copy(unemploymentXlsx = in.unemploymentXlsx + ".missing")))
     intercept[java.nio.file.NoSuchFileException](
@@ -111,6 +107,6 @@ class ResidencySpec extends SparkSpec {
       StateEconomics.build(spark, in.copy(schoolExpenseCsv = in.schoolExpenseCsv + ".missing")))
     assert(e.getMessage.contains("PATH_NOT_FOUND"), e.getMessage)
     // nothing is pinned before every source is prepared
-    assert((ids -- before).isEmpty)
+    assert((cachedIds -- before).isEmpty)
   }
 }

@@ -24,6 +24,13 @@ trait SparkSpec extends AnyFunSuite {
     case other => other +: other.children.flatMap(allPlanNodes)
   }
 
+  /** The persisted-RDD ids registered now, copied. The registry map's
+    * own key set (`getPersistentRDDs.keySet`, and `.keySet.toSet`, which
+    * returns that same set) keeps the whole map — RDDs included —
+    * reachable, so a snapshot taken that way would keep checkpoint pins
+    * alive and a wait for their collection would never end. */
+  def cachedIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keysIterator.toSet
+
   /** Residency assertion for "the call under test leaked no cached
     * frames": wait (bounded) until none of `created` — the DELTA of
     * persisted-RDD ids snapshotted around the call — remains registered.
@@ -37,10 +44,10 @@ trait SparkSpec extends AnyFunSuite {
     * still fails after the timeout. */
   def assertReleased(created: Set[Int], timeoutMs: Long = 30000L): Unit = {
     val deadline = System.currentTimeMillis() + timeoutMs
-    var leaked = spark.sparkContext.getPersistentRDDs.keySet & created
+    var leaked = cachedIds & created
     while (leaked.nonEmpty && System.currentTimeMillis() < deadline) {
       Thread.sleep(100)
-      leaked = spark.sparkContext.getPersistentRDDs.keySet & created
+      leaked = cachedIds & created
     }
     assert(leaked.isEmpty,
       s"persisted RDD ids leaked by the call under test: $leaked")

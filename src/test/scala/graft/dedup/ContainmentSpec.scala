@@ -72,9 +72,9 @@ class ContainmentSpec extends SparkSpec {
   test("containment: no cached frames left behind (residency contract)") {
     // id-set delta, not global size — the global registry races the
     // async ContextCleaner and sibling suites (the ScanSpec flake class)
-    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = cachedIds
     val out = Dedup.containmentPairs(docs, "text", "doc_id", n = 2)
-    val created = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    val created = cachedIds -- before
     out.unpersist(blocking = true)
     assertReleased(created)
   }

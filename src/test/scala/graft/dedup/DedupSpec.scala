@@ -124,7 +124,6 @@ class DedupSpec extends SparkSpec {
     // shared session don't skew the arithmetic, and the corpus text is
     // unique to this test so cache-manager plan-dedup against an earlier
     // identical plan can't turn the operator's persist into a no-op.
-    def cachedIds = spark.sparkContext.getPersistentRDDs.keySet
     val before = cachedIds
     val df = (base ++ nearDups).map { case (i, t) => (i, t + " residency probe") }
       .toDF("doc_id", "text")
@@ -158,7 +157,6 @@ class DedupSpec extends SparkSpec {
     // Identical documents share every band bucket, so the candidate join
     // would be O(n²); the guard errors before launching it, names the
     // remedy, and releases the caches it aborts in front of.
-    def cachedIds = spark.sparkContext.getPersistentRDDs.keySet
     val before = cachedIds
     val degenerate = (0 until 300)
       .map(i => (i.toLong, "the very same document text, repeated verbatim in every row"))
@@ -317,7 +315,6 @@ class DedupSpec extends SparkSpec {
     // a 30-node path has diameter 29; cap at 3 iterations
     val nodes = (0L until 30L).toDF("id")
     val pairs = (0L until 29L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    def cachedIds = spark.sparkContext.getPersistentRDDs.keySet
     val before = cachedIds
     val e = intercept[IllegalStateException] {
       Dedup.duplicateClusters(nodes, "id", pairs, maxIterations = 3)
@@ -332,7 +329,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("duplicateClusters releases its caches (bounded residency)") {
-    def cachedIds = spark.sparkContext.getPersistentRDDs.keySet
     val before = cachedIds
     val nodes = (100L to 140L).toDF("id")
     val pairs = Seq((101L, 102L), (102L, 103L), (110L, 111L)).toDF("id_a", "id_b")
@@ -438,7 +434,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("incrementalNearDups: delta probes the reference index, no corpus re-scan state") {
-    def cachedIds = spark.sparkContext.getPersistentRDDs.keySet
     val before = cachedIds
     val ref = base.toDF("doc_id", "text")
     val refIndex = Dedup.minHashSignatures(ref, "text", "doc_id")

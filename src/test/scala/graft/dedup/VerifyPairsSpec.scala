@@ -95,14 +95,14 @@ class VerifyPairsSpec extends SparkSpec {
     // localCheckpoint (e.g. Graph.hitsInt in GraphSpec) leave executor-
     // side RDD blocks registered until GC — an absolute count here would
     // depend on suite ordering, not on this kernel's behavior
-    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val before = cachedIds
     val out = Dedup.verifyPairsJaccard(allPairs(docs.map(_._1)), df, "text", "doc_id")
     try {
-      val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+      val added = cachedIds -- before
       assert(added.size == 1,
         s"expected only the returned pair frame cached, found ${added.size}")
       out.unpersist(blocking = true)
-      assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
+      assert((cachedIds -- before).isEmpty)
     } finally spark.sharedState.cacheManager.clearCache()
   }
 }

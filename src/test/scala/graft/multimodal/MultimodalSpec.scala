@@ -232,7 +232,6 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("imageNearDups: same-pattern images pair at distance 0, residency bounded") {
-    def cachedIds = spark.sparkContext.getPersistentRDDs.keySet
     val before = cachedIds
     // ids 0..9, pattern key id % 5 → exactly the same-key pairs collapse
     val rows = (0 until 10).map(i => (i.toLong, blockImage(i % 5)))
@@ -287,7 +286,6 @@ class MultimodalSpec extends SparkSpec {
 
   test("audioNearDups: planted copies pair up, gain variants within " +
       "Hamming 3, distinct clips separate, residency bounded") {
-    def cachedIds = spark.sparkContext.getPersistentRDDs.keySet
     val before = cachedIds
     // ids 0..9, pattern id % 5 → exactly the same-pattern pairs collapse
     val rows = (0 until 10).map(i => (i.toLong, chirpBytes(i % 5)))

@@ -79,11 +79,11 @@ class ScanSpec extends SparkSpec {
     // the DELTA, never on the global size — the async ContextCleaner
     // and sibling suites on the shared session mutate the registry
     // underneath this test (the round-19 at-HEAD flake).
-    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = cachedIds
     val out = Scan.prefixSums(
       (0 until 50).map(i => (i.toLong, 2L)).toDF("k", "c"),
       Seq(col("k").asc), Seq("c"))
-    val created = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    val created = cachedIds -- before
     // the result frame is persisted (contract)...
     assert(out.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
       "prefixSums must return a persisted frame")

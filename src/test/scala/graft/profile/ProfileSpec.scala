@@ -208,7 +208,7 @@ class ProfileSpec extends SparkSpec {
   test("cohenKappa weighted: hand-computed 3-level ordinal case, " +
       "2-level weighting invariance, union labels, degenerate null, " +
       "guard (PR24)") {
-    val idsBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val idsBefore = cachedIds
     // cells: (q1,q1)=2 (q1,q3)=1 (q2,q2)=1 (q3,q3)=1 → n=5, agree=4,
     // r=(3,1,1), c=(2,1,2); none: κ = 1 − 5·1/16 = 0.6875;
     // linear: κ = 1 − 5·2/24 = 0.583333…; quadratic: κ = 1 − 5·4/40 = 0.5
@@ -247,8 +247,7 @@ class ProfileSpec extends SparkSpec {
     assert(e.getMessage.contains("CATEGORICAL"))
     // nothing left persisted by any of the calls above (incl. the
     // guard-failure path releasing both intermediates)
-    assertReleased(
-      spark.sparkContext.getPersistentRDDs.keySet.toSet -- idsBefore)
+    assertReleased(cachedIds -- idsBefore)
   }
 
   test("profile associations + sample: Spearman/Cramér's V maps " +
@@ -686,7 +685,7 @@ class ProfileSpec extends SparkSpec {
     val wide = (1 to 80).map(i =>
       (i.toDouble, (i * 37 % 80).toDouble, (81 - i).toDouble))
       .toDF("a", "b", "c")
-    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = cachedIds
     val p = Profile.profile(wide, "w", exact = true, sampleN = 0,
       topFrequent = 0)
     for ((x, y) <- Seq(("a", "b"), ("a", "c"), ("b", "c"))) {
@@ -697,7 +696,7 @@ class ProfileSpec extends SparkSpec {
     }
     // profile() releases everything it persisted (incl. the shared
     // binned frame) — id-set delta, the assertReleased discipline
-    val created = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    val created = cachedIds -- before
     assertReleased(created)
   }
 

@@ -211,7 +211,7 @@ class AnnTakedownSpec extends SparkSpec {
     assert(parquetFiles(s"$pqRoot/codebooks") === cbBefore)
     // RP
     val rpRoot = java.nio.file.Files.createTempDirectory("rp_td_").toString
-    graft.sim.Similarity.rpReducePortable(c, "vec_id", "embedding",
+    graft.sim.Similarity.rpReduce(c, "vec_id", "embedding",
         dimOut = 4, seed = 42)
       .write.parquet(s"$rpRoot/reduced")
     AnnRpService.removeFromIndex(spark, rpRoot,
@@ -278,7 +278,7 @@ class AnnTakedownSpec extends SparkSpec {
       "projection of its NEW vector under the frozen geometry") {
     val c = corpus(40)
     val rpRoot = java.nio.file.Files.createTempDirectory("rp_up_").toString
-    graft.sim.Similarity.rpReducePortable(c, "vec_id", "embedding",
+    graft.sim.Similarity.rpReduce(c, "vec_id", "embedding",
         dimOut = 4, seed = 7)
       .write.parquet(s"$rpRoot/reduced")
     AnnRpService.upsertDelta(spark, rpRoot,
@@ -291,7 +291,7 @@ class AnnTakedownSpec extends SparkSpec {
     // the deterministic projection of the NEW vector
     val got = reduced.filter($"id" === 5L).select("r")
       .as[Seq[Long]].head()
-    val want = graft.sim.Similarity.rpReducePortable(
+    val want = graft.sim.Similarity.rpReduce(
         Seq((5L, vec(6))).toDF("vec_id", "embedding"),
         "vec_id", "embedding", dimOut = 4, seed = 7)
       .select("r").as[Seq[Long]].head()

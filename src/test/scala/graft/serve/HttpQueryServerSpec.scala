@@ -160,7 +160,7 @@ class HttpQueryServerSpec extends SparkSpec {
       .parquet(s"$flatRoot/assigned")
     val flat = AnnService.overParquetDir(spark, flatRoot, maxK = 10, nprobe = 4)
     val rpRoot = java.nio.file.Files.createTempDirectory("ann_rp_").toString
-    graft.sim.Similarity.rpReducePortable(corpus, "vec_id", "embedding",
+    graft.sim.Similarity.rpReduce(corpus, "vec_id", "embedding",
         dimOut = 8, seed = 42)
       .write.mode("overwrite").parquet(s"$rpRoot/reduced")
     val rp = AnnRpService.overParquetDir(spark, rpRoot, maxK = 10,
@@ -250,7 +250,7 @@ class HttpQueryServerSpec extends SparkSpec {
     // a backend whose layout carries no whitelisted attributes rejects
     // instead of silently ignoring the predicate (whitelist empty)
     val rpRoot = java.nio.file.Files.createTempDirectory("ann_rpf_").toString
-    graft.sim.Similarity.rpReducePortable(
+    graft.sim.Similarity.rpReduce(
         corpus.select("vec_id", "embedding"), "vec_id", "embedding",
         dimOut = 8, seed = 42)
       .write.mode("overwrite").parquet(s"$rpRoot/reduced")
@@ -379,7 +379,7 @@ class HttpQueryServerSpec extends SparkSpec {
         :+ ((9007L, vec(7), "a")) :+ ((9008L, vec(7), "b")))
       .toDF("vec_id", "embedding", "tag")
     val rpRoot = java.nio.file.Files.createTempDirectory("ann_rpfs_").toString
-    graft.sim.Similarity.rpReducePortable(corpus, "vec_id", "embedding",
+    graft.sim.Similarity.rpReduce(corpus, "vec_id", "embedding",
         dimOut = 8, seed = 42, keepCols = Seq("tag"))
       .write.mode("overwrite").parquet(s"$rpRoot/reduced")
     val rp = AnnRpService.overParquetDir(spark, rpRoot, maxK = 10,

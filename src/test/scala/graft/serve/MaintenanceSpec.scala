@@ -193,7 +193,7 @@ class MaintenanceSpec extends SparkSpec {
     assert(parquetFiles(s"$root/codes").size === 1)
 
     val rpRoot = java.nio.file.Files.createTempDirectory("mn_rp_").toString
-    graft.sim.Similarity.rpReducePortable(corpus, "vec_id", "embedding",
+    graft.sim.Similarity.rpReduce(corpus, "vec_id", "embedding",
         dimOut = 8, seed = 42)
       .write.parquet(s"$rpRoot/reduced")
     (0 until 3).foreach { b =>

@@ -344,7 +344,7 @@ class SearchIndexSpec extends SparkSpec {
     val seed = (0 until 40).map(i => (i.toLong, vec(i)))
       .toDF("vec_id", "embedding")
     val root = java.nio.file.Files.createTempDirectory("rp_compact_").toString
-    graft.sim.Similarity.rpReducePortable(seed, "vec_id", "embedding",
+    graft.sim.Similarity.rpReduce(seed, "vec_id", "embedding",
         dimOut = 8, seed = 42)
       .write.parquet(s"$root/reduced")
     (0 until 4).foreach { b =>
@@ -361,7 +361,7 @@ class SearchIndexSpec extends SparkSpec {
     assert(graft.streaming.StreamOps.rpIngestBatch(
       Seq((103L, vec(103))).toDF("vec_id", "embedding"),
       root, batchId = 3, dimOut = 8, seed = 42))
-    val expect = graft.sim.Similarity.rpReducePortable(
+    val expect = graft.sim.Similarity.rpReduce(
       seed.unionByName((0 until 4).map(b => (100L + b, vec(100 + b)))
         .toDF("vec_id", "embedding")), "vec_id", "embedding",
       dimOut = 8, seed = 42)
@@ -369,7 +369,7 @@ class SearchIndexSpec extends SparkSpec {
         .select("id", "r").collect().map(_.toString).toSeq.sorted ===
       expect.select("id", "r").collect().map(_.toString).toSeq.sorted)
     // serving over the compacted layout finds a freshly planted twin
-    graft.sim.Similarity.rpReducePortable(
+    graft.sim.Similarity.rpReduce(
         Seq((9007L, vec(7))).toDF("vec_id", "embedding"),
         "vec_id", "embedding", dimOut = 8, seed = 42)
       .write.mode("append").parquet(s"$root/reduced")

@@ -62,7 +62,6 @@ class SemDedupSpec extends SparkSpec {
   }
 
   test("bounded residency + occupancy guard") {
-    def cachedIds = spark.sparkContext.getPersistentRDDs.keySet
     val before = cachedIds
     val df = (0 until 30).map(i => (i.toLong, randVec(i + 500))).toDF("vec_id", "embedding")
     val out = SemDedup.semanticDedup(df, threshold = 0.95, nlist = 4)

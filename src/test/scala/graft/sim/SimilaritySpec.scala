@@ -75,40 +75,15 @@ class SimilaritySpec extends SparkSpec {
       Similarity.lshTopK(df, df, k = 1, bits = 10, bands = 4) // 10 % 4 != 0
     }
     intercept[IllegalArgumentException] {
-      Similarity.lshTopKPortable(df, df, k = 1, bits = 0, bands = 1) // needs bits > 0
+      Similarity.lshTopK(df, df, k = 1, bits = -4, bands = 4) // bits < 0
     }
-  }
-
-  test("portable LSH finds every planted duplicate (identical sig ⇒ same buckets)") {
-    val queries = df.filter(col("vec_id") < 10)
-    val res = Similarity.lshTopKPortable(df, queries, k = 5)
-      .select("query_id", "cand_id").as[(Long, Long)].collect().toSet
-    (0 until 10).foreach { q =>
-      assert(res.contains((q.toLong, (q + 10000).toLong)),
-        s"planted dup of $q missed by portable LSH")
-    }
-  }
-
-  test("portable and xxhash signature families have matching recall statistics") {
-    // The portable family only changes the hyperplane DERIVATION (md5 vs
-    // xxhash64, integer-quantized terms) — both are random hyperplanes, so
-    // recall@5 on the same corpus must sit in the same regime. This is the
-    // spec-side pin behind sim_lsh_recall's oracle-side number.
-    val queries = df.filter(col("vec_id") < 10)
-    val exact = Similarity.bruteForceTopK(df, queries, k = 5)
-    def recallOf(ann: org.apache.spark.sql.DataFrame): Double =
-      Similarity.recallAtK(ann, exact, k = 5)
-        .select("mean_recall").as[Double].head()
-    val portable = recallOf(Similarity.lshTopKPortable(df, queries, k = 5))
-    val fast = recallOf(Similarity.lshTopK(df, queries, k = 5))
-    assert(portable >= 0.6, s"portable-LSH recall $portable")
-    assert(fast >= 0.6, s"xxhash-LSH recall $fast")
-    assert(math.abs(portable - fast) <= 0.2,
-      s"signature families diverged: portable=$portable xxhash=$fast")
+    // bits = 0 is the universal-bucket exactness mode, not an error
+    assert(Similarity.lshTopK(df, df, k = 1, bits = 0, bands = 1).columns.toSeq ===
+      Seq("query_id", "cand_id", "cosine", "rank"))
   }
 
   test("portable signatures plan: ONE shuffle, plane table as literals (no per-row md5)") {
-    val plan = Similarity.rhpSignaturesPortable(df, "vec_id", "embedding", bits = 8)
+    val plan = Similarity.rhpSignatures(df, "vec_id", "embedding", bits = 8)
       .queryExecution.executedPlan.toString
     assert("Exchange".r.findAllIn(plan).size === 1,
       s"posexplode → single aggregate shuffle expected:\n$plan")
@@ -155,7 +130,6 @@ class SimilaritySpec extends SparkSpec {
     // the candidate self-join degenerates to O(n²) — the guard must error
     // immediately (not launch the join) and must release the caches it
     // aborts in front of.
-    def cachedIds = spark.sparkContext.getPersistentRDDs.keySet
     val before = cachedIds
     val constant = (0 until 300).map(i => (i.toLong, Array.fill(dim)(1.0f), 0))
       .toDF("vec_id", "embedding", "label")
@@ -223,7 +197,6 @@ class SimilaritySpec extends SparkSpec {
     // is unpersisted inside the operator. Id-set delta accounting, and a
     // test-unique label value keeps cache-manager plan-dedup from turning
     // the operator's persist into a no-op against an earlier cached plan.
-    def cachedIds = spark.sparkContext.getPersistentRDDs.keySet
     val before = cachedIds
     val probe = (corpus ++ planted).map { case (i, v, l) => (i, v, l + 7) }
       .toDF("vec_id", "embedding", "label")
@@ -235,14 +208,14 @@ class SimilaritySpec extends SparkSpec {
       "caller unpersist returns the session to its cache baseline")
   }
 
-  test("rpTopKPortable with shortlist >= |corpus| ≡ brute force exactly") {
+  test("rpTopK with shortlist >= |corpus| ≡ brute force exactly") {
     // The sim_rp_exact pin: every candidate survives the reduced-space
     // shortlist, so the rerank sees the full corpus and the JL reduction
     // drops out of the result entirely.
     val queries = df.filter(col("vec_id") < 10)
     val exact = Similarity.bruteForceTopK(df, queries, k = 5)
       .as[(Long, Long, Double, Int)].collect().toSeq.sorted
-    val rp = Similarity.rpTopKPortable(df, queries, k = 5,
+    val rp = Similarity.rpTopK(df, queries, k = 5,
         shortlist = Int.MaxValue)
       .as[(Long, Long, Double, Int)].collect().toSeq.sorted
     assert(rp === exact)
@@ -268,12 +241,12 @@ class SimilaritySpec extends SparkSpec {
 
   test("stored RP index (parquet round-trip) probes identically to in-memory") {
     val queries = df.filter(col("vec_id") < 10)
-    val inMem = Similarity.rpTopKPortable(df, queries, k = 5, shortlist = 20)
+    val inMem = Similarity.rpTopK(df, queries, k = 5, shortlist = 20)
       .as[(Long, Long, Double, Int)].collect().toSeq.sorted
     val dir = java.nio.file.Files.createTempDirectory("graft_rp_idx").toString
-    Similarity.rpReducePortable(df, "vec_id", "embedding", dimOut = 8, seed = 42)
+    Similarity.rpReduce(df, "vec_id", "embedding", dimOut = 8, seed = 42)
       .write.mode("overwrite").parquet(s"$dir/reduced")
-    val stored = Similarity.rpProbePortable(
+    val stored = Similarity.rpProbe(
         spark.read.parquet(s"$dir/reduced"), queries, k = 5, shortlist = 20)
       .as[(Long, Long, Double, Int)].collect().toSeq.sorted
     assert(stored === inMem)
@@ -284,10 +257,10 @@ class SimilaritySpec extends SparkSpec {
       "|corpus| the k survivors equal brute force over the matching slice") {
     val tagged = df.withColumn("tag",
       pmod(col("vec_id"), lit(3L)).cast("int"))
-    val reduced = Similarity.rpReducePortable(tagged, "vec_id", "embedding",
+    val reduced = Similarity.rpReduce(tagged, "vec_id", "embedding",
       dimOut = 8, seed = 42, keepCols = Seq("tag"))
     val queries = df.filter(col("vec_id") < 5)
-    val got = Similarity.rpProbePortable(reduced, queries, k = 5,
+    val got = Similarity.rpProbe(reduced, queries, k = 5,
         shortlist = Int.MaxValue, dimOut = 8, seed = 42,
         filter = Some(col("tag") === 1))
       .select("query_id", "cand_id", "cosine", "rank")
@@ -312,10 +285,10 @@ class SimilaritySpec extends SparkSpec {
     val tagged = df.withColumn("tag",
       pmod(col("vec_id"), lit(3L)).cast("int"))
     val dir = java.nio.file.Files.createTempDirectory("graft_rp_filt").toString
-    Similarity.rpReducePortable(tagged, "vec_id", "embedding",
+    Similarity.rpReduce(tagged, "vec_id", "embedding",
         dimOut = 8, seed = 42, keepCols = Seq("tag"))
       .write.mode("overwrite").parquet(s"$dir/reduced")
-    val probe = Similarity.rpProbePortable(
+    val probe = Similarity.rpProbe(
       spark.read.parquet(s"$dir/reduced"), df.filter(col("vec_id") < 3),
       k = 5, shortlist = 20, dimOut = 8, seed = 42,
       filter = Some(col("tag") === 1))
@@ -331,34 +304,17 @@ class SimilaritySpec extends SparkSpec {
 
   test("RP ANN finds every planted duplicate (identical vec ⇒ identical reduction)") {
     val queries = df.filter(col("vec_id") < 10)
-    Seq(Similarity.rpTopK(df, queries, k = 5),
-        Similarity.rpTopKPortable(df, queries, k = 5)).foreach { ann =>
-      val res = ann.select("query_id", "cand_id")
-        .as[(Long, Long)].collect().toSet
-      (0 until 10).foreach { q =>
-        assert(res.contains((q.toLong, (q + 10000).toLong)),
-          s"planted dup of $q missed by RP shortlist")
-      }
+    val ann = Similarity.rpTopK(df, queries, k = 5)
+    val res = ann.select("query_id", "cand_id").as[(Long, Long)].collect().toSet
+    (0 until 10).foreach { q =>
+      assert(res.contains((q.toLong, (q + 10000).toLong)),
+        s"planted dup of $q missed by RP shortlist")
     }
-  }
-
-  test("portable and xxhash RP families have matching recall statistics") {
-    // Same pin shape as the LSH families: the portable form only changes
-    // the plane derivation (md5 + integer-quantized long sums vs xxhash64
-    // float sums) — both are JL projections, so recall@5 at the same
-    // (dimOut, shortlist) must sit in the same regime. Spec-side twin of
-    // sim_rp_recall's oracle-side number.
-    val queries = df.filter(col("vec_id") < 10)
-    val exact = Similarity.bruteForceTopK(df, queries, k = 5)
-    def recallOf(ann: org.apache.spark.sql.DataFrame): Double =
-      Similarity.recallAtK(ann, exact, k = 5)
-        .select("mean_recall").as[Double].head()
-    val portable = recallOf(Similarity.rpTopKPortable(df, queries, k = 5))
-    val fast = recallOf(Similarity.rpTopK(df, queries, k = 5))
-    assert(portable >= 0.6, s"portable-RP recall $portable")
-    assert(fast >= 0.6, s"xxhash-RP recall $fast")
-    assert(math.abs(portable - fast) <= 0.2,
-      s"RP families diverged: portable=$portable xxhash=$fast")
+    // and the organic neighbors: the LSH recall@5 floor, for the JL shortlist
+    val recall = Similarity.recallAtK(ann,
+        Similarity.bruteForceTopK(df, queries, k = 5), k = 5)
+      .select("mean_recall").as[Double].head()
+    assert(recall >= 0.6, s"RP recall $recall")
   }
 
   test("recallCurve: hand-computed hits per cutoff; perfect overlap = 1.0 at every k") {
@@ -422,7 +378,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("mmrSelect stops early on an exhausted corpus and releases its cache") {
-    def cachedIds = spark.sparkContext.getPersistentRDDs.keySet
     val before = cachedIds
     val tiny = Seq((0L, Array(1f, 0f), 0), (1L, Array(0.5f, 0.5f), 0))
       .toDF("vec_id", "embedding", "label")
@@ -465,9 +420,9 @@ class SimilaritySpec extends SparkSpec {
       Similarity.rpTopK(df, df, k = 5, shortlist = 3)
     }
     intercept[IllegalArgumentException] {
-      Similarity.rpTopKPortable(df, df, k = 0)
+      Similarity.rpTopK(df, df, k = 0)
     }
-    val r = Similarity.rpReducePortable(df, "vec_id", "embedding", dimOut = 8)
+    val r = Similarity.rpReduce(df, "vec_id", "embedding", dimOut = 8)
       .select(size(col("r"))).as[Int].head()
     assert(r === 8)
   }

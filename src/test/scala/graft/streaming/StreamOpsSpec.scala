@@ -1154,7 +1154,7 @@ class StreamOpsSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     val root = java.nio.file.Files.createTempDirectory("rp_stream_").toString
     val ckpt = java.nio.file.Files.createTempDirectory("rp_ckpt_").toString
-    Similarity.rpReducePortable(seedCorpus, "vec_id", "embedding",
+    Similarity.rpReduce(seedCorpus, "vec_id", "embedding",
         dimOut = 8, seed = 42)
       .write.mode("overwrite").parquet(s"$root/reduced")
     val streamed = Seq((100L, vec(100)), (9007L, vec(7)))
@@ -1170,7 +1170,7 @@ class StreamOpsSpec extends SparkSpec {
     def rows(d: org.apache.spark.sql.DataFrame): Set[String] =
       d.select("id", "r").collect().map(_.toString).toSet
     assert(rows(spark.read.parquet(s"$root/reduced")) ===
-      rows(Similarity.rpReducePortable(all, "vec_id", "embedding", 8, 42)))
+      rows(Similarity.rpReduce(all, "vec_id", "embedding", 8, 42)))
     // replay safety: post-commit replay skipped; crashed-mid-append redo
     // scrubs its own files (Seq-based duplicate check, not Set)
     val b1 = streamed.drop(1).toDF("vec_id", "embedding")

@@ -724,7 +724,6 @@ class TextOpsSpec extends SparkSpec {
   }
 
   test("bpeMerges: stops below minPairCount and releases all caches") {
-    def cachedIds = spark.sparkContext.getPersistentRDDs.keySet
     val before = cachedIds
     val df = Seq((1L, "ab cd")).toDF("id", "text") // every pair count 1
     val merges = TextOps.bpeMerges(df, "text", numMerges = 5, minPairCount = 2L)
@@ -854,7 +853,6 @@ class TextOpsSpec extends SparkSpec {
     // for the operator's duration and released before return — pin the
     // residency contract: the RESULT is the only new cached frame, and
     // the annotated bucket table still broadcasts inside the cached plan.
-    def cachedIds = spark.sparkContext.getPersistentRDDs.keySet
     val before = cachedIds
     val raw = (0L until 40L).map(i => (i, s"tok${i % 7} tok${i % 5} tok${i % 3}"))
       .toDF("doc_id", "text")

@@ -10,7 +10,7 @@ class ParallelSpec extends SparkSpec {
     assert(Parallel.all(spark)(() => 1, () => 2, () => 3) === Seq(1, 2, 3))
     // disposal is the caller's scope: the completed siblings registered
     // their persisted frames there, and the rethrow releases them
-    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = cachedIds
     val completed = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
     val created = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val e = intercept[IllegalStateException] {
@@ -19,7 +19,7 @@ class ParallelSpec extends SparkSpec {
           val d = s.persist(spark.range(n).toDF("id"))
           d.count()
           completed.add(n)
-          (spark.sparkContext.getPersistentRDDs.keySet -- before).foreach(created.add)
+          (cachedIds -- before).foreach(created.add)
           n
         }
         Parallel.all(spark)(

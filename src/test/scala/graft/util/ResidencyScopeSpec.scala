@@ -10,8 +10,6 @@ import graft.SparkSpec
   * leaves only its result cached. */
 class ResidencyScopeSpec extends SparkSpec {
 
-  private def cachedIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
-
   private def frame(n: Int): DataFrame = spark.range(0, n, 1, 4).toDF("id")
 
   private def isCached(d: DataFrame): Boolean =
